@@ -32,18 +32,19 @@ final class Pipeline(
   /** T-step: distinct pickup dates (A2 — a deliberate driver-side
     * materialization; ≤ 31 rows for generated data, bounded by the date
     * range not the data volume) feed the weather source, whose table
-    * broadcast-joins back (J1).
+    * broadcast-joins back (J1). Rows without a pickup date get no weather
+    * date, so they take the left join's null weather, like the
+    * reference's dropped dates. An empty frame collects no dates.
     */
   def transform(df: DataFrame): DataFrame = {
     val dates: Seq[LocalDate] =
-      if (df.isEmpty) Nil
-      else
-        df.select(to_date(col("Pickup_DateTime")).as("d"))
-          .distinct()
-          .collect()
-          .map(r => r.getDate(0).toLocalDate)
-          .toSeq
-          .sorted(Ordering.by[LocalDate, Long](_.toEpochDay))
+      df.select(to_date(col("Pickup_DateTime")).as("d"))
+        .where(col("d").isNotNull)
+        .distinct()
+        .collect()
+        .map(r => r.getDate(0).toLocalDate)
+        .toSeq
+        .sorted(Ordering.by[LocalDate, Long](_.toEpochDay))
     val weatherDf = WeatherSource.toDF(spark, weather, dates)
     Transform(weatherDf)(df)
   }

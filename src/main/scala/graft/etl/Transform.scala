@@ -60,7 +60,9 @@ object Transform {
     * (date: date, Hour: int, Weather_Condition: string) and is tiny
     * (≤ 24 rows per distinct date) — broadcast explicitly so the plan stays
     * shuffle-free at any left-side scale. No weather → typed null column
-    * (`core/transform.py:100-101`).
+    * (`core/transform.py:100-101`). Either way `Weather_Condition` follows
+    * the frame's own columns (or keeps its place when re-ingested), so the
+    * output has the reference order (FIXTURES A.5).
     */
   def enrichWithWeather(weather: Option[DataFrame])(df: DataFrame): DataFrame =
     weather match {
@@ -69,11 +71,15 @@ object Transform {
       case Some(w) =>
         // drop-then-join = overwrite semantics (like the reference's
         // `with_columns`), so re-ingesting an already-enriched 13-column
-        // output doesn't yield an ambiguous duplicate column.
+        // output doesn't yield an ambiguous duplicate column. A `using`
+        // join puts its keys first; the select restores the input order.
+        val order =
+          if (df.columns.contains("Weather_Condition")) df.columns.toSeq
+          else df.columns.toSeq :+ "Weather_Condition"
         df.drop("Weather_Condition")
           .withColumn("date", to_date(col("Pickup_DateTime")))
           .join(broadcast(w), Seq("date", "Hour"), "left")
-          .drop("date")
+          .select(order.map(col): _*)
     }
 
   /** P4-P6 (`core/transform.py:116-128`): duration in seconds → rounded
