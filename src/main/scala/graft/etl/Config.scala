@@ -15,6 +15,11 @@ object SourceConfig {
   * csv | json | parquet | sqlite | xlsx | all | all_but_xlsx | preview
   * (`core/load.py:54-72`).
   */
-final case class OutputConfig(path: String, format: String)
+final case class OutputConfig(path: String, format: String) {
+  /** The sinks `format` names ([[Load.resolveFormats]]), resolved once;
+    * throws `IllegalArgumentException` on an empty or unknown selection.
+    */
+  lazy val formats: Seq[String] = Load.resolveFormats(format)
+}
 
 final case class PipelineConfig(source: SourceConfig, output: OutputConfig)

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.time.Instant
 import java.util.concurrent.{CompletableFuture, Executors}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Writers
@@ -23,26 +24,39 @@ object Load {
     * `templates/index.html` format selector), and a comma-separated
     * list (`"csv,json"`) writes exactly the named formats — the
     * reference silently coerced any multi-select to `all_but_xlsx`.
+    * An empty selection (`""`, `" , "`) and any name that is not a sink
+    * are rejected; `preview` is valid only alone.
     */
-  def resolveFormats(format: String): Seq[String] = format match {
-    case "all"          => AllFormats
-    case "all_but_xlsx" => AllFormats.filterNot(_ == "xlsx")
-    case other =>
-      other.split(",").toSeq.map(_.trim).filter(_.nonEmpty).distinct
-        .map { case "db" => "sqlite"; case f => f }
+  def resolveFormats(format: String): Seq[String] = {
+    val formats = format match {
+      case "all"          => AllFormats
+      case "all_but_xlsx" => AllFormats.filterNot(_ == "xlsx")
+      case other =>
+        other.split(",").toSeq.map(_.trim).filter(_.nonEmpty).distinct
+          .map { case "db" => "sqlite"; case f => f }
+    }
+    require(formats.nonEmpty, s"No output format selected: '$format'")
+    if (formats != Seq("preview"))
+      formats.filterNot(AllFormats.contains).headOption.foreach { f =>
+        throw new IllegalArgumentException(s"Unsupported output format: $f")
+      }
+    formats
   }
 
   final case class LoadResult(rows: Long, columns: Seq[String], manifestPath: Option[String])
 
   /** Write `df` to every resolved format + the run manifest.
     *
-    * Format names are checked before anything is persisted or written, so
-    * a bad name (`"csv,bogus"`) leaves no partial output behind.
+    * Format names are checked before any job runs, so an empty or bad
+    * selection (`""`, `"csv,bogus"`) leaves no partial output behind.
     *
-    * One format: count, then write, on the caller's thread, unpersisted —
-    * `count()` on an unpersisted frame prunes every column, so persisting
-    * would only add work (a persisted single sink measured 15% slower
-    * in median wall on a 50 000-row CSV→parquet run, 4 cores).
+    * One format: the write counts its own rows, so the lineage runs once,
+    * unpersisted. csv, json and parquet observe a `count` on the written
+    * frame (`Dataset.observe`); xlsx counts the rows it streams. sqlite is
+    * the exception: the JDBC writer saves through a second, internal
+    * execution, so an observation on its input reports 0 rows whatever
+    * it wrote (as it does for xlsx's `toLocalIterator`) — a single sqlite
+    * sink keeps a separate `count()` before its write.
     *
     * Several formats: the reference re-uses one materialized in-memory
     * frame across sinks; Spark re-executes the plan per action, so the
@@ -58,49 +72,66 @@ object Load {
     * pool). The frame is unpersisted only after every sink has finished;
     * the first failure is then rethrown with the others suppressed.
     *
-    * The manifest's `stage_seconds` records the wall seconds of the count
-    * (`materialize`) and of each sink.
+    * The manifest's `stage_seconds` records `upstreamSeconds` (the
+    * caller's own stages, `Pipeline.run`'s extract and transform), then
+    * the wall seconds of the fan-out count (`materialize`) and of each
+    * sink.
     */
   def load(
       df: DataFrame,
       config: PipelineConfig,
       singleFile: Boolean = true,
       jdbcUrlFor: String => String = p => s"jdbc:derby:$p;create=true",
-      now: () => Instant = () => Instant.now()): LoadResult = {
+      now: () => Instant = () => Instant.now(),
+      upstreamSeconds: Seq[(String, Double)] = Nil): LoadResult = {
     val out = config.output
-    val formats = resolveFormats(out.format)
+    val formats = out.formats
 
     if (formats == Seq("preview")) {
       Writers.preview(df)
       return LoadResult(df.count(), df.columns.toSeq, None)
     }
 
-    val sinks: Seq[(String, () => Unit)] = formats.map { f =>
-      f -> (f match {
-        case "csv"     => () => Writers.csv(df, out.path + ".csv", singleFile)
-        case "json"    => () => Writers.ndjson(df, out.path + ".json", singleFile)
-        case "parquet" => () => Writers.parquet(df, out.path + ".parquet", singleFile)
-        case "sqlite"  => () => Writers.jdbc(df, jdbcUrlFor(out.path))
-        case "xlsx"    => () => Writers.xlsx(df, out.path + ".xlsx")
-        case other =>
-          throw new IllegalArgumentException(s"Unsupported output format: $other")
-      })
+    /** Writes one sink; `Some(rows)` where the sink counts what it wrote (xlsx). */
+    def write(format: String, frame: DataFrame): Option[Long] = format match {
+      case "csv"     => Writers.csv(frame, out.path + ".csv", singleFile); None
+      case "json"    => Writers.ndjson(frame, out.path + ".json", singleFile); None
+      case "parquet" => Writers.parquet(frame, out.path + ".parquet", singleFile); None
+      case "sqlite"  => Writers.jdbc(frame, jdbcUrlFor(out.path)); None
+      case "xlsx"    => Some(Writers.xlsx(frame, out.path + ".xlsx"))
     }
 
-    val fanOut = sinks.size > 1
-    if (fanOut) df.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (rows, materializeS) = timed(df.count())
-      val sinkSeconds =
-        if (fanOut) concurrently(sinks)
-        else sinks.map { case (f, write) => f -> timed(write())._2 }
-      val stages = ("materialize" -> materializeS) +: sinkSeconds
-      val manifest = writeManifest(df, config, rows, now(), stages)
-      LoadResult(rows, df.columns.toSeq, Some(manifest))
-    } finally if (fanOut) { df.unpersist(); () }
+    /** One sink's write, returning the rows it wrote. */
+    def writeCounted(format: String): Long = format match {
+      case "sqlite" =>
+        // an observation would read 0: the JDBC save runs its own execution
+        val rows = df.count()
+        write(format, df)
+        rows
+      case "xlsx" => write(format, df).get // the rows it streamed
+      case _ =>
+        val obs = Observation()
+        write(format, df.observe(obs, count(lit(1)).as("rows")))
+        obs.get("rows").asInstanceOf[Long]
+    }
+
+    val (rows, loadSeconds) =
+      if (formats.size == 1) {
+        val (rows, s) = timed(writeCounted(formats.head))
+        (rows, Seq(formats.head -> s))
+      } else {
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val (rows, materializeS) = timed(df.count())
+          val sinks = formats.map(f => f -> (() => { write(f, df); () }))
+          (rows, ("materialize" -> materializeS) +: concurrently(sinks))
+        } finally { df.unpersist(); () }
+      }
+    val manifest = writeManifest(df, config, rows, now(), upstreamSeconds ++ loadSeconds)
+    LoadResult(rows, df.columns.toSeq, Some(manifest))
   }
 
-  private def timed[T](body: => T): (T, Double) = {
+  private[etl] def timed[T](body: => T): (T, Double) = {
     val t0 = System.nanoTime()
     val r = body
     (r, (System.nanoTime() - t0) / 1e9)

@@ -29,32 +29,41 @@ final class Pipeline(
     Readers.normalizeTimestamps(raw)
   }
 
-  /** T-step: distinct pickup dates (A2 — a deliberate driver-side
-    * materialization; ≤ 31 rows for generated data, bounded by the date
-    * range not the data volume) feed the weather source, whose table
-    * broadcast-joins back (J1). Rows without a pickup date get no weather
-    * date, so they take the left join's null weather, like the
-    * reference's dropped dates. An empty frame collects no dates.
+  /** T-step: one `collect` of the rows per pickup date (A2 — a
+    * deliberate materialization; ≤ 31 rows for generated data, bounded by
+    * the date range not the data volume). It answers two questions in one
+    * aggregate: no group back means the input is empty, which returns `df`
+    * unchanged like the reference's short-circuit (`core/transform.py:44-45`)
+    * with no `isEmpty` job of its own; otherwise the non-null dates feed the
+    * weather source, whose table broadcast-joins back (J1) in the lazy
+    * [[Transform.stages]] chain. Rows without a pickup date fall in the
+    * null group and take the left join's null weather, like the
+    * reference's dropped dates.
     */
   def transform(df: DataFrame): DataFrame = {
-    val dates: Seq[LocalDate] =
-      df.select(to_date(col("Pickup_DateTime")).as("d"))
-        .where(col("d").isNotNull)
-        .distinct()
-        .collect()
-        .map(r => r.getDate(0).toLocalDate)
-        .toSeq
+    val perDate = df.groupBy(to_date(col("Pickup_DateTime"))).count().collect()
+    if (perDate.isEmpty) df
+    else {
+      val dates = perDate.toSeq.filterNot(_.isNullAt(0))
+        .map(_.getDate(0).toLocalDate)
         .sorted(Ordering.by[LocalDate, Long](_.toEpochDay))
-    val weatherDf = WeatherSource.toDF(spark, weather, dates)
-    Transform(weatherDf)(df)
+      Transform.stages(WeatherSource.toDF(spark, weather, dates))(df)
+    }
   }
 
   /** Full run; returns (wall-clock seconds, load result) like the
-    * reference's timed `Pipeline.run()` (`pipeline.py:23,58-63`).
+    * reference's timed `Pipeline.run()` (`pipeline.py:23,58-63`). The
+    * output format is checked before any job runs; the manifest's
+    * `stage_seconds` opens with `extract` (schema inference, for a file
+    * source) and `transform` (the date collect and the weather lookup).
     */
   def run(): (Double, Load.LoadResult) = {
     val t0 = System.nanoTime()
-    val result = Load.load(transform(extract()), config, singleFile)
+    config.output.formats // a bad selection fails here, before inference
+    val (raw, extractS) = Load.timed(extract())
+    val (transformed, transformS) = Load.timed(transform(raw))
+    val result = Load.load(transformed, config, singleFile,
+      upstreamSeconds = Seq("extract" -> extractS, "transform" -> transformS))
     ((System.nanoTime() - t0) / 1e9, result)
   }
 }

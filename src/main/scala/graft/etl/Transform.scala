@@ -147,15 +147,22 @@ object Transform {
                col("Theoretical_Time_Minutes") * 1.2, "Delayed")
           .otherwise("On-time"))
 
-  /** O2+O3 (`core/transform.py:31-65`): the fixed 4-stage chain; order is
+  /** O2 (`core/transform.py:47-65`): the fixed 4-stage chain; order is
     * load-bearing (weather join needs Hour, status needs all predecessors).
-    * Empty input short-circuits like the reference (`:44-45`).
+    * Lazy: runs no job. Callers that already know the frame is non-empty
+    * (`Pipeline.transform` learns it from its date collect) call this.
+    */
+  def stages(weather: Option[DataFrame])(df: DataFrame): DataFrame =
+    df.transform(addTemporalFeatures)
+      .transform(enrichWithWeather(weather))
+      .transform(calculateDuration)
+      .transform(determineDelayStatus)
+
+  /** O2+O3 (`core/transform.py:31-65`): [[stages]] behind the reference's
+    * empty-input short-circuit (`:44-45`), which costs one `isEmpty` job.
+    * The pipeline itself calls [[stages]]; this reference-shaped entry
+    * point is kept for direct callers and the transform specs.
     */
   def apply(weather: Option[DataFrame])(df: DataFrame): DataFrame =
-    if (df.isEmpty) df
-    else
-      df.transform(addTemporalFeatures)
-        .transform(enrichWithWeather(weather))
-        .transform(calculateDuration)
-        .transform(determineDelayStatus)
+    if (df.isEmpty) df else stages(weather)(df)
 }

@@ -66,9 +66,9 @@ object Writers {
 
   /** W5 (`sources/writers.py:61-70`): dependency-free, row-streamed OOXML
     * writer (see [[Xlsx]]) — driver-side single file, mirroring the
-    * reference's `constant_memory` xlsxwriter.
+    * reference's `constant_memory` xlsxwriter. Returns the rows written.
     */
-  def xlsx(df: DataFrame, path: String): Unit = Xlsx.write(df, path)
+  def xlsx(df: DataFrame, path: String): Long = Xlsx.write(df, path)
 
   /** W7 (`core/load.py:50-52`): 5-row preview. */
   def preview(df: DataFrame): Unit = df.show(5, truncate = false)

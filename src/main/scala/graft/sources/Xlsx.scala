@@ -41,7 +41,8 @@ object Xlsx {
       case c => c.toString
     }
 
-  def write(df: DataFrame, path: String): Unit = {
+  /** Streams `df` into a one-sheet workbook; returns the rows written. */
+  def write(df: DataFrame, path: String): Long = {
     val p = Paths.get(path)
     if (p.getParent != null) Files.createDirectories(p.getParent)
     val zip = new ZipOutputStream(new BufferedOutputStream(new FileOutputStream(path)))
@@ -91,6 +92,7 @@ object Xlsx {
       })
       // row-streamed like the reference's constant_memory writer
       val it = df.toLocalIterator()
+      var rows = 0L
       while (it.hasNext) {
         val row = it.next()
         val cells = new StringBuilder("<row>")
@@ -105,9 +107,11 @@ object Xlsx {
           i += 1
         }
         emit(cells.append("</row>").toString)
+        rows += 1
       }
       emit("</sheetData></worksheet>")
       zip.closeEntry()
+      rows
     } finally zip.close()
   }
 

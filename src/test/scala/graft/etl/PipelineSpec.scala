@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -41,6 +42,62 @@ class PipelineSpec extends SparkSpec {
       SourceConfig.Generate(rows, seed = 7L), OutputConfig(s"$dir/res", format))
     val p = new Pipeline(spark, config)
     (config, p.transform(p.extract()))
+  }
+
+  /** `stage_seconds` of a manifest, in order. */
+  private def stageSeconds(manifest: String): Seq[(String, Double)] =
+    """"stage_seconds": \{([^}]*)\}""".r.findFirstMatchIn(manifest)
+      .map(m => """"([a-z]+)": ([0-9.E-]+)""".r.findAllMatchIn(m.group(1))
+        .map(k => k.group(1) -> k.group(2).toDouble).toSeq)
+      .getOrElse(fail(s"no stage_seconds in $manifest"))
+
+  /** Runs `body` under a job tag; returns its result and, for every job
+    * started while it ran, the job's name and whether it carried the tag.
+    * Spark runs a SQL execution's jobs on its own threads; the execution's
+    * description is the call site of the thread that started it, so jobs
+    * are named by their execution where they have one.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[(String, Boolean)]) = {
+    val sc = spark.sparkContext
+    val tag = s"pipeline-spec-${java.util.UUID.randomUUID()}"
+    val fenceTag = s"$tag-fence"
+    val sqlSites = new ConcurrentHashMap[Long, String]()
+    val jobs = new ConcurrentLinkedQueue[(Int, Option[Long], String, Set[String])]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sqlSites.put(s.executionId, s.description); ()
+        case _                                 => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        val exec = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        val tags = props.flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").toSet)
+        jobs.add((j.jobId, exec.map(_.toLong), j.stageInfos.map(_.name).mkString(";"), tags)); ()
+      }
+    }
+    // a one-task job under its own tag; job ids rise in submission order
+    def fence(): Int = {
+      sc.addJobTag(fenceTag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(fenceTag)
+      sc.statusTracker.getJobIdsForTag(fenceTag).max
+    }
+    sc.addSparkListener(listener)
+    try {
+      val from = fence()
+      sc.addJobTag(tag)
+      val result = try body finally sc.removeJobTag(tag)
+      val to = fence()
+      // the listener bus is asynchronous but ordered: once the closing
+      // fence is seen, so is every job started before it
+      result -> eventually(timeout(30.seconds), interval(100.millis)) {
+        val all = jobs.asScala.toSeq
+        assert(all.exists(_._1 == to))
+        all.filter(j => j._1 > from && j._1 < to).map { case (_, exec, stages, tags) =>
+          exec.flatMap(e => Option(sqlSites.get(e))).getOrElse(stages) -> tags(tag)
+        }
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   private def withTempDir[T](f: String => T): T = {
@@ -126,10 +183,7 @@ class PipelineSpec extends SparkSpec {
         got.tail.foreach { case (f, v) => assert(v == got.head._2, f) }
 
         val manifest = Files.readString(Paths.get(s"${out}_manifest.json"))
-        val stages = """"stage_seconds": \{([^}]*)\}""".r.findFirstMatchIn(manifest)
-          .map(m => """"([a-z]+)": ([0-9.E-]+)""".r.findAllMatchIn(m.group(1))
-            .map(k => k.group(1) -> k.group(2).toDouble).toSeq)
-          .getOrElse(fail(s"no stage_seconds in $manifest"))
+        val stages = stageSeconds(manifest)
         assert(stages.map(_._1) == "materialize" +: Load.AllFormats)
         assert(stages.forall(_._2 >= 0))
         assert(manifest.indexOf("\"columns\": [") < manifest.indexOf("\"stage_seconds\""))
@@ -167,43 +221,88 @@ class PipelineSpec extends SparkSpec {
 
   test("sink jobs run on pool threads yet carry the caller's job tag") {
     withTempDir { dir =>
-      val sc = spark.sparkContext
       val (config, df) = generated(dir, 100, "all")
-      // Spark runs a SQL execution's jobs on its own threads; the
-      // execution's description is the call site of the thread that
-      // started it, so jobs are named by their execution where they have one
-      val sqlSites = new ConcurrentHashMap[Long, String]()
-      val jobs = new ConcurrentLinkedQueue[(Int, Option[Long], String)]()
-      val listener = new SparkListener {
-        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-          case s: SparkListenerSQLExecutionStart => sqlSites.put(s.executionId, s.description); ()
-          case _                                 => ()
-        }
-        override def onJobStart(j: SparkListenerJobStart): Unit = {
-          val exec = Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          jobs.add((j.jobId, exec.map(_.toLong), j.stageInfos.map(_.name).mkString(";"))); ()
-        }
-      }
-      val tag = "pipeline-spec-load"
-      sc.addSparkListener(listener)
       try {
-        sc.addJobTag(tag)
-        try Load.load(df, config) finally sc.removeJobTag(tag)
-        val callSites = Seq("count at Load.scala", "csv at Writers.scala",
-          "json at Writers.scala", "parquet at Writers.scala", "save at Writers.scala",
-          "at Xlsx.scala")
-        eventually(timeout(30.seconds), interval(100.millis)) {
-          val seen = jobs.asScala.toSeq.map { case (id, exec, stages) =>
-            id -> exec.flatMap(e => Option(sqlSites.get(e))).getOrElse(stages)
-          }
-          callSites.foreach(c => assert(seen.exists(_._2.contains(c)), s"$c in $seen"))
-          val tagged = sc.statusTracker.getJobIdsForTag(tag).toSet
-          assert(seen.map(_._1).toSet.subsetOf(tagged), seen)
-        }
-      } finally {
-        sc.removeSparkListener(listener)
-        closeDerby(config.output.path)
+        val (_, jobs) = jobsOf(Load.load(df, config))
+        Seq("count at Load.scala", "csv at Writers.scala", "json at Writers.scala",
+          "parquet at Writers.scala", "save at Writers.scala", "at Xlsx.scala")
+          .foreach(c => assert(jobs.exists(_._1.contains(c)), s"$c in $jobs"))
+        // every job the load started, on any thread, carries the tag
+        assert(jobs.forall(_._2), jobs)
+      } finally closeDerby(config.output.path)
+    }
+  }
+
+  test("an empty format selection fails before any job runs") {
+    withTempDir { dir =>
+      // evaluating this frame throws, so any job over it would surface here
+      val exploding = spark.range(3).where(
+        udf((i: Long) => if (i >= 0) throw new IllegalStateException("evaluated") else true)
+          .apply(col("id"))).toDF()
+      Seq("", " , ").foreach { format =>
+        val config = PipelineConfig(
+          SourceConfig.File(s"$dir/missing.csv"), OutputConfig(s"$dir/out/res", format))
+        intercept[IllegalArgumentException](Load.load(exploding, config))
+        // the format is checked before the missing source is inferred
+        intercept[IllegalArgumentException](new Pipeline(spark, config).run())
       }
+      assert(!Files.exists(Paths.get(s"$dir/out")))
+    }
+  }
+
+  /** Rows read back from one sink's output. */
+  private def readBack(format: String, out: String): Long = format match {
+    case "csv"     => Readers.csv(spark, s"$out.csv").count()
+    case "json"    => spark.read.json(s"$out.json").count()
+    case "parquet" => Readers.parquet(spark, s"$out.parquet").count()
+    case "sqlite"  => Readers.jdbc(spark, s"jdbc:derby:$out").count()
+    case "xlsx"    => Readers.xlsx(spark, s"$out.xlsx").count()
+  }
+
+  Seq(120L, 0L).foreach { n =>
+    test(s"each single sink reports the $n rows it wrote, also in the manifest") {
+      withTempDir { dir =>
+        Load.AllFormats.foreach { f =>
+          val (config, df) = generated(s"$dir/$f", n, f)
+          val out = config.output.path
+          try {
+            val res = Load.load(df, config)
+            assert(res.rows == n, f)
+            assert(readBack(f, out) == n, f)
+            val manifest = Files.readString(Paths.get(s"${out}_manifest.json"))
+            assert(manifest.contains(s""""rows": $n"""), s"$f: $manifest")
+            assert(stageSeconds(manifest).map(_._1) == Seq(f))
+          } finally closeDerby(out)
+        }
+      }
+    }
+  }
+
+  test("CSV to parquet runs no separate count or isEmpty job; stages are timed") {
+    withTempDir { dir =>
+      val src = s"$dir/input.csv"
+      Files.writeString(Paths.get(src), fixtureCsv)
+      val config = PipelineConfig(SourceConfig.File(src), OutputConfig(s"$dir/out/results", "parquet"))
+      val ((_, res), jobs) = jobsOf(new Pipeline(spark, config).run())
+      val seen = jobs.map(_._1)
+      assert(res.rows == 1)
+      assert(seen.exists(_.contains("collect at Pipeline.scala")), seen)
+      assert(seen.exists(_.contains("parquet at Writers.scala")), seen)
+      assert(!seen.exists(j => j.contains("count at Load.scala") || j.contains("isEmpty at Transform.scala")), seen)
+      val manifest = Files.readString(Paths.get(s"$dir/out/results_manifest.json"))
+      assert(stageSeconds(manifest).map(_._1) == Seq("extract", "transform", "parquet"))
+    }
+  }
+
+  test("a header-only CSV gives 0 rows and keeps its 6 columns") {
+    withTempDir { dir =>
+      val src = s"$dir/input.csv"
+      Files.writeString(Paths.get(src), fixtureCsv.linesIterator.next() + "\n")
+      val config = PipelineConfig(SourceConfig.File(src), OutputConfig(s"$dir/out/results", "parquet"))
+      val (_, res) = new Pipeline(spark, config).run()
+      assert(res.rows == 0)
+      assert(res.columns.length == 6)
+      assert(Readers.parquet(spark, s"$dir/out/results.parquet").count() == 0)
     }
   }
 
