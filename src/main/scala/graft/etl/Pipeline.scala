@@ -2,8 +2,9 @@ package graft.etl
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Readers
 
@@ -19,12 +20,14 @@ final class Pipeline(
     singleFile: Boolean = true) {
 
   /** E-step (`core/extract.py:34-80`): generate or read, then the
-    * normalization cast (S8).
+    * normalization cast (S8). A file is read against the 6-column
+    * [[DeliveryRecord]] contract, so a CSV with the contract's header skips
+    * schema inference (see [[Readers.csv]]).
     */
   def extract(): DataFrame = {
     val raw = config.source match {
       case SourceConfig.Generate(rows, seed) => Generator.deliveries(spark, rows, seed)
-      case SourceConfig.File(path)           => Readers.read(spark, path)
+      case SourceConfig.File(path)           => Readers.read(spark, path, Some(Pipeline.Contract))
     }
     Readers.normalizeTimestamps(raw)
   }
@@ -55,7 +58,8 @@ final class Pipeline(
     * reference's timed `Pipeline.run()` (`pipeline.py:23,58-63`). The
     * output format is checked before any job runs; the manifest's
     * `stage_seconds` opens with `extract` (schema inference, for a file
-    * source) and `transform` (the date collect and the weather lookup).
+    * source without the contract's header) and `transform` (the date
+    * collect and the weather lookup).
     */
   def run(): (Double, Load.LoadResult) = {
     val t0 = System.nanoTime()
@@ -66,4 +70,9 @@ final class Pipeline(
       upstreamSeconds = Seq("extract" -> extractS, "transform" -> transformS))
     ((System.nanoTime() - t0) / 1e9, result)
   }
+}
+
+object Pipeline {
+  /** The input contract's schema (PAPER §1.2, FIXTURES A.1). */
+  val Contract: StructType = Encoders.product[DeliveryRecord].schema
 }

@@ -149,20 +149,13 @@ object Transform {
 
   /** O2 (`core/transform.py:47-65`): the fixed 4-stage chain; order is
     * load-bearing (weather join needs Hour, status needs all predecessors).
-    * Lazy: runs no job. Callers that already know the frame is non-empty
-    * (`Pipeline.transform` learns it from its date collect) call this.
+    * Lazy: runs no job. The reference's empty-input short-circuit
+    * (`:44-45`) lives in `Pipeline.transform`, which learns emptiness from
+    * its date collect instead of an `isEmpty` job.
     */
   def stages(weather: Option[DataFrame])(df: DataFrame): DataFrame =
     df.transform(addTemporalFeatures)
       .transform(enrichWithWeather(weather))
       .transform(calculateDuration)
       .transform(determineDelayStatus)
-
-  /** O2+O3 (`core/transform.py:31-65`): [[stages]] behind the reference's
-    * empty-input short-circuit (`:44-45`), which costs one `isEmpty` job.
-    * The pipeline itself calls [[stages]]; this reference-shaped entry
-    * point is kept for direct callers and the transform specs.
-    */
-  def apply(weather: Option[DataFrame])(df: DataFrame): DataFrame =
-    if (df.isEmpty) df else stages(weather)(df)
 }

@@ -31,12 +31,12 @@ object Checkpoints {
     * m=40 peel point (20M-row triple rounds): at query scale (sf0.1,
     * state fits) SER and deserialized tie within ambient noise; at the
     * pressure point SER reads 47.9 s vs 59.5 s deserialized at the 8g
-    * heap — compact pages defer eviction and spill cheaper.
+    * heap — compact pages defer eviction and spill cheaper. Round 10
+    * re-ran the A/B over the 8-query loop set at sf0.1 and found it flat
+    * within noise (OPTIMIZATION_r10.md), so the deserialized level was
+    * dropped as an option.
     */
-  val RoundLevel: StorageLevel = sys.env.get("SPARK_GRAFT_ROUND_LEVEL") match {
-    case Some("deser") => StorageLevel.MEMORY_AND_DISK // A/B experiment seam
-    case _ => StorageLevel.MEMORY_AND_DISK_SER
-  }
+  val RoundLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
 
   /** `SPARK_GRAFT_RELIABLE_CHECKPOINT` routes round state to RELIABLE
     * `Dataset.checkpoint` against a checkpoint directory instead of

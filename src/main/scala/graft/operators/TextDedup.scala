@@ -381,14 +381,6 @@ object TextDedup {
     * long chains would want the large-star/small-star variant, which
     * bounds rounds by log(n) instead of the diameter.
     */
-  /** Per-round lineage cut + block release, shared with every iterative
-    * operator: [[Checkpoints.round]] stores round state SERIALIZED with
-    * disk fallback (the SCALE_r08 memory-cliff fix); [[Checkpoints.free]]
-    * releases each superseded round so live blocks stay O(nodes), not
-    * O(rounds).
-    */
-  private def freeCheckpoint(df: DataFrame): Unit = Checkpoints.free(df)
-
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // self-loops appended ONCE: each round's update is then
     // lbl'(u) = min over N(u) ∪ {u} — a single join + aggregate, where
@@ -426,15 +418,15 @@ object TextDedup {
         .groupBy(col("src").as("id")).agg(min(col("comp")).as("comp")),
         eager = false)
       val newSum = compSum(next)
-      if (labelsOwned) freeCheckpoint(labels) // next is materialized by the agg
+      if (labelsOwned) Checkpoints.free(labels) // next is materialized by the agg
       labels = next
       labelsOwned = true
       converged = newSum == sum
       sum = newSum
       iter += 1
     }
-    freeCheckpoint(sym)
-    if (labelsOwned) freeCheckpoint(nodes) // else labels still reads nodes
+    Checkpoints.free(sym)
+    if (labelsOwned) Checkpoints.free(nodes) // else labels still reads nodes
     // The returned frame reads the LAST round's checkpoint blocks (one
     // small (id, comp) set — O(nodes), not O(rounds)); they are freed by
     // the session-level sweep between bench/verify queries.
@@ -508,7 +500,7 @@ object TextDedup {
       val next = Checkpoints.round(smallStar(largeStar(e)), eager = false)
       val nfp = fingerprint(next)
       converged = nfp == fp && next.exceptAll(e).isEmpty
-      freeCheckpoint(e)
+      Checkpoints.free(e)
       e = next
       fp = nfp
       iter += 1

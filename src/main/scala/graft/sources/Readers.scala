@@ -2,19 +2,78 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** S2-S8 — file readers + extension dispatch + the datetime normalization
   * cast, mirroring `/root/reference/supercourier_etl/sources/readers.py` and
   * `core/extract.py:16-22,57-80`. All readers return a plain DataFrame; the
   * schema contract is enforced downstream exactly like the reference
-  * (column references fail at analysis, not read, time).
+  * (column references fail at analysis, not read, time), except that a CSV
+  * whose header is the contract's is read with the contract's types.
   */
 object Readers {
 
-  /** S2 (`sources/readers.py:30-33`): header + inferred schema. */
-  def csv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+  /** S2 (`sources/readers.py:30-33`): a headed CSV.
+    *
+    * Schema inference is a whole extra pass over the input before any work
+    * starts (or, sampled, a pass that can pick the wrong type). With a
+    * `contract` whose field names are exactly the first data file's header
+    * names (any order, exact case), the file is read with the contract's
+    * types in header order instead: no inference pass, and `FAILFAST` keeps
+    * a malformed value fatal at the read, as the ANSI casts downstream of an
+    * inferred string column do. File sources make a declared schema
+    * nullable, so an empty cell still reads as null. Every other case — no
+    * contract, another header, an unreadable first file — infers as before.
+    */
+  def csv(spark: SparkSession, path: String, contract: Option[StructType] = None): DataFrame = {
+    val reader = spark.read.option("header", "true")
+    val declared = for {
+      schema <- contract
+      header <- csvHeader(spark, path)
+      if header.sorted == schema.fieldNames.toSeq.sorted
+    } yield StructType(header.map(schema(_)))
+    declared match {
+      // enforceSchema=false checks every file's header against the
+      // schema, so a part file with another column order fails instead
+      // of reading positionally into the wrong columns
+      case Some(s) =>
+        reader.schema(s).option("mode", "FAILFAST").option("enforceSchema", "false").csv(path)
+      case None => reader.option("inferSchema", "true").csv(path)
+    }
+  }
+
+  /** The comma-separated names on the first line of the first data file;
+    * `None` when that line does not end within the first `limit` bytes.
+    */
+  private def csvHeader(spark: SparkSession, path: String, limit: Int = 4096): Option[Seq[String]] =
+    headOfFirstFile(spark, path, limit).flatMap { bytes =>
+      val text = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+      val end = text.indexWhere(c => c == '\n' || c == '\r')
+      if (end < 0 && bytes.length == limit) None
+      else Some(text.substring(0, if (end < 0) text.length else end).split(",", -1).toSeq)
+    }
+
+  /** Up to `maxBytes` leading bytes of `path`, or of the first data file
+    * (by name, skipping `_`/`.` files) when `path` is a directory. `None`
+    * when there is no such file or it cannot be read (glob paths, empty
+    * directories), so callers fall back to a full Spark read.
+    */
+  private def headOfFirstFile(spark: SparkSession, path: String, maxBytes: Int): Option[Array[Byte]] =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(p)
+      val file =
+        if (st.isFile) Some(p)
+        else fs.listStatus(p).iterator
+          .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
+            && !s.getPath.getName.startsWith("."))
+          .map(_.getPath).toSeq.sortBy(_.getName).headOption
+      file.map { f =>
+        val in = fs.open(f)
+        try in.readNBytes(maxBytes) finally in.close()
+      }
+    } catch { case _: Exception => None }
 
   /** S3 (`sources/readers.py:35-38`): the reference reads a whole-file JSON
     * array; Spark's default JSON is NDJSON, so try multiLine first and fall
@@ -25,33 +84,15 @@ object Readers {
     // read of one file) instead of fully parsing the data twice: '['
     // means a whole-file JSON array (the reference layout → multiLine),
     // anything else NDJSON (Spark's native layout, and our W2 output).
-    // On any sniff hiccup (glob paths, empty dir) fall back to the old
-    // parse-then-retry probe.
+    // An all-whitespace (or empty) sample proves nothing, and a sniff
+    // hiccup (glob paths, empty dir) reads nothing: both fall through to
+    // the parse-then-retry probe, never to Some(false), which would
+    // mis-read a whitespace-padded array file as NDJSON and yield
+    // _corrupt_record rows.
     val arraySniff: Option[Boolean] =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val st = fs.getFileStatus(p)
-        val file =
-          if (st.isFile) Some(p)
-          else fs.listStatus(p).iterator
-            .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
-              && !s.getPath.getName.startsWith("."))
-            .map(_.getPath).toSeq.sortBy(_.getName).headOption
-        // an all-whitespace (or empty) sample proves nothing — return
-        // None so it falls through to the parse-then-retry probe, not
-        // Some(false) (which would mis-read a whitespace-padded array
-        // file as NDJSON and yield _corrupt_record rows)
-        file.flatMap { f =>
-          val in = fs.open(f)
-          try {
-            val buf = new Array[Byte](256)
-            val n = in.read(buf)
-            (0 until math.max(n, 0)).iterator.map(buf(_).toChar)
-              .find(c => !c.isWhitespace).map(_ == '[')
-          } finally in.close()
-        }
-      } catch { case _: Exception => None }
+      headOfFirstFile(spark, path, 256).flatMap { bytes =>
+        bytes.iterator.map(_.toChar).find(c => !c.isWhitespace).map(_ == '[')
+      }
 
     arraySniff match {
       case Some(true)  => spark.read.option("multiLine", "true").json(path)
@@ -112,12 +153,14 @@ object Readers {
 
   /** S7 (`core/extract.py:16-22,57-72`): extension dispatch; unknown
     * extension → IllegalArgumentException, missing file surfaces as
-    * AnalysisException like the reference's FileNotFoundError.
+    * AnalysisException like the reference's FileNotFoundError. Only
+    * [[csv]] uses the `contract` (to skip its inference pass); the other
+    * formats ignore it, and JSON keeps inferring.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
+  def read(spark: SparkSession, path: String, contract: Option[StructType] = None): DataFrame = {
     val ext = path.substring(path.lastIndexOf('.') + 1).toLowerCase
     ext match {
-      case "csv"            => csv(spark, path)
+      case "csv"            => csv(spark, path, contract)
       case "json"           => json(spark, path)
       case "parquet"        => parquet(spark, path)
       case "orc"            => orc(spark, path)

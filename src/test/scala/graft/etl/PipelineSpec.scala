@@ -7,9 +7,11 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.SparkException
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.types.DoubleType
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
@@ -336,6 +338,93 @@ class PipelineSpec extends SparkSpec {
       }
       assert(run(src, s"$dir/a/results") == ReferenceColumns)
       assert(run(s"$dir/a/results.csv", s"$dir/b/results") == ReferenceColumns)
+    }
+  }
+
+  /** Runs `src` to parquet at `out` through `Pipeline.run`; returns the
+    * written frame and the run's jobs (see [[jobsOf]]). */
+  private def toParquet(src: String, out: String): (DataFrame, Seq[(String, Boolean)]) = {
+    val config = PipelineConfig(SourceConfig.File(src), OutputConfig(out, "parquet"))
+    val (_, jobs) = jobsOf(new Pipeline(spark, config).run())
+    (Readers.parquet(spark, s"$out.parquet"), jobs)
+  }
+
+  /** [[toParquet]] over a CSV file holding `body`. */
+  private def runCsv(dir: String, body: String): (DataFrame, Seq[(String, Boolean)]) = {
+    Files.writeString(Paths.get(s"$dir/input.csv"), body)
+    toParquet(s"$dir/input.csv", s"$dir/out/results")
+  }
+
+  private val ContractHeader =
+    "Delivery_ID,Pickup_DateTime,Delivery_Timestamp,Package_Type,Distance,Delivery_Zone"
+
+  test("a contract CSV reads with the declared schema: no inference job, same output as inference") {
+    val inputs = Seq(
+      "A.2" -> fixtureCsv,
+      "space-separated timestamps" -> (ContractHeader + "\n" +
+        "SC001,2025-09-05 10:00:00,2025-09-05 10:45:00,Small,5.0,Suburban\n" +
+        "SC002,2025-09-06 18:30:00,2025-09-06 20:02:00,Special,41.25,Shopping Center\n"),
+      "date-only timestamps" -> (ContractHeader + "\n" +
+        "SC001,2025-09-05,2025-09-06,Large,12.5,Urban\n"),
+      "permuted header" -> (
+        "Distance,Delivery_Zone,Delivery_ID,Package_Type,Pickup_DateTime,Delivery_Timestamp\n" +
+        "5.0,Suburban,SC001,Small,2025-09-05T10:00:00,2025-09-05T10:45:00\n" +
+        ",Rural,SC002,Medium,2025-09-05T07:15:00,2025-09-05T09:00:00\n"))
+    inputs.foreach { case (name, body) =>
+      withTempDir { dir =>
+        val (got, jobs) = runCsv(dir, body)
+        assert(!jobs.exists(_._1.contains("csv at Readers.scala")), s"$name: $jobs")
+        // the same file through today's inference path
+        val p = new Pipeline(spark, PipelineConfig(SourceConfig.File(s"$dir/input.csv"),
+          OutputConfig("unused", "preview")))
+        val want = p.transform(Readers.normalizeTimestamps(Readers.csv(spark, s"$dir/input.csv")))
+        assert(got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType), name)
+        def rows(df: DataFrame) = df.orderBy("Delivery_ID").collect().toSeq
+        assert(rows(got) == rows(want), name)
+      }
+    }
+  }
+
+  test("Distance reads as double from a contract CSV, also when it holds integers or nothing") {
+    withTempDir { dir =>
+      val (got, _) = runCsv(dir, ContractHeader + "\n" +
+        "SC001,2025-09-05T10:00:00,2025-09-05T10:45:00,Small,5,Suburban\n" +
+        "SC002,2025-09-05T11:00:00,2025-09-05T11:45:00,Small,12,Urban\n")
+      assert(got.schema("Distance").dataType == DoubleType)
+      assert(got.orderBy("Delivery_ID").select("Distance").collect().map(_.getDouble(0)).toSeq == Seq(5.0, 12.0))
+    }
+    withTempDir { dir =>
+      val (got, _) = runCsv(dir, ContractHeader + "\n" +
+        "SC001,2025-09-05T10:00:00,2025-09-05T10:45:00,Small,,Suburban\n")
+      assert(got.schema("Distance").dataType == DoubleType)
+      assert(got.select("Distance", "Theoretical_Time_Minutes").first().isNullAt(0))
+    }
+  }
+
+  test("a malformed timestamp or distance in a contract CSV fails the read; no manifest") {
+    Seq(
+      "SC001,2025-09-05T10:00:00,not a time,Small,5.0,Suburban",
+      "SC001,2025-09-05T10:00:00,2025-09-05T10:45:00,Small,five,Suburban").foreach { row =>
+      withTempDir { dir =>
+        val e = intercept[SparkException](runCsv(dir, s"$ContractHeader\n$row\n"))
+        assert(e.getMessage.contains("FAILED_READ_FILE"), s"$row: ${e.getMessage}")
+        // the date collect parses only Pickup_DateTime, so a bad value
+        // elsewhere fails in the sink's own read; either way no manifest
+        assert(!Files.exists(Paths.get(s"$dir/out/results_manifest.json")), row)
+      }
+    }
+  }
+
+  test("a 13-column output read back in still infers its schema") {
+    withTempDir { dir =>
+      val (_, first) = runCsv(dir, fixtureCsv)
+      assert(!first.exists(_._1.contains("csv at Readers.scala")), first)
+      val config = PipelineConfig(SourceConfig.File(s"$dir/out/results.parquet"),
+        OutputConfig(s"$dir/b/results", "csv"))
+      new Pipeline(spark, config).run()
+      val (again, jobs) = toParquet(s"$dir/b/results.csv", s"$dir/c/results")
+      assert(jobs.exists(_._1.contains("csv at Readers.scala")), jobs)
+      assert(again.columns.toSeq == ReferenceColumns)
     }
   }
 }

@@ -102,7 +102,7 @@ class TransformPropsSpec extends SparkSpec {
       if (wrows.forall(_.get(2) == null)) None
       else Some(spark.createDataFrame(
         spark.sparkContext.parallelize(wrows, 1), wschema))
-    Transform(weather)(df)
+    Transform.stages(weather)(df)
       .select("Delivery_ID", "Hour", "Weekday", "Weather_Condition",
         "Actual_Delivery_Time_Minutes", "Actual_Delivery_Time_Display",
         "Theoretical_Time_Minutes", "Status", "Distance", "Package_Type",

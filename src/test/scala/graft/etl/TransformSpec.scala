@@ -115,7 +115,7 @@ class TransformSpec extends SparkSpec {
       Timestamp.valueOf("2024-01-01 09:00:00"), 5.0, "Small", "Urban", "SC1"))
       .toDF("Pickup_DateTime", "Delivery_Timestamp", "Distance",
         "Package_Type", "Delivery_Zone", "Delivery_ID")
-    val out = Transform(None)(df)
+    val out = Transform.stages(None)(df)
     assert(out.schema("Weather_Condition").dataType ==
       org.apache.spark.sql.types.StringType)
     assert(out.select("Weather_Condition").head().isNullAt(0))
@@ -132,12 +132,16 @@ class TransformSpec extends SparkSpec {
       .withColumn("Delivery_Zone", lit("Urban"))
     val weather = Seq((java.sql.Date.valueOf("2024-01-01"), 8, "Light rain"))
       .toDF("date", "Hour", "Weather_Condition")
-    val out = Transform(Some(weather))(df)
+    val out = Transform.stages(Some(weather))(df)
       .select("Delivery_ID", "Weather_Condition").collect()
       .map(r => r.getString(0) -> Option(r.getString(1))).toMap
     assert(out == Map("SC1" -> Some("Light rain"), "SC2" -> None))
 
-    val empty = Transform(Some(weather))(df.limit(0))
-    assert(empty.isEmpty)
+    // the empty-input short-circuit is Pipeline.transform's: its date
+    // collect finds no group and hands the frame back unchanged
+    val empty = df.limit(0)
+    val pipeline = new Pipeline(spark,
+      PipelineConfig(SourceConfig.Generate(0, 1L), OutputConfig("unused", "preview")))
+    assert(pipeline.transform(empty) eq empty)
   }
 }

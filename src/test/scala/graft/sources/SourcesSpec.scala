@@ -2,9 +2,12 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
 import graft.SparkSpec
+import graft.etl.Pipeline
 
 /** Reader/writer round-trips + dispatch errors (S2-S8, W1-W4). */
 class SourcesSpec extends SparkSpec {
@@ -26,6 +29,54 @@ class SourcesSpec extends SparkSpec {
     assert(back.count() == 2)
     assert(back.schema("Pickup_DateTime").dataType ==
       org.apache.spark.sql.types.TimestampType)
+  }
+
+  test("csv with the contract's header takes its types in header order; empty cells read null") {
+    val p = tmp("contract.csv")
+    Files.writeString(Paths.get(p),
+      "Distance,Delivery_ID,Pickup_DateTime,Delivery_Timestamp,Package_Type,Delivery_Zone\n" +
+        "5,SC1,2025-01-01T10:00:00,2025-01-01T11:00:00,Small,Urban\n" +
+        ",SC2,2025-01-02 12:00:00,2025-01-02,Large,Rural\n")
+    val back = Readers.csv(spark, p, Some(Pipeline.Contract))
+    assert(back.columns.toSeq == Seq("Distance", "Delivery_ID", "Pickup_DateTime",
+      "Delivery_Timestamp", "Package_Type", "Delivery_Zone"))
+    assert(back.schema.fields.toSeq.map(f => f.name -> f.dataType) ==
+      back.columns.toSeq.map(c => c -> Pipeline.Contract(c).dataType))
+    // the contract's Distance is a primitive double; the file source
+    // still reads it nullable
+    assert(!Pipeline.Contract("Distance").nullable && back.schema.forall(_.nullable))
+    val rows = back.orderBy("Delivery_ID").collect()
+    assert(rows(0).getDouble(0) == 5.0 && rows(1).isNullAt(0))
+    assert(rows(1).getTimestamp(3) == java.sql.Timestamp.valueOf("2025-01-02 00:00:00"))
+  }
+
+  test("csv part files: the contract path reads a directory; no contract still infers") {
+    val p = tmp("parts.csv")
+    Writers.csv(sample.withColumn("Distance", col("Distance").cast("int")).repartition(2), p)
+    val declared = Readers.csv(spark, p, Some(Pipeline.Contract))
+    assert(declared.schema("Distance").dataType == DoubleType)
+    assert(declared.orderBy("Delivery_ID").select("Distance").as[Double].collect().toSeq == Seq(5.0, 9.0))
+    assert(Readers.csv(spark, p).schema("Distance").dataType == IntegerType)
+    // a header that is not exactly the contract's (case differs) infers too
+    val lower = tmp("lower.csv")
+    Writers.csv(sample.toDF(sample.columns.map(_.toLowerCase): _*)
+      .withColumn("distance", col("distance").cast("int")), lower)
+    assert(Readers.csv(spark, lower, Some(Pipeline.Contract)).schema("distance").dataType == IntegerType)
+  }
+
+  test("csv with the contract: a part file in another column order fails instead of misreading") {
+    val dir = tmp("mixed.csv")
+    Files.createDirectories(Paths.get(dir))
+    Files.writeString(Paths.get(dir, "part-0.csv"),
+      "Delivery_ID,Pickup_DateTime,Delivery_Timestamp,Package_Type,Distance,Delivery_Zone\n" +
+        "SC1,2025-01-01T10:00:00,2025-01-01T11:00:00,Small,5.0,Urban\n")
+    // two string columns swapped: every value would parse in place
+    Files.writeString(Paths.get(dir, "part-1.csv"),
+      "Delivery_ID,Pickup_DateTime,Delivery_Timestamp,Delivery_Zone,Distance,Package_Type\n" +
+        "SC2,2025-01-01T10:00:00,2025-01-01T11:00:00,Rural,7.5,Small\n")
+    val e = intercept[SparkException](Readers.csv(spark, dir, Some(Pipeline.Contract)).collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(causes.exists(_.contains("CSV header does not conform to the schema")), causes)
   }
 
   test("ndjson writer output reads back via the json reader") {
