@@ -1,6 +1,11 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+
+import graft.util.Json
 
 /** E4 — benchmark harness (protocol from
   * `/root/reference/benchmarks.py:13-89`: warm-up run, then timed runs,
@@ -19,8 +24,67 @@ import org.apache.spark.sql.SparkSession
   * (persisted frames AND `localCheckpoint` leftovers) are swept, so no
   * query's session state can poison a later one and reps are i.i.d.
   * `value` is the sum of per-query medians.
+  *
+  * Structure: every rep runs under the job tag `q:<name>:<rep>`, and one
+  * [[Tally]] attributes jobs, stages, tasks and bytes to it. The full
+  * JSON gains `"structure"`: per query, the last rep's counts.
+  * `spark.stop()` drains the listener bus before it is read.
   */
 object Bench {
+
+  /** What the jobs carrying one tag did. Bytes are summed task metrics. */
+  final class Counts {
+    var jobs = 0; var stages = 0; var tasks = 0
+    var shuffleRead = 0L; var shuffleWrite = 0L; var input = 0L; var spill = 0L
+
+    def json: String = {
+      def mb(b: Long) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(b / 1e6))
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"shuffle_read_mb":${mb(shuffleRead)},""" +
+        s""""shuffle_write_mb":${mb(shuffleWrite)},"input_mb":${mb(input)},"spill_mb":${mb(spill)}}"""
+    }
+  }
+
+  /** Attributes every job to the job tags it carries (`spark.job.tags`,
+    * set by `SparkContext.addJobTag` and inherited by the threads a SQL
+    * execution runs on), and each stage and task to its job's tags.
+    * Untagged jobs are not counted.
+    */
+  final class Tally extends SparkListener {
+    private val byTag = mutable.Map.empty[String, Counts]
+    private val stageTags = mutable.Map.empty[Int, Seq[String]]
+
+    private def each(stage: Int)(f: Counts => Unit): Unit =
+      stageTags.getOrElse(stage, Nil).foreach(t => f(byTag(t)))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .fold(Seq.empty[String])(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
+      tags.foreach(t => byTag.getOrElseUpdate(t, new Counts).jobs += 1)
+      if (tags.nonEmpty) e.stageIds.foreach(s => stageTags.getOrElseUpdate(s, tags))
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      each(e.stageInfo.stageId)(_.stages += 1)
+    }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      val m = e.taskMetrics
+      each(e.stageId) { c =>
+        c.tasks += 1
+        if (m != null) {
+          c.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          c.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          c.input += m.inputMetrics.bytesRead
+          c.spill += m.diskBytesSpilled
+        }
+      }
+    }
+
+    /** The counts for `tag`; all zero if no job carried it. */
+    def apply(tag: String): Counts = synchronized(byTag.getOrElse(tag, new Counts))
+    def tags: Set[String] = synchronized(byTag.keySet.toSet)
+  }
+
   private def drive(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -52,18 +116,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadBefore = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
+    val sc = spark.sparkContext
+    val tally = new Tally
+    sc.addSparkListener(tally)
 
     // warm-up (JIT + codegen caches) across the engine's main code
     // shapes — relational scan/agg, regex text path, array/vector path,
@@ -85,14 +142,16 @@ object Bench {
     // erroring must surface in the JSON (`errors` object), not post the
     // elapsed-time-of-the-failure as a plausible-looking number.
     val results = selected.map { case (name, fn) =>
-      val reps0 = (1 to reps).map { _ =>
+      val reps0 = (1 to reps).map { rep =>
         sweep(spark)
+        sc.addJobTag(s"q:$name:$rep")
         val t0 = System.nanoTime()
         try { drive(fn(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e")
           Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
         }
+        finally sc.removeJobTag(s"q:$name:$rep")
       }
       val times = reps0.collect { case Right(t) => t }
       val firstErr = reps0.collectFirst { case Left(m) => m }
@@ -107,19 +166,18 @@ object Bench {
           name -> Right(med)
       }
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+    // stopping the context drains the listener bus into the tally
+    spark.stop()
     val ok = results.collect { case (k, Right(v)) => k -> v }
     val errs = results.collect { case (k, Left(m)) => k -> m }
-    val qs = ok.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val es = errs.map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
+    val qs = ok.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
+    val es = errs.map { case (k, m) => Json.str(k) + ":" + Json.str(m) }.mkString("{", ",", "}")
+    val structure = results.map { case (k, _) => Json.str(k) + ":" + tally(s"q:$k:$reps").json }
+      .mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     val loadAfter = loadavg()
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"n_err":${errs.size},"sf":"$sfDir","reps":$reps,"load_before":${jstr(loadBefore)},"load_after":${jstr(loadAfter)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"n_err":${errs.size},"sf":"$sfDir","reps":$reps,"load_before":${Json.str(loadBefore)},"load_after":${Json.str(loadAfter)},"structure":$structure}"""
     println(json)
     // also write the line to a file: the artifact must never depend on
     // scraping the JSON out of sbt-wrapped stdout (r2 lost its total
@@ -139,10 +197,9 @@ object Bench {
     def d2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val slow = ok.sortBy(-_._2).take(30)
-      .map { case (k, v) => jstr(k) + ":" + d2(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => Json.str(k) + ":" + d2(v) }.mkString("{", ",", "}")
     val compact =
-      s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":$slow,"queries_note":"30 slowest of ${ok.size}; full set in $outPath","n_queries":${ok.size},"n_err":${errs.size},"sf":"$sfDir","reps":$reps,"load_before":${jstr(loadBefore)},"load_after":${jstr(loadAfter)}}"""
+      s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":$slow,"queries_note":"30 slowest of ${ok.size}; full set in $outPath","n_queries":${ok.size},"n_err":${errs.size},"sf":"$sfDir","reps":$reps,"load_before":${Json.str(loadBefore)},"load_after":${Json.str(loadAfter)}}"""
     println(compact)
-    spark.stop()
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl._
 
 /** E4 twin of the reference's `benchmarks.py` scenario matrix: timed
@@ -27,14 +25,7 @@ object EtlBench {
     val formats = sys.env.getOrElse("GRAFT_ETL_FORMATS", "all_but_xlsx,all")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val csvPath = Paths.get(sys.env.getOrElse("GRAFT_ETL_CSV", "benchmark_results.csv"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-etl-bench")
 
     val base = Files.createTempDirectory("graft_etl_bench").toString
     def run(rows: Long, format: String, out: String): Double = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the golden fingerprints (corpus_len, n_rows,
   * hash_sum, hash_xor) of the production-hash fast twins for each given
   * SF dir. The printed constants are committed into
@@ -18,14 +16,7 @@ object GoldenFp {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("0.001", "0.01", "0.1").map(sf => s"/root/testdata/sf$sf")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-golden-fp")
     for (dir <- dirs; q <- Seq("d_minhash_lsh_fast", "t_winnow_fast")) {
       val r = SparkEntry.queries(q)(spark, dir).collect().head
       println(s"GOLDEN $q $dir corpus_len=${r.getAs[Long]("corpus_len")} " +

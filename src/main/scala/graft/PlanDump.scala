@@ -1,30 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named queries to files — the plan
   * evidence the optimization rounds commit under `plans/rNN/`.
   *
   * Usage: `runMain graft.PlanDump <sfDir> <outDir> <suffix> q1,q2,...`
-  * writes `<outDir>/<query>_<suffix>.txt` per query. Session shape
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions, extensions) matches
-  * graft.Bench so the captured plan is the benched plan.
+  * writes `<outDir>/<query>_<suffix>.txt` per query. The session is
+  * [[Session]]'s, as in graft.Bench, so the captured plan is the benched
+  * plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-plan-dump")
     new java.io.File(outDir).mkdirs()
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       SparkEntry.queries.get(name) match {

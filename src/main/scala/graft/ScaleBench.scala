@@ -184,16 +184,7 @@ object ScaleBench {
       .split(",").map(_.trim.toInt).toSeq
     val bruteCap = sys.env.getOrElse("SPARK_GRAFT_SCALE_BRUTE_CAP", "45000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-scale-bench")
     val planes = Similarity.planes(NPlanes, Dim)
     val tmp = java.nio.file.Files.createTempDirectory("graft_scale").toString
 

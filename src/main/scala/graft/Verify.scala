@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.util.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,19 +10,10 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(a, b)    => (a, b, Option.empty[Set[String]])
       case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
+      case _ => throw new IllegalArgumentException(
+        s"usage: graft.Verify <sfDir> <outDir> [query,query,...] (got ${args.length} arguments)")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the production session shape: native functions + optimizer rules
-      // active for every graded query
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // the plan-lint sweep rides the dump for free (every frame is
     // built here anyway): refreshes PLANLINT.json each gate run, so a
@@ -54,20 +45,10 @@ object Verify {
     if (hits.nonEmpty)
       System.err.println(s"[verify] PLAN LINT: ${hits.size} hits: " +
         hits.map(h => s"${h.query}/${h.rule}").mkString(", "))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Json.str escapes ALL control chars: a tab or CR in an oracle's SQL
+    // would otherwise make the oracle compare's json.load fail
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

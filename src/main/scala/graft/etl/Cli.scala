@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** E1 — CLI entry point mirroring
   * `/root/reference/supercourier_etl/main.py:61-87`: `--generate-rows` XOR
   * `--source-file` (mutual exclusion enforced), `--output-path`,
@@ -50,14 +48,7 @@ object Cli {
 
   def main(argv: Array[String]): Unit = {
     val args = parse(argv)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-etl")
     try {
       val weather = sys.env.get("WEATHERAPI_KEY") match {
         case Some(k) if k.nonEmpty && sys.env.contains("GRAFT_WEATHER_LIVE") =>

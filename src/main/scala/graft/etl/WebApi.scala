@@ -264,14 +264,7 @@ final class WebApi(spark: SparkSession, port: Int = 0,
 /** Standalone server entry point (`GRAFT_API_PORT`, default 8000). */
 object WebApi {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-api")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-api")
     val api = new WebApi(spark, sys.env.getOrElse("GRAFT_API_PORT", "8000").toInt).start()
     println(s"graft API listening on port ${api.boundPort}")
     Thread.currentThread().join()

@@ -1,18 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, If, IsNull, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
-/** SQL-surface registration for the engine's native expressions.
-  *
-  * Two paths, same registry entries:
-  *   - `spark.sql.extensions=graft.plans.GraftExtensions` at session build
-  *     (spark-submit / builder `.withExtensions`);
-  *   - `GraftFunctions.register(spark)` on an already-running session.
+/** SQL-surface registration for the engine's native expressions and
+  * optimizer rules, installed by `spark.sql.extensions=
+  * graft.plans.GraftExtensions` at session build (every session
+  * `graft.Session` builds carries it).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -27,7 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 /** `Rule[LogicalPlan]` demo of the custom-optimization extension point:
   * `graft_hamming(x, x)` over a deterministic x folds to 0 (null-safe),
   * removing the byte-loop from the plan entirely. Registered via
-  * [[GraftExtensions]] or `spark.experimental.extraOptimizations`.
+  * [[GraftExtensions]].
   */
 object HammingIdentityFold extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -119,11 +117,4 @@ object GraftFunctions {
               case n: Number => n.doubleValue()
             }.toSeq
       })))
-
-  /** Register on a live session (temp functions, session-scoped). */
-  def register(spark: SparkSession): Unit =
-    descriptors.foreach { case (ident, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(ident.funcName, builder, "built-in")
-    }
 }

@@ -667,11 +667,9 @@ FROM events GROUP BY 1 ORDER BY week"""
     * FunctionIdentifiers that [[graft.plans.GraftExtensions]] injects
     * (r8-verdict #3: the rollup contract must be reachable like
     * `graft_dot`). Identical plan intent and the identical oracle; the
-    * only Scala here is the temp view + a defensive `register` for
-    * sessions built without the extensions conf.
+    * only Scala here is the temp view.
     */
   private def quantileRollupSql(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     Tables.events(s, dir).createOrReplaceTempView("graft_kll_events")
     s.sql("""
 WITH ev AS (

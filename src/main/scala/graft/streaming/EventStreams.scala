@@ -1122,16 +1122,15 @@ object EventStreams {
     // Stateful operators allocate one state store PER shuffle partition
     // PER stateful op per micro-batch; a fresh local query pays that
     // setup every run, so right-size the state partition count to the
-    // local data volume (a deployment knob — on a cluster you size it
-    // to throughput; the batch default stays untouched for everything
-    // else). The partition count is pinned into the query's checkpoint
-    // at start, so restoring the conf afterwards is safe.
+    // local data volume (on a cluster you would size it to throughput;
+    // the batch default stays untouched for everything else). The
+    // partition count is pinned into the query's checkpoint at start,
+    // so restoring the conf afterwards is safe.
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    // default 4: measured best for the local replay volumes (8 → 4 cut
-    // ~12% off the stream queries' fixed state-store setup; 2 is flat)
-    spark.conf.set(key,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
+    // 4: measured best for the local replay volumes (8 → 4 cut ~12% off
+    // the stream queries' fixed state-store setup; 2 is flat)
+    spark.conf.set(key, "4")
     val q =
       try out.writeStream
         .outputMode(mode)

@@ -13,7 +13,6 @@ import graft.plans.PlanLint
 class PlanLintSpec extends SparkSpec {
 
   test("plan lint: all registered queries are free of the three scale hazards") {
-    graft.plans.GraftFunctions.register(spark)
     val hits = Seq.newBuilder[PlanLint.Hit]
     val failures = Seq.newBuilder[(String, String)]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

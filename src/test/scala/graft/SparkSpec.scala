@@ -5,16 +5,10 @@ import org.scalatest.{Canceled, Failed, Outcome}
 import org.scalatest.exceptions.TestCanceledException
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared session per suite (lazy; local[4], UTC, ns-parquet shim). */
+/** The production session shape ([[Session]]) at 4 cores, shared by
+  * every suite in the test JVM. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session("graft-spec", cores = 4)
 
   val Sf = "/root/testdata/sf0.001"
 

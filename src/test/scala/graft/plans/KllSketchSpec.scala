@@ -118,7 +118,6 @@ class KllSketchSpec extends SparkSpec {
   }
 
   test("SQL front door: graft_kll_agg/merge/quantile(s) via FunctionRegistry") {
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(23)
     val rows = (1 to 20000).map(i => (i % 13, rng.nextDouble() * 500))
     rows.toDF("d", "v").createOrReplaceTempView("kll_sql_probe")

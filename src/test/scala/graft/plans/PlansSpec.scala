@@ -44,7 +44,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("graft_hamming registered for SQL via GraftFunctions") {
-    GraftFunctions.register(spark)
     val got = spark.sql("SELECT graft_hamming('10110', '10011') AS d")
       .head().getInt(0)
     assert(got == 2)
@@ -125,14 +124,12 @@ class PlansSpec extends SparkSpec {
   }
 
   test("graft_jaro_winkler registered for SQL via GraftFunctions") {
-    GraftFunctions.register(spark)
     val s = spark.sql("SELECT graft_jaro_winkler('MARTHA', 'MARHTA') AS s")
       .head().getDouble(0)
     assert(math.abs(s - 0.9611111111111111) < 1e-12)
   }
 
   test("graft_damerau registered for SQL via GraftFunctions") {
-    GraftFunctions.register(spark)
     assert(spark.sql("SELECT graft_damerau('CA', 'ABC') AS d").head().getInt(0) == 2)
   }
 
@@ -156,7 +153,6 @@ class PlansSpec extends SparkSpec {
     val edge = Seq((Seq(1L), Seq(1L, 2L))).toDF("a", "b")
       .select(LongArrayMath.dot(col("a"), col("b"))).head()
     assert(edge.isNullAt(0))
-    GraftFunctions.register(spark)
     assert(spark.sql("SELECT graft_dot(array(1L,2L), array(3L,4L))")
       .head().getLong(0) == 11L)
     assert(spark.sql("SELECT graft_norm_sq(array(3L,4L))")
@@ -164,9 +160,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("HammingIdentityFold rule removes hamming(x, x) from the plan") {
-    if (!spark.experimental.extraOptimizations.contains(HammingIdentityFold))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ HammingIdentityFold
     val df = Seq("abc", null: String).toDF("x")
       .select(col("x"), StringHammingDistance.hamming(col("x"), col("x")).as("d"))
     assert(!df.queryExecution.optimizedPlan.toString.contains("stringhammingdistance"),
@@ -176,9 +169,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("DotToNormSq rule rewrites dot(a, a) into the single-walk norm") {
-    if (!spark.experimental.extraOptimizations.contains(DotToNormSq))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ DotToNormSq
     // non-literal input: a LocalRelation of literals would constant-fold
     // the whole expression away before the rule can be observed
     val df = spark.range(1)
@@ -361,7 +351,6 @@ class PlansSpec extends SparkSpec {
   }
 
   test("graft_quantize / graft_char_ngrams registered for SQL") {
-    GraftFunctions.register(spark)
     val q = spark.sql(
       "SELECT graft_quantize(array(CAST(0.5 AS FLOAT)), 10000) AS q")
       .as[Seq[Long]].head()
