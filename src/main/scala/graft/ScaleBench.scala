@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Joins, Similarity, TextDedup}
+import graft.operators.{Graphs, Joins, Similarity, TextDedup}
 
 /** Volume-axis stress bench (VERDICT-r5 #2): measures the SCALE-PATH
   * operators against their quadratic baselines on synthetic corpora at
@@ -158,10 +158,9 @@ object ScaleBench {
     */
   private def minLabel4(pairs: DataFrame): DataFrame = {
     // the query's OWN loop (r8-advice: no re-implementation drift)
-    val lab = graft.operators.Graphs.minLabelRounds(
-      pairs.select(col("a").as("u"), col("b").as("v"))
-        .union(pairs.select(col("b").as("u"), col("a").as("v"))), 4)
-    lab.groupBy(col("lbl")).agg(count(lit(1)).as("n"))
+    val lab = Graphs.components(
+      pairs.select(col("a").as("a_id"), col("b").as("b_id")), 4)
+    lab.groupBy(col("comp")).agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("giant"))
   }
 
@@ -261,7 +260,7 @@ object ScaleBench {
         pmod(xxhash64(col("id"), lit(32)), lit(nCcEdges / 4)).as("b_id"))
       chain.unionByName(rand).write.mode("overwrite").parquet(s"$tmp/cc_$m")
       val ccEdges = spark.read.parquet(s"$tmp/cc_$m")
-      record("cc_stars", nCcEdges, () => TextDedup.connectedComponentsStars(ccEdges))
+      record("cc_stars", nCcEdges, () => Graphs.starComponents(ccEdges))
       }
 
       // streaming stateful throughput: drain a synthetic event replay

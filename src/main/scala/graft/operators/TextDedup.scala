@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *     deterministic (no JVM-specific hashCode anywhere).
   *
   * The intended 100 TB flow: LSH candidates → exact Jaccard on candidates
-  * only → connected components/keeper selection.
+  * only → connected components ([[Graphs.components]])/keeper selection.
   */
 object TextDedup {
 
@@ -364,159 +364,6 @@ object TextDedup {
       .select(col("doc_id"), col("fp.fp_hash").as("fp_hash"),
         col("fp.fp_pos").as("fp_pos"))
       .distinct()
-  }
-
-  /** Connected components over an undirected candidate-pair edge list
-    * ((a_id, b_id), as from [[lshCandidates]]/[[jaccardPairs]]): returns
-    * (id, comp) where `comp` is the MINIMUM id in the component — i.e.
-    * the keep-first keeper every other member duplicates.
-    *
-    * Pure-DataFrame iterative min-label propagation: each round, a
-    * node's label becomes the min of its own and its neighbours'; rounds
-    * run until a fixpoint (the labels' sum is monotone non-increasing,
-    * so one cheap agg detects convergence). Near-dup clusters are dense,
-    * so this converges in a handful of rounds; `localCheckpoint`
-    * truncates the growing join lineage each round. At a 1000-executor
-    * scale the same loop holds (shuffles are keyed on id); graphs with
-    * long chains would want the large-star/small-star variant, which
-    * bounds rounds by log(n) instead of the diameter.
-    */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // self-loops appended ONCE: each round's update is then
-    // lbl'(u) = min over N(u) ∪ {u} — a single join + aggregate, where
-    // the previous shape paid a second join to fold the node's own
-    // label back in (the minLabelRounds trick; one join + one exchange
-    // fewer per round, identical label trajectory round-for-round)
-    val nodes = Checkpoints.round(edges
-      .select(col("a_id").cast("long").as("n"))
-      .union(edges.select(col("b_id").cast("long").as("n")))
-      .distinct(), eager = false)
-    val sym = Checkpoints.round(edges
-      .select(col("a_id").cast("long").as("src"), col("b_id").cast("long").as("dst"))
-      .union(edges
-        .select(col("b_id").cast("long").as("src"), col("a_id").cast("long").as("dst")))
-      .union(nodes.select(col("n").as("src"), col("n").as("dst"))),
-      eager = false)
-    // lazy checkpoints: the convergence agg is the round's ONE action
-    // and materializes the checkpoint as a side effect — an eager
-    // checkpoint would run a second job per round just to persist
-    var labels: DataFrame = nodes.select(col("n").as("id"))
-      .withColumn("comp", col("id"))
-    var labelsOwned = false // round 0 is a plain projection over nodes
-    // coalesce: an EMPTY edge list (legitimate — e.g. a density
-    // clustering round with no core-core pairs) sums to NULL, and a
-    // bare getLong would throw ROW_VALUE_IS_NULL
-    def compSum(df: DataFrame): Long =
-      df.agg(coalesce(org.apache.spark.sql.functions.sum("comp"), lit(0L)))
-        .head.getLong(0)
-    var sum = compSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val next = Checkpoints.round(sym
-        .join(labels.select(col("id").as("dst"), col("comp")), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(min(col("comp")).as("comp")),
-        eager = false)
-      val newSum = compSum(next)
-      if (labelsOwned) Checkpoints.free(labels) // next is materialized by the agg
-      labels = next
-      labelsOwned = true
-      converged = newSum == sum
-      sum = newSum
-      iter += 1
-    }
-    Checkpoints.free(sym)
-    if (labelsOwned) Checkpoints.free(nodes) // else labels still reads nodes
-    // The returned frame reads the LAST round's checkpoint blocks (one
-    // small (id, comp) set — O(nodes), not O(rounds)); they are freed by
-    // the session-level sweep between bench/verify queries.
-    labels
-  }
-
-  /** One large-star round (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC '14): every node u links each strictly
-    * LARGER neighbour to the minimum of its closed neighbourhood.
-    * Output edges oriented (big, small).
-    */
-  private[operators] def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.select(col("u"), col("v"))
-      .union(e.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("u"), col("mn")).as("m"))
-    sym.join(mins, Seq("u"))
-      .where(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** One small-star round: every node u links its smaller neighbours
-    * (and itself) to the minimum among them. Input and output edges
-    * oriented (big, small).
-    */
-  private[operators] def smallStar(e: DataFrame): DataFrame = {
-    val mins = e.groupBy(col("u")).agg(min(col("v")).as("m"))
-    e.join(mins, Seq("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .where(col("u") =!= col("v"))
-      .union(mins.select(col("u"), col("m").as("v")))
-      .distinct()
-  }
-
-  /** Connected components by alternating large-star/small-star
-    * contraction — same contract as [[connectedComponents]] ((id, comp)
-    * with comp = component minimum) but rounds bounded by O(log n) on
-    * ANY graph, where plain min-label propagation needs O(diameter)
-    * rounds (a 1000-node chain: ~15 alternations vs 1000 propagation
-    * rounds). Each round is two grouped self-joins keyed on node id —
-    * the same shuffle key throughout, so at 1000-executor scale every
-    * round reuses one partitioning. Convergence = edge-set fixpoint,
-    * detected by a (count, hash-sum) fingerprint in the same action
-    * that materializes the round's checkpoint; superseded checkpoints
-    * are freed eagerly, as in [[connectedComponents]].
-    */
-  def connectedComponentsStars(edges: DataFrame, maxIter: Int = 40): DataFrame = {
-    val raw = edges
-      .select(col("a_id").cast("long").as("u"), col("b_id").cast("long").as("v"))
-    var e = Checkpoints.round(raw.where(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct(), eager = false)
-    // cheap per-round fingerprint: (edge count, hash-sum mod p) — the
-    // mod keeps the ANSI sum from overflowing at any edge count; on a
-    // fingerprint match the fixpoint is CONFIRMED with an exact except
-    // (both sides are materialized checkpoints, so it's one cheap job)
-    def fingerprint(d: DataFrame): (Long, Long) = {
-      val r = d.agg(count(lit(1)),
-        coalesce(org.apache.spark.sql.functions.sum(
-          pmod(xxhash64(col("u"), col("v")), lit(1000000007L))), lit(0L))).head
-      (r.getLong(0), r.getLong(1))
-    }
-    var fp = fingerprint(e)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // lazy: the fingerprint agg is the round's one action and
-      // materializes the checkpoint as a side effect
-      val next = Checkpoints.round(smallStar(largeStar(e)), eager = false)
-      val nfp = fingerprint(next)
-      converged = nfp == fp && next.exceptAll(e).isEmpty
-      Checkpoints.free(e)
-      e = next
-      fp = nfp
-      iter += 1
-    }
-    // At the fixpoint the edge set is a union of stars (u → component
-    // min) and still mentions EVERY input node (minima appear on the v
-    // side) — so labels derive from the final small checkpoint, never
-    // re-running the (expensive) upstream candidate plan. Nodes present
-    // ONLY as self-loops in the input are dropped with the self-loops;
-    // candidate generators (LSH, Jaccard, SimHash) emit a_id < b_id, so
-    // none exist on the documented path.
-    val direct = e.groupBy(col("u").as("id")).agg(min(col("v")).as("comp"))
-    val minima = e.select(col("v").as("id")).distinct()
-      .join(direct.select(col("id")), Seq("id"), "left_anti")
-      .withColumn("comp", col("id"))
-    direct.unionByName(minima)
   }
 
   /** Content-defined chunking by the ASYMMETRIC-EXTREMUM rule (Zhang

@@ -648,7 +648,7 @@ FROM p GROUP BY 1 ORDER BY pct_bucket"""
     * .passJoinCandidates]] — corpus-linear and candidate-complete for
     * edit distance ≤ 2), VERIFY (exact
     * `levenshtein` on blocked pairs only), CLUSTER
-    * ([[TextDedup.connectedComponents]] min-label propagation on the
+    * ([[graft.operators.Graphs.components]] min-label propagation on the
     * match edges). Every record is then assigned to an entity —
     * singletons included, via a left join with `coalesce(comp, id)` —
     * and the canonical record per entity is the component-min id, which
@@ -675,7 +675,7 @@ FROM p GROUP BY 1 ORDER BY pct_bucket"""
         sup.where(length(col("nm")) <= 4), 2)
       .where(least(length(col("a_nm")), length(col("b_nm"))) <= 2)
       .select("a_id", "b_id")
-    // connectedComponents reads its edge input twice (both union
+    // Graphs.components reads its edge input twice (both union
     // branches of the symmetrization) — checkpoint so the PassJoin
     // candidate generation + levenshtein verify run once
     val edges = graft.operators.Checkpoints.round(
@@ -687,7 +687,7 @@ FROM p GROUP BY 1 ORDER BY pct_bucket"""
         .where(levenshtein(col("a_nm"), col("b_nm")) <= 2)
         .select("a_id", "b_id"),
       eager = false) // CC's first convergence agg materializes it
-    val labels = TextDedup.connectedComponents(edges) // (id, comp=min id)
+    val labels = graft.operators.Graphs.components(edges) // (id, comp=min id)
     sup.join(labels, Seq("id"), "left")
       .select(coalesce(col("comp"), col("id")).as("entity_id"))
       .groupBy("entity_id")

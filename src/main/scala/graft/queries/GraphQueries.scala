@@ -1582,14 +1582,15 @@ ORDER BY n_nodes DESC, scc_id"""
     */
   private val RobustRounds = 4
 
-  /** [[RobustRounds]]-round synchronous min-label propagation over a
-    * symmetric (u, v) edge list — the shared
-    * [[graft.operators.Graphs.minLabelRounds]] loop (also the
-    * ScaleBench CC curve, so the curve measures this query's rounds).
-    * Returns (node, lbl).
+  /** [[RobustRounds]]-round synchronous min-label propagation over an
+    * undirected (a, b) pair list — the fixed-round
+    * [[graft.operators.Graphs.components]] loop (also the ScaleBench CC
+    * curve, so the curve measures this query's rounds).
+    * Returns (id, comp).
     */
-  private def minLabelCc(sym0: DataFrame): DataFrame =
-    graft.operators.Graphs.minLabelRounds(sym0, RobustRounds)
+  private def minLabelCc(pairs: DataFrame): DataFrame =
+    Graphs.components(pairs.select(col("a").as("a_id"), col("b").as("b_id")),
+      RobustRounds)
 
   /** Full-co-order-graph min-label component labels, materialized once
     * per dir (the coOrderTriangles / coOrderLpaLabels seam, r7-verdict
@@ -1599,9 +1600,7 @@ ORDER BY n_nodes DESC, scc_id"""
     */
   private def coOrderCcLabels(s: SparkSession, dir: String): DataFrame =
     materialize(s, "coorder_cc4", dir) {
-      val pairs = coOrderPairs(s, dir)
-      minLabelCc(pairs.select(col("a").as("u"), col("b").as("v"))
-        .union(pairs.select(col("b").as("u"), col("a").as("v"))))
+      minLabelCc(coOrderPairs(s, dir))
     }
 
   private def robustness(s: SparkSession, dir: String): DataFrame = {
@@ -1628,10 +1627,8 @@ ORDER BY n_nodes DESC, scc_id"""
       val filtered = pairs
         .join(hubs.select(col("node").as("a")), Seq("a"), "left_anti")
         .join(hubs.select(col("node").as("b")), Seq("b"), "left_anti")
-      val labB = minLabelCc(
-        filtered.select(col("a").as("u"), col("b").as("v"))
-          .union(filtered.select(col("b").as("u"), col("a").as("v"))))
-      def giant(lab: DataFrame): Long = lab.groupBy(col("lbl"))
+      val labB = minLabelCc(filtered)
+      def giant(lab: DataFrame): Long = lab.groupBy(col("comp"))
         .agg(count(lit(1)).as("n"))
         .agg(coalesce(max(col("n")), lit(0L)).as("giant"))
         .as[Long].head()

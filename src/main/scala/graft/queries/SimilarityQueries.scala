@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Similarity, TextDedup}
+import graft.operators.{Graphs, Similarity}
 import Sql.D
 
 /** Similarity-search surface over `embeddings`: brute-force cosine top-k
@@ -415,11 +415,12 @@ scored_cand AS (
       .join(core.select(col("id").as("a_id")), Seq("a_id"), "left_semi")
       .join(core.select(col("id").as("b_id")), Seq("b_id"), "left_semi")
     // min-label propagation: rounds track the core-graph DIAMETER,
-    // which minPts >= 4 keeps small (dense cores, no 2-chains); for an
-    // adversarially chained core graph swap in the O(log n)
-    // connectedComponentsStars — measured here, stars' extra per-round
-    // shuffles cost more than the diameter saves (2.4 s vs 4.3 s)
-    val comp = TextDedup.connectedComponents(coreEdges)
+    // which minPts >= 4 keeps small (dense cores, no 2-chains); an
+    // adversarially chained core graph finishes by star contraction
+    // past the propagation cap. Stars from the start measured slower
+    // here: their extra per-round shuffles cost more than the diameter
+    // saves (2.4 s vs 4.3 s)
+    val comp = Graphs.components(coreEdges)
     // (id, cluster) over core points is read by THREE consumers (both
     // border join sides + the core role rows) — checkpoint it once
     // instead of re-running the degree groupBy + label join per use

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.TextDedup
+import graft.operators.{Graphs, TextDedup}
 import Sql.D
 
 /** Text-analysis + deduplication surface over `documents` (the LLM-data-
@@ -690,22 +690,24 @@ ORDER BY doc_id, fp_pos, fp_hash"""
   // --- dedup clusters: LSH candidates → connected components --------
   private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val cand = lshCand3(s, dir)
-    TextDedup.connectedComponents(cand)
+    Graphs.components(cand)
       .groupBy(col("comp").as("comp_id"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy("comp_id")
   }
 
-  /** As [[dedupClusters]] but resolving components with the
-    * O(log n)-round large-star/small-star contraction instead of
-    * min-label propagation — identical output (comp = component min),
-    * so it shares the recursive-CTE oracle. The scale pick: propagation
-    * wins on dense low-diameter near-dup clusters (fewer jobs/round),
-    * contraction wins when the candidate graph may contain long chains.
+  /** As [[dedupClusters]] but resolving components with
+    * [[Graphs.starComponents]], the O(log n)-round large-star/small-star
+    * contraction, from the first round — identical output
+    * (comp = component min), so it shares the recursive-CTE oracle.
+    * Propagation wins on dense low-diameter near-dup clusters (fewer
+    * jobs/round), contraction when the candidate graph holds long
+    * chains; [[Graphs.components]] itself switches to contraction once
+    * propagation passes its round cap.
     */
   private def dedupClustersStars(s: SparkSession, dir: String): DataFrame = {
     val cand = lshCand3(s, dir)
-    TextDedup.connectedComponentsStars(cand)
+    Graphs.starComponents(cand)
       .groupBy(col("comp").as("comp_id"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy("comp_id")
@@ -756,7 +758,7 @@ FROM labels GROUP BY comp ORDER BY comp_id"""
     val cand = lshCand3(s, dir)
     val toks = docs.select(col("doc_id").as("id"),
       TextFunctions.tokenCount(col("text")).cast("long").as("toks"))
-    TextDedup.connectedComponents(cand)
+    Graphs.components(cand)
       .join(toks, Seq("id"))
       .groupBy(col("comp").as("comp_id"))
       .agg(count(lit(1)).as("n_members"),

@@ -70,17 +70,16 @@ class PlanSpec extends SparkSpec {
     import graft.operators.Similarity
     // AQE's wrapper node hides the join subtree from collect(); the
     // static plan is what we want to assert on anyway
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val emb = Tables(spark, Sf, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val df = Similarity.lshCandidates(emb, Similarity.planes(16, 64), 4, 4, 0.25)
-    // the band self-join inputs must project (id, band, bkey) only; the
-    // quantized vectors re-enter later via the id-equi fetch joins
-    val joins =
-      try df.queryExecution.executedPlan.collect {
+    val joins = withConf("spark.sql.adaptive.enabled" -> "false") {
+      val emb = Tables(spark, Sf, "embeddings")
+        .select(col("vec_id").as("id"), col("embedding").as("vec"))
+      val df = Similarity.lshCandidates(emb, Similarity.planes(16, 64), 4, 4, 0.25)
+      // the band self-join inputs must project (id, band, bkey) only; the
+      // quantized vectors re-enter later via the id-equi fetch joins
+      df.queryExecution.executedPlan.collect {
         case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
       }
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     val bandJoin = joins.find(_.leftKeys.length == 2).get // (band, bkey)
     val carried = bandJoin.left.output ++ bandJoin.right.output
     assert(carried.forall(a => !a.dataType.typeName.startsWith("array")),
@@ -345,13 +344,10 @@ class PlanSpec extends SparkSpec {
     // trigger; at sf0.01 the application side must be allowed to be
     // small. Broadcast is disabled to force the shuffle-join shape
     // this optimization exists for.
-    val confs = Seq(
+    withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
       val l = Tables(spark, Sf, "lineitem")
       val o = Tables(spark, Sf, "orders").where(col("o_orderpriority") === "1-URGENT")
       val df = l.join(o, col("l_orderkey") === col("o_orderkey"))
@@ -359,9 +355,6 @@ class PlanSpec extends SparkSpec {
       val plan = planOf(df)
       assert(plan.contains("might_contain"),
         s"bloom runtime filter must reach the lineitem side:\n${plan.take(2000)}")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -34,21 +34,14 @@ class JoinsSpec extends SparkSpec {
     // splits only partitions that actually skewed, zero code change).
     // Same 90%-hot-key shape as the saltedJoin spec above, thresholds
     // scaled down to local data volumes.
-    val keys = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    // getOption-style: a conf whose default is unset/null (e.g. the
-    // adaptive broadcast threshold falls back to the non-adaptive one)
-    // must be restored by UNSETTING, not by set(null)
-    val saved = keys.map { case (k, _) =>
-      k -> scala.util.Try(spark.conf.get(k)).toOption.filter(_ != null) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val left = spark.range(0, 200000).select(
         when(pmod(col("id"), lit(10)) =!= 0, lit(7L))
           .otherwise(col("id")).as("k"),
@@ -63,9 +56,6 @@ class JoinsSpec extends SparkSpec {
       val plan = agg.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE must mark the hot partition's join as skew-split:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -171,11 +161,9 @@ class JoinsSpec extends SparkSpec {
       .select("l_orderkey", "l_quantity")
     Joins.writeBucketed(orders, "b_orders", "o_orderkey", 8, s"$wh/o")
     Joins.writeBucketed(lineitem, "b_lineitem", "l_orderkey", 8, s"$wh/l")
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // sf0.001 tables are broadcast-size; force the shuffle-join path the
     // bucketing exists to optimize
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("b_lineitem").join(spark.table("b_orders"),
         col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_custkey").agg(sum("l_quantity").as("q"))
@@ -192,7 +180,6 @@ class JoinsSpec extends SparkSpec {
         .as[(Long, Double)].collect().toMap
       assert(viaBuckets == plain)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }

@@ -147,12 +147,21 @@ class OperatorsSpec extends SparkSpec {
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L), (15L, 16L),
       (20L, 21L), (21L, 22L), (20L, 22L),
       (30L, 31L)).toDF("a_id", "b_id")
-    val comps = TextDedup.connectedComponents(edges)
+    val comps = Graphs.components(edges)
       .as[(Long, Long)].collect().toMap
     assert((10L to 16L).forall(comps(_) == 10L), s"path: $comps")
     assert((20L to 22L).forall(comps(_) == 20L), s"triangle: $comps")
     assert(comps(30L) == 30L && comps(31L) == 30L, s"pair: $comps")
     assert(comps.size == 12)
+  }
+
+  test("components: ids near Long.MaxValue cannot overflow the fixpoint test") {
+    // the four round-0 labels sum to 1.8e19 > Long.MaxValue (9.2e18):
+    // a long sum throws ARITHMETIC_OVERFLOW under ANSI
+    val (a, b) = (4000000000000000000L, 5000000000000000000L)
+    val edges = Seq((a, a + 1), (b, b + 1)).toDF("a_id", "b_id")
+    val comps = Graphs.components(edges).as[(Long, Long)].collect().toMap
+    assert(comps == Map(a -> a, (a + 1) -> a, b -> b, (b + 1) -> b))
   }
 
   test("star-contraction CC matches label propagation; converges on a 1000-node chain") {
@@ -161,21 +170,23 @@ class OperatorsSpec extends SparkSpec {
       (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L), (15L, 16L),
       (20L, 21L), (21L, 22L), (20L, 22L),
       (30L, 31L)).toDF("a_id", "b_id")
-    val stars = TextDedup.connectedComponentsStars(edges)
+    val stars = Graphs.starComponents(edges)
       .as[(Long, Long)].collect().toMap
-    val prop = TextDedup.connectedComponents(edges)
+    val prop = Graphs.components(edges)
       .as[(Long, Long)].collect().toMap
     assert(stars == prop, s"stars=$stars prop=$prop")
 
     // a 1000-node chain has diameter 999: label propagation needs ~999
-    // rounds, star contraction must finish in O(log n) alternations —
-    // maxIter = 20 would leave a plain propagation nowhere near done
+    // rounds, star contraction must finish in O(log n) alternations;
+    // components() stops propagating at its cap and contracts the rest
     val chain = (0L until 999L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val chainComps = TextDedup.connectedComponentsStars(chain, maxIter = 20)
-      .as[(Long, Long)].collect()
-    assert(chainComps.length == 1000)
-    assert(chainComps.forall(_._2 == 0L),
-      s"chain not contracted: ${chainComps.filter(_._2 != 0L).take(5).toSeq}")
+    for ((name, cc) <- Seq("stars" -> Graphs.starComponents(chain),
+        "components" -> Graphs.components(chain))) {
+      val got = cc.as[(Long, Long)].collect()
+      assert(got.length == 1000, name)
+      assert(got.forall(_._2 == 0L),
+        s"$name: chain not contracted: ${got.filter(_._2 != 0L).take(5).toSeq}")
+    }
   }
 
   test("winnowing chunking is invisible: multi-MB doc, many chunks, same fingerprints") {

@@ -4,11 +4,11 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkSpec
 
-/** Properties for the shared iterative graph loops extracted in round 9
+/** Properties for the shared iterative graph loops
   * ([[Graphs.trussPeelStats]] with its fixpoint early-exit, and
-  * [[Graphs.minLabelRounds]]): each is pinned against a naive
-  * driver-side recomputation on random graphs, so the delta/early-exit
-  * optimizations can never drift from the definition.
+  * [[Graphs.components]] under both stopping rules): each is pinned
+  * against a naive driver-side recomputation on random graphs, so the
+  * delta/early-exit/fallback paths can never drift from the definition.
   */
 class TrussPeelSpec extends SparkSpec {
   import spark.implicits._
@@ -94,29 +94,59 @@ class TrussPeelSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  test("minLabelRounds reaches the connected-components fixpoint (ScalaCheck)") {
-    val prop = Prop.forAll(genEdges.suchThat(_.nonEmpty)) { edges =>
-      val sym = edges.toSeq.toDF("u", "v")
-        .union(edges.toSeq.map(_.swap).toDF("u", "v"))
-      // enough rounds to cover any diameter at n <= 14
-      val got = Graphs.minLabelRounds(sym, 14)
-        .as[(Long, Long)].collect().toMap
-      // driver-side union-find reference
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2))
-      val want = nodes.map(n => n -> find(n)).toMap
-      Prop(got == want) :| s"got=$got want=$want"
+  /** A `len`-node path from `from`: longer than the propagation cap at
+    * len = 40, so a fixpoint run must finish by star contraction. */
+  private def path(from: Long, len: Int): Set[(Long, Long)] =
+    (0 until len - 1).map(i => (from + i, from + i + 1)).toSet
+
+  /** Driver-side union-find: every node to its component minimum. */
+  private def unionFind(edges: Set[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).map(n => n -> find(n)).toMap
+  }
+
+  /** Driver-side synchronous min-label rounds: lbl'(u) = min over
+    * N(u) ∪ {u}, `rounds` times. */
+  private def minLabels(edges: Set[(Long, Long)], rounds: Int): Map[Long, Long] = {
+    val adj = edges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    (1 to rounds).foldLeft(adj.keys.map(n => n -> n).toMap) { (lbl, _) =>
+      lbl.map { case (n, l) => n -> (l +: adj(n).map(lbl)).min }
+    }
+  }
+
+  test("components: fixpoint and fixed rounds vs union-find (ScalaCheck)") {
+    def mismatch(edges: Set[(Long, Long)]): Option[String] = {
+      val df = edges.toSeq.toDF("a_id", "b_id")
+      val fix = Graphs.components(df).as[(Long, Long)].collect().toMap
+      val four = Graphs.components(df, 4).as[(Long, Long)].collect().toMap
+      val (wantFix, wantFour) = (unionFind(edges), minLabels(edges, 4))
+      if (fix == wantFix && four == wantFour) None
+      else Some(s"fixpoint got=$fix want=$wantFix; " +
+        s"4 rounds got=$four want=$wantFour")
+    }
+    // half the random graphs carry a disjoint 40-node path
+    val graphs = for {
+      e <- genEdges.suchThat(_.nonEmpty)
+      len <- Gen.oneOf(0, 40)
+    } yield e ++ path(100L, len)
+    val prop = Prop.forAllNoShrink(graphs) { edges =>
+      val m = mismatch(edges)
+      Prop(m.isEmpty) :| m.getOrElse("")
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(res.passed, res.status.toString)
+    // and the path alone, whatever the generator drew
+    val alone = mismatch(path(0L, 40))
+    assert(alone.isEmpty, alone.getOrElse(""))
   }
 }
