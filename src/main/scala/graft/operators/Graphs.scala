@@ -111,82 +111,36 @@ object Graphs {
     }
   }
 
-  /** Exact global triangle / wedge census via degree-ordered wedge
-    * join. Input edges are undirected, stored once with `a < b`
-    * (dedup'd). Returns one row: n_nodes, n_edges, n_wedges,
-    * n_triangles, and the global clustering coefficient
-    * 3·T / W (a single deterministic double division of two exact
-    * longs — no float accumulation).
+  /** Exact global triangle / wedge census of an undirected edge list
+    * (any orientation, duplicates and self-loops allowed): the
+    * [[triangleCensusOf]] readout over its canonical edges and their
+    * [[triangleTriples]].
     */
   def triangleCensus(pairs: DataFrame): DataFrame = {
-    // the canonical edge list feeds THREE consumers (degrees, the
-    // orientation join, the closing-edge semi-join): materialize it
-    // once — rebuilding it tripled the wall time when `pairs` is itself
-    // a join (e.g. the market-basket co-order graph)
-    val p = pairs.toDF("a", "b").where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .persist()
-    val deg = p.select(col("a").as("v")).unionAll(p.select(col("b").as("v")))
+    val p = canonicalEdges(pairs)
+    triangleCensusOf(p, triangleTriples(p))
+  }
+
+  /** One row: n_nodes, n_edges, n_wedges, n_triangles, and the global
+    * clustering coefficient 3·T / W (a single deterministic double
+    * division of two exact longs — no float accumulation). `edges` is
+    * canonical (a < b, distinct); `triples` holds each of its
+    * triangles once ([[triangleTriples]]), so a caller that shares a
+    * materialized triple table pays no wedge join here.
+    */
+  def triangleCensusOf(edges: DataFrame, triples: DataFrame): DataFrame = {
+    val deg = edges.select(col("a").as("v"))
+      .unionAll(edges.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    // orient each edge toward the higher (deg, id) endpoint
-    val da = deg.select(col("v").as("a"), col("deg").as("deg_a"))
-    val db = deg.select(col("v").as("b"), col("deg").as("deg_b"))
-    val oriented = p.join(da, "a").join(db, "b")
-      .select(
-        when(col("deg_a") < col("deg_b") ||
-          (col("deg_a") === col("deg_b") && col("a") < col("b")),
-          struct(col("a").as("u"), col("b").as("t")))
-          .otherwise(struct(col("b").as("u"), col("a").as("t"))).as("e"))
-      .select(col("e.u").as("u"), col("e.t").as("t"))
-      .persist()
-    val nEdges = oriented.count()
-    try {
-      // wedges at u: unordered out-neighbor pairs; close with any edge
-      val o1 = oriented.select(col("u"), col("t").as("x"))
-      val o2 = oriented.select(col("u"), col("t").as("y"))
-      val wedgePairs = o1.join(o2, "u").where(col("x") < col("y"))
-      val closing = p.select(col("a").as("x"), col("b").as("y"))
-      // the wedge set is ~Σ C(outdeg,2) — orders of magnitude larger
-      // than E. Shuffling ALL wedges into the closing-edge semi-join is
-      // the bottleneck, so prefilter with a bloom over the edge keys
-      // (~1.2 bytes/edge at 1% fpp): survivors ≈ triangles + 1% of
-      // wedges, a ~10-50× shuffle cut before the exact semi-join. The
-      // filter is injected as a SCALAR SUBQUERY — built on the cluster,
-      // shipped once with the stage's task binary — never collected to
-      // the driver or embedded as a plan literal (a 1e8-edge filter is
-      // ~150 MB; a literal that size is copied through every optimizer
-      // pass). Bits are capped at 2^28 (32 MB serialized): past ~22M
-      // edges the fpp degrades gracefully instead of the memory
-      // growing, and past the 1e8-edge guard fall back to the plain
-      // shuffle (a cluster would use Spark's runtime bloom join
-      // injection there instead).
-      val candidates =
-        if (nEdges > 0 && nEdges <= 100000000L) {
-          val bits = math.min(math.max(1L << 16, 12L * nEdges), 1L << 28)
-          val bf = p.select(xxhash64(col("a"), col("b")).as("h"))
-            .agg(graft.plans.BloomFilters.bloomAgg(col("h"), nEdges, bits))
-          wedgePairs.where(graft.plans.BloomFilters.mightContain(
-            bf.scalar(), xxhash64(col("x"), col("y"))))
-        } else wedgePairs
-      val nTri = candidates.join(closing, Seq("x", "y"), "left_semi")
-        .agg(count(lit(1)).as("n_triangles"))
-      // wedge census over the UNDIRECTED degree: sum C(deg, 2)
-      val census = deg.agg(
-        count(lit(1)).as("n_nodes"),
-        expr("sum(deg) div 2").as("n_edges"),
-        sum(expr("deg * (deg - 1) div 2")).as("n_wedges"))
-      census.crossJoin(nTri)
-        .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
-          col("n_triangles"),
-          (lit(3.0) * col("n_triangles") / col("n_wedges"))
-            .as("clustering"))
-        .localCheckpoint(eager = true) // 1 row; frees the caches safely
-    } finally {
-      oriented.unpersist(blocking = false)
-      p.unpersist(blocking = false)
-    }
+    // wedge census over the UNDIRECTED degree: sum C(deg, 2)
+    val census = deg.agg(
+      count(lit(1)).as("n_nodes"),
+      expr("sum(deg) div 2").as("n_edges"),
+      sum(expr("deg * (deg - 1) div 2")).as("n_wedges"))
+    census.crossJoin(triples.agg(count(lit(1)).as("n_triangles")))
+      .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
+        col("n_triangles"),
+        (lit(3.0) * col("n_triangles") / col("n_wedges")).as("clustering"))
   }
 
   /** HITS hubs & authorities in fixed-point micro-units (integer-exact).
@@ -257,24 +211,32 @@ object Graphs {
     }
   }
 
+  /** An undirected edge list as (a, b) with a < b, each edge once. */
+  private def canonicalEdges(pairs: DataFrame): DataFrame =
+    pairs.toDF("a", "b").where(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b"))
+      .distinct()
+
   /** Every triangle exactly once, as its (u, x, y) corner triple —
     * the degree-ordered wedge enumeration shared by the census, the
     * per-node counts, and any consumer that wants the triangles
     * themselves (motif features, closure sampling). Orientation bounds
     * every out-degree at O(√E) so the wedge join cannot explode on
-    * hubs; the closing-edge match is an equi-join on (x, y) behind the
-    * same scalar-subquery bloom prefilter as [[triangleCensus]].
-    * Eagerly checkpointed: the internal persists are released before
-    * return, so the result must not re-derive from them.
+    * hubs; the closing-edge match is an equi-join on (x, y) behind a
+    * bloom prefilter. Eagerly checkpointed: the internal persists are
+    * released before return, so the result must not re-derive from
+    * them.
     */
   def triangleTriples(pairs: DataFrame): DataFrame = {
-    val p = pairs.toDF("a", "b").where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .persist()
+    // the canonical edge list feeds THREE consumers (degrees, the
+    // orientation join, the closing-edge join): materialize it once —
+    // rebuilding it tripled the wall time when `pairs` is itself a join
+    // (e.g. the market-basket co-order graph)
+    val p = canonicalEdges(pairs).persist()
     val deg = p.select(col("a").as("v")).unionAll(p.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+    // orient each edge toward the higher (deg, id) endpoint
     val da = deg.select(col("v").as("a"), col("deg").as("deg_a"))
     val db = deg.select(col("v").as("b"), col("deg").as("deg_b"))
     val oriented = p.join(da, "a").join(db, "b")
@@ -287,14 +249,24 @@ object Graphs {
       .persist()
     val nEdges = oriented.count()
     try {
+      // wedges at u: unordered out-neighbor pairs; close with any edge
       val o1 = oriented.select(col("u"), col("t").as("x"))
       val o2 = oriented.select(col("u"), col("t").as("y"))
       val wedgesAll = o1.join(o2, "u").where(col("x") < col("y"))
       val closing = p.select(col("a").as("x"), col("b").as("y"))
-      // same bloom prefilter as triangleCensus — scalar-subquery
-      // injection, 2^28-bit cap (see the census scaladoc): cut the
-      // wedge shuffle to ~triangles + 1% of wedges before the exact
-      // join without a driver collect or a plan-literal filter
+      // the wedge set is ~Σ C(outdeg,2) — orders of magnitude larger
+      // than E. Shuffling ALL wedges into the closing-edge join is the
+      // bottleneck, so prefilter with a bloom over the edge keys
+      // (~1.2 bytes/edge at 1% fpp): survivors ≈ triangles + 1% of
+      // wedges, a ~10-50× shuffle cut before the exact join. The
+      // filter is injected as a SCALAR SUBQUERY — built on the cluster,
+      // shipped once with the stage's task binary — never collected or
+      // embedded as a plan literal (a 1e8-edge filter is ~150 MB; a
+      // literal that size is copied through every optimizer pass).
+      // Bits are capped at 2^28 (32 MB serialized): past ~22M edges the
+      // fpp degrades gracefully instead of the memory growing, and past
+      // the 1e8-edge guard fall back to the plain shuffle (a cluster
+      // would use Spark's runtime bloom join injection there instead).
       val wedges =
         if (nEdges > 0 && nEdges <= 100000000L) {
           val bits = math.min(math.max(1L << 16, 12L * nEdges), 1L << 28)

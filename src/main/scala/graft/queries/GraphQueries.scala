@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Checkpoints, Graphs}
+import graft.util.Scratch
 import Sql.D
 
 /** Graph analytics over graphs DERIVED from the test tables — a user
@@ -18,14 +19,94 @@ object GraphQueries {
 
   private val kExpr = """"k"\s*:\s*(\d+)"""
 
-  /** [[Graphs.pageRank]] over the per-user `k`-value transition graph:
-    * nodes are the ~100 distinct `props.k` values, edges the
-    * consecutive-event transitions within each user's timeline
-    * (total-ordered by (ts, event_id)). 5 iterations of the
-    * fixed-point micro-unit update; top 20 nodes. Every division is an
-    * integer floor division, so the oracle's unrolled CTE chain
-    * reproduces the exact longs.
-    */
+  // --- oracle preludes: one per materialized graph input ---------------
+  // Each prelude is the DuckDB twin of a shared Spark input below
+  // (kEdges/kNodes, coOrderLi, coOrderPairs, coOrderLpaLabels,
+  // coOrderTriangles), written once and interpolated into every oracle
+  // that reads it, so an input cannot drift between oracles. All are
+  // `def`s: a `val` interpolated above its declaration reads null.
+  // DuckDB 1.0 inlines every plain CTE reference but computes every
+  // MATERIALIZED CTE even when nothing references it, so only the
+  // co-order `li`/`p` (each consumer reads them, most several times)
+  // and the LPA rounds and triangles (whose consumers all read them)
+  // are MATERIALIZED.
+
+  /** `ek` (user_id, ts, event_id, k per event) and `seq` (src, dst:
+    * each event's k and the user's next k, timeline total-ordered by
+    * (ts, event_id)) — the transition sequence behind [[kEdges]]. */
+  private def kSeqCtes: String = s"""ek AS (
+  SELECT user_id, ts, event_id,
+    CAST(regexp_extract(props, '$kExpr', 1) AS BIGINT) AS k
+  FROM events
+), seq AS (
+  SELECT k AS src,
+    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
+  FROM ek
+)"""
+
+  /** [[kSeqCtes]] plus `edges` (src, dst, w — the [[kEdges]] twin),
+    * `outw` (src, w_out), `e` (edges with w_out) and `nodes` (node —
+    * the [[kNodes]] twin). */
+  private def kGraphCtes: String = s"""$kSeqCtes, edges AS (
+  SELECT src, dst, COUNT(*) AS w FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2
+), outw AS (
+  SELECT src, CAST(SUM(w) AS BIGINT) AS w_out FROM edges GROUP BY 1
+), e AS (
+  SELECT edges.src, edges.dst, edges.w, outw.w_out
+  FROM edges JOIN outw ON edges.src = outw.src
+), nodes AS (
+  SELECT DISTINCT k AS node FROM ek
+)"""
+
+  /** `li` (ok, pk) — the [[coOrderLi]] twin. */
+  private def coOrderLiCte: String = """li AS MATERIALIZED (
+  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
+)"""
+
+  /** `li` plus `p` (a < b — the [[coOrderPairs]] twin), its
+    * symmetrization `sym` (u, v) and the degrees `deg` (node, deg). */
+  private def coOrderCtes: String = s"""$coOrderLiCte, p AS MATERIALIZED (
+  SELECT DISTINCT a.pk AS a, b.pk AS b
+  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
+), sym AS (
+  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p
+), deg AS (
+  SELECT node, COUNT(*) AS deg FROM (
+    SELECT a AS node FROM p UNION ALL SELECT b FROM p) GROUP BY 1
+)"""
+
+  /** [[coOrderCtes]] plus the 3 synchronous LPA rounds `l1`..`l3`
+    * (node, lbl; `l3` is the [[coOrderLpaLabels]] twin): each node
+    * takes its neighbors' most frequent label, ties to the smallest. */
+  private def lpaCtes: String = {
+    val rounds = (1 to 3).map { i =>
+      s"""c$i AS (
+  SELECT s.u, l.lbl, COUNT(*) AS c
+  FROM sym s JOIN l${i - 1} l ON s.v = l.node GROUP BY 1, 2
+), l$i AS MATERIALIZED (
+  SELECT u AS node, lbl FROM c$i
+  QUALIFY ROW_NUMBER() OVER (PARTITION BY u ORDER BY c DESC, lbl) = 1
+)"""
+    }.mkString(",\n")
+    s"""$coOrderCtes, l0 AS (
+  SELECT DISTINCT u AS node, u AS lbl FROM sym
+),
+$rounds"""
+  }
+
+  /** [[coOrderCtes]] plus every triangle once as `tri` (u < x < y — the
+    * [[coOrderTriangles]] twin) and the per-node triangle counts `cnt`
+    * (node, n_tri). */
+  private def triCtes: String = s"""$coOrderCtes, tri AS MATERIALIZED (
+  SELECT e1.a AS u, e1.b AS x, e2.b AS y
+  FROM p e1 JOIN p e2 ON e1.b = e2.a
+    JOIN p e3 ON e3.a = e1.a AND e3.b = e2.b
+), cnt AS (
+  SELECT node, COUNT(*) AS n_tri FROM (
+    SELECT u AS node FROM tri UNION ALL SELECT x FROM tri
+    UNION ALL SELECT y FROM tri) GROUP BY 1
+)"""
+
   /** Stationary distribution of the k-transition Markov chain by
     * 5 synchronous power-iteration steps π' = πP from uniform mass —
     * the long-run occupancy the one-step views (`g_markov_accuracy`
@@ -65,24 +146,7 @@ object GraphQueries {
     FROM e JOIN r${i - 1} r ON r.node = e.src GROUP BY e.dst) t
   ON t.dst = n.node)"""
     }.mkString(",\n")
-    s"""WITH ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\\s*:\\s*(\\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), edges AS (
-  SELECT src, dst, COUNT(*) AS w FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2
-), outw AS (
-  SELECT src, CAST(SUM(w) AS BIGINT) AS w_out FROM edges GROUP BY 1
-), e AS (
-  SELECT edges.src, edges.dst, edges.w, outw.w_out
-  FROM edges JOIN outw ON edges.src = outw.src
-), nodes AS (
-  SELECT DISTINCT k AS node FROM ek
-), r0 AS (
+    s"""WITH $kGraphCtes, r0 AS (
   SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes
 ),
 $iters
@@ -90,6 +154,14 @@ SELECT node, CAST(r AS BIGINT) AS pi_micro FROM r5
 ORDER BY pi_micro DESC, node LIMIT 20"""
   }
 
+  /** [[Graphs.pageRank]] over the per-user `k`-value transition graph:
+    * nodes are the ~100 distinct `props.k` values, edges the
+    * consecutive-event transitions within each user's timeline
+    * (total-ordered by (ts, event_id)). 5 iterations of the
+    * fixed-point micro-unit update; top 20 nodes. Every division is an
+    * integer floor division, so the oracle's unrolled CTE chain
+    * reproduces the exact longs.
+    */
   private def pagerank(s: SparkSession, dir: String): DataFrame = {
     Graphs.pageRank(kEdges(s, dir), kNodes(s, dir), 5)
       .orderBy(col("rank_micro").desc, col("node"))
@@ -105,24 +177,7 @@ ORDER BY pi_micro DESC, node LIMIT 20"""
     FROM e JOIN r${i - 1} r ON r.node = e.src GROUP BY e.dst) t
   ON t.dst = n.node)"""
     }.mkString(",\n")
-    s"""WITH ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\\s*:\\s*(\\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), edges AS (
-  SELECT src, dst, COUNT(*) AS w FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2
-), outw AS (
-  SELECT src, CAST(SUM(w) AS BIGINT) AS w_out FROM edges GROUP BY 1
-), e AS (
-  SELECT edges.src, edges.dst, edges.w, outw.w_out
-  FROM edges JOIN outw ON edges.src = outw.src
-), nodes AS (
-  SELECT DISTINCT k AS node FROM ek
-), r0 AS (
+    s"""WITH $kGraphCtes, r0 AS (
   SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes
 ),
 $iters
@@ -159,24 +214,7 @@ ORDER BY rank_micro DESC, node LIMIT 20"""
     FROM e JOIN p${i - 1} r ON r.node = e.src GROUP BY e.dst) t
   ON t.dst = n.node)"""
     }.mkString(",\n")
-    s"""WITH ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\\s*:\\s*(\\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), edges AS (
-  SELECT src, dst, COUNT(*) AS w FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2
-), outw AS (
-  SELECT src, CAST(SUM(w) AS BIGINT) AS w_out FROM edges GROUP BY 1
-), e AS (
-  SELECT edges.src, edges.dst, edges.w, outw.w_out
-  FROM edges JOIN outw ON edges.src = outw.src
-), nodes AS (
-  SELECT DISTINCT k AS node FROM ek
-), p0 AS (
+    s"""WITH $kGraphCtes, p0 AS (
   SELECT node,
     CAST(CASE WHEN node % 10 = 0 THEN 1000000 ELSE 0 END AS BIGINT) AS r
   FROM nodes
@@ -187,52 +225,27 @@ WHERE r > 0
 ORDER BY rank_micro DESC, node LIMIT 20"""
   }
 
-  /** [[Graphs.triangleCensus]] over the market-basket graph: parts are
+  /** [[Graphs.triangleCensusOf]] over the market-basket graph: parts are
     * nodes, an (undirected) edge links two parts that appear in the
     * same order at least once. Triangle + wedge census and the global
     * clustering coefficient — the degree-ordered wedge join on the
     * Spark side must produce the exact count of the oracle's naive
     * a<b<c 3-way self-join.
     */
-  private def triangles(s: SparkSession, dir: String): DataFrame = {
-    // same census readout as Graphs.triangleCensus, with the triangle
-    // count read from the shared materialized triple table — the wedge
-    // join runs once per dir for the whole g_* family
-    val p = coOrderPairs(s, dir)
-    val deg = p.select(col("a").as("v")).unionAll(p.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val census = deg.agg(
-      count(lit(1)).as("n_nodes"),
-      expr("sum(deg) div 2").as("n_edges"),
-      sum(expr("deg * (deg - 1) div 2")).as("n_wedges"))
-    census.crossJoin(
-        coOrderTriangles(s, dir).agg(count(lit(1)).as("n_triangles")))
-      .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
-        col("n_triangles"),
-        (lit(3.0) * col("n_triangles") / col("n_wedges")).as("clustering"))
-  }
+  private def triangles(s: SparkSession, dir: String): DataFrame =
+    // the triangle count comes from the shared materialized triple
+    // table: the wedge join runs once per dir for the whole g_* family
+    Graphs.triangleCensusOf(coOrderPairs(s, dir), coOrderTriangles(s, dir))
 
-  private val trianglesOracle = s"""WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), deg AS (
-  SELECT v, COUNT(*) AS deg FROM (
-    SELECT a AS v FROM p UNION ALL SELECT b AS v FROM p) GROUP BY 1
-), tri AS (
-  SELECT COUNT(*) AS n_triangles
-  FROM p e1 JOIN p e2 ON e1.b = e2.a
-    JOIN p e3 ON e3.a = e1.a AND e3.b = e2.b
-), agg AS (
+  private val trianglesOracle = s"""WITH $triCtes, agg AS (
   SELECT COUNT(*) AS n_nodes,
     CAST(SUM(deg) AS BIGINT) // 2 AS n_edges,
     CAST(SUM(deg * (deg - 1) // 2) AS BIGINT) AS n_wedges
   FROM deg
-)
+), t AS (SELECT COUNT(*) AS n_triangles FROM tri)
 SELECT n_nodes, n_edges, n_wedges, n_triangles,
   CAST(3 AS DOUBLE) * n_triangles / n_wedges AS clustering
-FROM agg, tri"""
+FROM agg, t"""
 
   /** Association rules over the same market-basket pairs: support /
     * lift for co-ordered part pairs. All counts are exact integers;
@@ -263,9 +276,7 @@ FROM agg, tri"""
       .limit(15)
   }
 
-  private val assocRulesOracle = """WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), n AS (
+  private val assocRulesOracle = s"""WITH $coOrderLiCte, n AS (
   SELECT COUNT(DISTINCT ok) AS n_orders FROM li
 ), items AS (
   SELECT pk, COUNT(*) AS n_item FROM li GROUP BY 1
@@ -280,46 +291,10 @@ SELECT a, b, n_ab, ia.n_item AS n_a, ib.n_item AS n_b, n_orders,
 FROM pairs JOIN items ia ON a = ia.pk JOIN items ib ON b = ib.pk, n
 ORDER BY lift DESC, a, b LIMIT 15"""
 
-  // --- label propagation communities (3 synchronous rounds) -----------
-  /** Community detection by synchronous label propagation over the part
-    * co-order graph: labels start as node ids; each round every node
-    * adopts its neighbors' most frequent label, ties to the SMALLEST
-    * label (one max-of-struct (count, −label) aggregate — map-side
-    * combinable, no per-node window). Exactly 3 rounds, so the result
-    * is deterministic — classic async LPA is run-order dependent, which
-    * an oracle-graded engine cannot be. Per round: one shuffle join of
-    * edges onto labels + two aggregations; the oracle unrolls the same
-    * 3 rounds as chained CTEs with the identical tie rule. Output is
-    * the community-size histogram.
-    */
-  /** One materialization per (artifact, data dir) per JVM: the derived
-    * graph inputs every `g_*` query shares are computed ONCE, written
-    * to scratch parquet, and re-read thereafter — five queries no
-    * longer each pay the DISTINCT lineitem self-join. Path-keyed (not
-    * session-keyed), so it survives session swaps and the bench's
-    * between-rep cache sweeps; this is the production shape too — a
-    * pipeline running a family of graph analyses materializes the edge
-    * list once and fans out.
-    */
-  private val materialized =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private def materialize(s: SparkSession, key: String, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val path = materialized.synchronized {
-      materialized.getOrElseUpdate((key, dir), {
-        val p = graft.util.Scratch.dir(s"graft_$key") + "/data"
-        build.write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
-
   /** Distinct (order, part) incidence — the market-basket input shared
     * by every co-order graph query (materialized once per dir). */
   private def coOrderLi(s: SparkSession, dir: String): DataFrame =
-    materialize(s, "coorder_li", dir) {
+    Scratch.materialize(s, "coorder_li", dir) {
       Tables(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -329,7 +304,7 @@ ORDER BY lift DESC, a, b LIMIT 15"""
     * list behind labelProp, triangles, kcore, and modularity
     * (materialized once per dir, built from [[coOrderLi]]). */
   private def coOrderPairs(s: SparkSession, dir: String): DataFrame =
-    materialize(s, "coorder_pairs", dir) {
+    Scratch.materialize(s, "coorder_pairs", dir) {
       val li = coOrderLi(s, dir)
       val a = li.select(col("ok"), col("pk").as("a"))
       val b = li.select(col("ok"), col("pk").as("b"))
@@ -343,14 +318,14 @@ ORDER BY lift DESC, a, b LIMIT 15"""
     * window collapses to a ~|k|² edge table, so six queries stop each
     * re-paying the scan). */
   private def kEdges(s: SparkSession, dir: String): DataFrame =
-    materialize(s, "kgraph_edges", dir) {
+    Scratch.materialize(s, "kgraph_edges", dir) {
       Graphs.transitionEdges(Tables(s, dir, "events"),
         regexp_extract(col("props"), kExpr, 1).cast("long"))
     }
 
   /** Distinct k values (the node list), materialized beside [[kEdges]]. */
   private def kNodes(s: SparkSession, dir: String): DataFrame =
-    materialize(s, "kgraph_nodes", dir) {
+    Scratch.materialize(s, "kgraph_nodes", dir) {
       Tables(s, dir, "events")
         .select(regexp_extract(col("props"), kExpr, 1)
           .cast("long").as("node")).distinct()
@@ -361,7 +336,7 @@ ORDER BY lift DESC, a, b LIMIT 15"""
     * (materialized once per dir; the wedge join is the expensive part
     * of both queries and each triangle row serves them all). */
   private def coOrderTriangles(s: SparkSession, dir: String): DataFrame =
-    materialize(s, "coorder_triangles", dir) {
+    Scratch.materialize(s, "coorder_triangles", dir) {
       Graphs.triangleTriples(coOrderPairs(s, dir))
     }
 
@@ -407,40 +382,31 @@ ORDER BY lift DESC, a, b LIMIT 15"""
     * once and fans out).
     */
   private def coOrderLpaLabels(s: SparkSession, dir: String): DataFrame =
-    materialize(s, "coorder_lpa", dir) {
+    Scratch.materialize(s, "coorder_lpa", dir) {
       lpaLabels(coOrderPairs(s, dir))
     }
 
+  // --- label propagation communities (3 synchronous rounds) -----------
+  /** Community detection by synchronous label propagation over the part
+    * co-order graph: labels start as node ids; each round every node
+    * adopts its neighbors' most frequent label, ties to the SMALLEST
+    * label (one max-of-struct (count, −label) aggregate — map-side
+    * combinable, no per-node window). Exactly 3 rounds, so the result
+    * is deterministic — classic async LPA is run-order dependent, which
+    * an oracle-graded engine cannot be. Per round: one shuffle join of
+    * edges onto labels + two aggregations; the oracle unrolls the same
+    * 3 rounds as chained CTEs with the identical tie rule. Output is
+    * the community-size histogram.
+    */
   private def labelProp(s: SparkSession, dir: String): DataFrame =
     coOrderLpaLabels(s, dir)
       .groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy("community")
 
-  private val labelPropOracle: String = {
-    val rounds = (1 to 3).map { i =>
-      s"""c$i AS (
-  SELECT s.u, l.lbl, COUNT(*) AS c
-  FROM sym s JOIN l${i - 1} l ON s.v = l.node GROUP BY 1, 2
-), l$i AS (
-  SELECT u AS node, lbl FROM c$i
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY u ORDER BY c DESC, lbl) = 1
-)"""
-    }.mkString(",\n")
-    s"""WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), sym AS (
-  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p
-), l0 AS (
-  SELECT DISTINCT u AS node, u AS lbl FROM sym
-),
-$rounds
+  private val labelPropOracle = s"""WITH $lpaCtes
 SELECT lbl AS community, COUNT(*) AS n_members
 FROM l3 GROUP BY 1 ORDER BY community"""
-  }
 
   /** [[Graphs.bfsHops]] over the strong transition backbone: edges are
     * k→k' transitions observed ≥ 4 times (the w≥4 cut keeps the graph
@@ -485,15 +451,7 @@ FROM l3 GROUP BY 1 ORDER BY community"""
     far1.crossJoin(far2)
   }
 
-  private val diameter2SweepOracle = """WITH RECURSIVE ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), we AS (
+  private val diameter2SweepOracle = s"""WITH RECURSIVE $kSeqCtes, we AS (
   SELECT src, dst, COUNT(*) AS w FROM seq
   WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2
 ), de AS (
@@ -554,20 +512,13 @@ FROM far, far2"""
       .orderBy("k")
   }
 
-  private val richClubOracle = """WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), deg AS (
-  SELECT v, COUNT(*) AS deg FROM (
-    SELECT a AS v FROM p UNION ALL SELECT b AS v FROM p) GROUP BY 1
-), ks(k) AS (VALUES (4), (8), (16), (32), (64)),
+  private val richClubOracle = s"""WITH $coOrderCtes,
+ks(k) AS (VALUES (4), (8), (16), (32), (64)),
 degk AS (
   SELECT k, COUNT(*) AS n_k FROM deg JOIN ks ON deg > k GROUP BY 1
 ), wd AS (
   SELECT p.a, p.b, da.deg AS da, db.deg AS db
-  FROM p JOIN deg da ON p.a = da.v JOIN deg db ON p.b = db.v
+  FROM p JOIN deg da ON p.a = da.node JOIN deg db ON p.b = db.node
 ), edgek AS (
   SELECT k, COUNT(*) AS e_k FROM wd JOIN ks ON da > k AND db > k GROUP BY 1
 )
@@ -611,19 +562,9 @@ WHERE degk.n_k >= 2 ORDER BY k"""
         .as("assortativity"))
   }
 
-  private val assortativityOracle = """WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), deg AS (
-  SELECT v, COUNT(*) AS deg FROM (
-    SELECT a AS v FROM p UNION ALL SELECT b AS v FROM p) GROUP BY 1
-), both_e AS (
-  SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p
-), wd AS (
+  private val assortativityOracle = s"""WITH $coOrderCtes, wd AS (
   SELECT da.deg AS da, db.deg AS db
-  FROM both_e JOIN deg da ON both_e.a = da.v JOIN deg db ON both_e.b = db.v
+  FROM sym JOIN deg da ON sym.u = da.node JOIN deg db ON sym.v = db.node
 ), m AS (
   SELECT COUNT(*) AS m2,
     CAST(SUM(da) AS BIGINT) AS sa, CAST(SUM(db) AS BIGINT) AS sb,
@@ -662,15 +603,7 @@ FROM m"""
           .as("reciprocity"))
   }
 
-  private val reciprocityOracle = """WITH ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), e AS (
+  private val reciprocityOracle = s"""WITH $kSeqCtes, e AS (
   SELECT DISTINCT src, dst FROM seq WHERE dst IS NOT NULL AND dst <> src
 ), r AS (
   SELECT COUNT(*) AS n_recip FROM (
@@ -708,39 +641,20 @@ FROM n, r"""
           .as("entropy_rate"))
   }
 
-  private val entropyRateOracle = s"""WITH ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\\s*:\\s*(\\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), edges AS (
-  SELECT src, dst, COUNT(*) AS w FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2
-), outw AS (
-  SELECT src, CAST(SUM(w) AS BIGINT) AS w_out FROM edges GROUP BY 1
-), grand AS (SELECT CAST(SUM(w) AS BIGINT) AS tw FROM edges),
+  private val entropyRateOracle = s"""WITH $kGraphCtes,
+grand AS (SELECT CAST(SUM(w) AS BIGINT) AS tw FROM edges),
 terms AS (
   SELECT CAST(FLOOR(CAST(e.w AS DOUBLE) / CAST(tw AS DOUBLE)
     * ln(CAST(e.w AS DOUBLE) / CAST(w_out AS DOUBLE))
     * ${D("1000000000")}) AS BIGINT) AS term_nano
-  FROM edges e JOIN outw ON e.src = outw.src CROSS JOIN grand
+  FROM e CROSS JOIN grand
 )
 SELECT COUNT(*) AS n_transition_types,
   CAST(-SUM(term_nano) AS BIGINT) AS h_nano,
   CAST(-SUM(term_nano) AS DOUBLE) / ${D("1000000000")} AS entropy_rate
 FROM terms"""
 
-  private val bfsHopsOracle = """WITH RECURSIVE ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), we AS (
+  private val bfsHopsOracle = s"""WITH RECURSIVE $kSeqCtes, we AS (
   SELECT src, dst, COUNT(*) AS w FROM seq
   WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2
 ), edges AS (
@@ -779,18 +693,8 @@ FROM bfs GROUP BY node ORDER BY hops, node"""
       .orderBy("src")
   }
 
-  private val markovAccuracyOracle = """WITH ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), e AS (
-  SELECT src, dst, COUNT(*) AS w FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2
-), p AS (
-  SELECT src, dst AS pred_dst FROM e
+  private val markovAccuracyOracle = s"""WITH $kGraphCtes, p AS (
+  SELECT src, dst AS pred_dst FROM edges
   QUALIFY ROW_NUMBER() OVER (PARTITION BY src ORDER BY w DESC, dst) = 1
 )
 SELECT e.src, MAX(pred_dst) AS pred_dst,
@@ -798,7 +702,7 @@ SELECT e.src, MAX(pred_dst) AS pred_dst,
   CAST(SUM(CASE WHEN dst = pred_dst THEN w ELSE 0 END) AS BIGINT) AS n_correct,
   CAST(SUM(CASE WHEN dst = pred_dst THEN w ELSE 0 END) AS DOUBLE)
     / CAST(SUM(w) AS DOUBLE) AS accuracy
-FROM e JOIN p ON e.src = p.src
+FROM edges e JOIN p ON e.src = p.src
 GROUP BY e.src ORDER BY e.src"""
 
   /** Bounded k-core peel: 3 synchronous rounds of removing nodes with
@@ -858,14 +762,9 @@ GROUP BY e.src ORDER BY e.src"""
     stats.result().toDF("round", "n_nodes", "n_halfedges").orderBy("round")
   }
 
-  private val kcoreOracle = """WITH li AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS MATERIALIZED (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), e0 AS MATERIALIZED (
-  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p
-), kk AS (
+  private val kcoreOracle = s"""WITH $coOrderCtes,
+e0 AS MATERIALIZED (SELECT u, v FROM sym),
+kk AS (
   SELECT (COUNT(*) * 8) // (COUNT(DISTINCT u) * 10) AS k FROM e0
 ), d1 AS (SELECT u, COUNT(*) AS d FROM e0 GROUP BY 1),
 keep1 AS (SELECT u FROM d1, kk WHERE d >= kk.k),
@@ -928,16 +827,7 @@ ORDER BY round"""
   ) WHERE sup >= 2
 )"""
     }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), e0 AS MATERIALIZED (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), tri AS MATERIALIZED (
-  SELECT e1.a AS u, e1.b AS x, e2.b AS y
-  FROM e0 e1 JOIN e0 e2 ON e1.b = e2.a
-    JOIN e0 e3 ON e3.a = e1.a AND e3.b = e2.b
-),
+    s"""WITH $triCtes, e0 AS (SELECT a, b FROM p),
 $rounds
 SELECT CAST(0 AS BIGINT) AS round, (SELECT COUNT(*) FROM e0) AS n_edges,
   (SELECT COUNT(*) FROM tri) AS n_tri_alive
@@ -986,41 +876,19 @@ ORDER BY round"""
     }
   }
 
-  private val conductanceOracle: String = {
-    val rounds = (1 to 3).map { i =>
-      s"""c$i AS (
-  SELECT s.u, l.lbl, COUNT(*) AS c
-  FROM sym s JOIN l${i - 1} l ON s.v = l.node GROUP BY 1, 2
-), l$i AS (
-  SELECT u AS node, lbl FROM c$i
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY u ORDER BY c DESC, lbl) = 1)"""
-    }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS MATERIALIZED (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), sym AS MATERIALIZED (
-  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p
-), l0 AS MATERIALIZED (
-  SELECT DISTINCT u AS node, u AS lbl FROM sym
-),
-$rounds,
-labels AS MATERIALIZED (SELECT node, lbl FROM l3),
+  private val conductanceOracle = s"""WITH $lpaCtes,
 m AS (SELECT COUNT(*) AS m FROM p),
 lab AS (
   SELECT p.a, p.b, la.lbl AS ca, lb.lbl AS cb
-  FROM p JOIN labels la ON p.a = la.node JOIN labels lb ON p.b = lb.node
+  FROM p JOIN l3 la ON p.a = la.node JOIN l3 lb ON p.b = lb.node
 ), cut AS (
   SELECT community, COUNT(*) AS cut_edges FROM (
     SELECT ca AS community FROM lab WHERE ca <> cb
     UNION ALL SELECT cb FROM lab WHERE ca <> cb
   ) GROUP BY 1
-), deg AS (
-  SELECT u AS node, COUNT(*) AS d FROM sym GROUP BY 1
 ), vol AS (
-  SELECT l.lbl AS community, CAST(SUM(d.d) AS BIGINT) AS vol
-  FROM deg d JOIN labels l ON d.node = l.node GROUP BY 1
+  SELECT l.lbl AS community, CAST(SUM(d.deg) AS BIGINT) AS vol
+  FROM deg d JOIN l3 l ON d.node = l.node GROUP BY 1
 )
 SELECT community, vol,
   CAST(COALESCE(cut.cut_edges, 0) AS BIGINT) AS cut_edges,
@@ -1031,7 +899,6 @@ SELECT community, vol,
   END AS conductance
 FROM vol LEFT JOIN cut USING (community)
 ORDER BY vol DESC, community LIMIT 10"""
-  }
 
   /** Modularity of the LPA communities — the quality score that says
     * whether the detected partition beats random wiring: Q = Σ_c
@@ -1071,35 +938,14 @@ ORDER BY vol DESC, community LIMIT 10"""
     }
   }
 
-  private val modularityOracle: String = {
-    val rounds = (1 to 3).map { i =>
-      s"""c$i AS (
-  SELECT s.u, l.lbl, COUNT(*) AS c
-  FROM sym s JOIN l${i - 1} l ON s.v = l.node GROUP BY 1, 2
-), l$i AS (
-  SELECT u AS node, lbl FROM c$i
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY u ORDER BY c DESC, lbl) = 1
-)"""
-    }.mkString(",\n")
-    s"""WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), sym AS (
-  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p
-), l0 AS (
-  SELECT DISTINCT u AS node, u AS lbl FROM sym
-),
-$rounds,
+  private val modularityOracle = s"""WITH $lpaCtes,
 m AS (SELECT COUNT(*) AS m FROM p),
-deg AS (SELECT u AS node, COUNT(*) AS d FROM sym GROUP BY 1),
 intra AS (
   SELECT la.lbl AS community, COUNT(*) AS m_c
   FROM p JOIN l3 la ON p.a = la.node JOIN l3 lb ON p.b = lb.node
   WHERE la.lbl = lb.lbl GROUP BY 1
 ), dc AS (
-  SELECT l3.lbl AS community, CAST(SUM(deg.d) AS BIGINT) AS d_c
+  SELECT l3.lbl AS community, CAST(SUM(deg.deg) AS BIGINT) AS d_c
   FROM deg JOIN l3 ON deg.node = l3.node GROUP BY 1
 )
 SELECT dc.community, CAST(COALESCE(m_c, 0) AS BIGINT) AS m_c, d_c,
@@ -1108,7 +954,6 @@ SELECT dc.community, CAST(COALESCE(m_c, 0) AS BIGINT) AS m_c, d_c,
       * (CAST(d_c AS DOUBLE) / CAST(2 * m AS DOUBLE)) AS contribution
 FROM dc LEFT JOIN intra ON dc.community = intra.community, m
 ORDER BY dc.community"""
-  }
 
   // --- neighborhood Jaccard (structural edge similarity) --------------
   /** Neighborhood-overlap similarity for the heaviest co-order edges:
@@ -1157,9 +1002,7 @@ ORDER BY dc.community"""
       .orderBy("a", "b")
   }
 
-  private val neighborJaccardOracle: String = s"""WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-),
+  private val neighborJaccardOracle = s"""WITH $coOrderCtes,
 w AS (
   SELECT a.pk AS a, b.pk AS b, COUNT(*) AS n_orders
   FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk GROUP BY 1, 2
@@ -1168,9 +1011,6 @@ top AS (
   SELECT a, b, n_orders FROM w
   QUALIFY ROW_NUMBER() OVER (ORDER BY n_orders DESC, a, b) <= $JaccardTopEdges
 ),
-p AS (SELECT DISTINCT a, b FROM w),
-sym AS (SELECT a AS u, b AS v FROM p UNION ALL SELECT b AS u, a AS v FROM p),
-deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY 1),
 common AS (
   SELECT t.a, t.b, COUNT(*) AS n_common
   FROM top t JOIN sym sa ON sa.u = t.a JOIN sym sb ON sb.u = t.b AND sb.v = sa.v
@@ -1182,7 +1022,7 @@ SELECT t.a, t.b, t.n_orders,
   CAST(COALESCE(c.n_common, 0) AS DOUBLE)
     / CAST(da.deg + db.deg - COALESCE(c.n_common, 0) AS DOUBLE) AS jaccard
 FROM top t LEFT JOIN common c ON t.a = c.a AND t.b = c.b
-JOIN deg da ON da.u = t.a JOIN deg db ON db.u = t.b
+JOIN deg da ON da.node = t.a JOIN deg db ON db.node = t.b
 ORDER BY t.a, t.b"""
 
   // --- HITS hubs & authorities (fixed-point, 2 iterations) ------------
@@ -1204,33 +1044,21 @@ ORDER BY t.a, t.b"""
     val iters = (1 to 2).map { i =>
       s"""ra$i AS (
   SELECT e.dst AS node, SUM(h.h * e.w) AS a
-  FROM e JOIN h${i - 1} h ON h.node = e.src GROUP BY 1
+  FROM edges e JOIN h${i - 1} h ON h.node = e.src GROUP BY 1
 ), da$i AS (SELECT GREATEST(SUM(a) // 1000000, 1) AS d FROM ra$i),
 a$i AS (
   SELECT n.node, CAST(COALESCE(r.a // da$i.d, 0) AS BIGINT) AS a
   FROM nodes n LEFT JOIN ra$i r ON r.node = n.node, da$i
 ), rh$i AS (
   SELECT e.src AS node, SUM(a.a * e.w) AS h
-  FROM e JOIN a$i a ON a.node = e.dst GROUP BY 1
+  FROM edges e JOIN a$i a ON a.node = e.dst GROUP BY 1
 ), dh$i AS (SELECT GREATEST(SUM(h) // 1000000, 1) AS d FROM rh$i),
 h$i AS (
   SELECT n.node, CAST(COALESCE(r.h // dh$i.d, 0) AS BIGINT) AS h
   FROM nodes n LEFT JOIN rh$i r ON r.node = n.node, dh$i
 )"""
     }.mkString(",\n")
-    s"""WITH ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\\s*:\\s*(\\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), e AS (
-  SELECT src, dst, COUNT(*) AS w FROM seq WHERE dst IS NOT NULL GROUP BY 1, 2
-), nodes AS (
-  SELECT DISTINCT k AS node FROM ek
-), h0 AS (
+    s"""WITH $kGraphCtes, h0 AS (
   SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes
 ),
 $iters
@@ -1247,20 +1075,26 @@ ORDER BY auth_micro DESC, a2.node LIMIT 20"""
     * closing join must reproduce the oracle's naive a<b<c 3-way
     * self-join per-corner counts exactly.
     */
-  private def localClustering(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coOrderPairs(s, dir)
-    val tri = Graphs.localTrianglesOf(coOrderTriangles(s, dir))
-    val deg = pairs.select(col("a").as("node"))
-      .union(pairs.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    deg.where(col("deg") >= 2)
-      .join(tri, Seq("node"), "left")
-      .na.fill(0L, Seq("n_tri"))
+  private def localClustering(s: SparkSession, dir: String): DataFrame =
+    degreeTriangles(s, dir)
       .select(col("node"), col("deg"), col("n_tri"),
         ((col("n_tri") * 2).cast("double") /
           (col("deg") * (col("deg") - 1)).cast("double")).as("coeff"))
       .orderBy(col("coeff").desc, col("node"))
       .limit(25)
+
+  /** (node, deg, n_tri) for every co-order node of degree ≥ 2, n_tri 0
+    * when it closes no triangle — the rows both clustering readouts
+    * aggregate (the SQL twin is [[triCtes]]' `deg` LEFT JOIN `cnt`). */
+  private def degreeTriangles(s: SparkSession, dir: String): DataFrame = {
+    val pairs = coOrderPairs(s, dir)
+    val tri = Graphs.localTrianglesOf(coOrderTriangles(s, dir))
+    pairs.select(col("a").as("node"))
+      .union(pairs.select(col("b").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      .where(col("deg") >= 2)
+      .join(tri, Seq("node"), "left")
+      .na.fill(0L, Seq("n_tri"))
   }
 
   /** Degree-dependent clustering curve c(k): mean local clustering per
@@ -1273,15 +1107,8 @@ ORDER BY auth_micro DESC, a2.node LIMIT 20"""
     * integer-summed (the q_hhi discipline), so the mean is one final
     * division.
     */
-  private def clusteringCurve(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coOrderPairs(s, dir)
-    val tri = Graphs.localTrianglesOf(coOrderTriangles(s, dir))
-    val deg = pairs.select(col("a").as("node"))
-      .union(pairs.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    deg.where(col("deg") >= 2)
-      .join(tri, Seq("node"), "left")
-      .na.fill(0L, Seq("n_tri"))
+  private def clusteringCurve(s: SparkSession, dir: String): DataFrame =
+    degreeTriangles(s, dir)
       .select((length(bin(col("deg"))) - 1).cast("long").as("b"),
         floor((col("n_tri") * 2).cast("double")
           / (col("deg") * (col("deg") - 1)).cast("double")
@@ -1292,27 +1119,8 @@ ORDER BY auth_micro DESC, a2.node LIMIT 20"""
         (col("sfix").cast("double") / lit(1000000000000L).cast("double")
           / col("n_nodes").cast("double")).as("mean_coeff"))
       .orderBy("bin")
-  }
 
-  private val clusteringCurveOracle = """WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS MATERIALIZED (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), deg AS (
-  SELECT v AS node, COUNT(*) AS deg FROM (
-    SELECT a AS v FROM p UNION ALL SELECT b AS v FROM p) GROUP BY 1
-), tri AS (
-  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-  FROM p e1 JOIN p e2 ON e1.b = e2.a
-    JOIN p e3 ON e3.a = e1.a AND e3.b = e2.b
-), tn AS (
-  SELECT x AS node FROM tri
-  UNION ALL SELECT y FROM tri
-  UNION ALL SELECT z FROM tri
-), cnt AS (
-  SELECT node, COUNT(*) AS n_tri FROM tn GROUP BY 1
-), c AS (
+  private val clusteringCurveOracle = s"""WITH $triCtes, c AS (
   SELECT CAST(length(bin(d.deg)) - 1 AS BIGINT) AS bin,
     CAST(FLOOR(CAST(2 * COALESCE(cn.n_tri, 0) AS DOUBLE)
       / CAST(d.deg * (d.deg - 1) AS DOUBLE) * 1000000000000) AS BIGINT) AS cfix
@@ -1324,25 +1132,7 @@ SELECT bin, COUNT(*) AS n_nodes,
     / CAST(COUNT(*) AS DOUBLE) AS mean_coeff
 FROM c GROUP BY 1 ORDER BY bin"""
 
-  private val localClusteringOracle = """WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), deg AS (
-  SELECT v AS node, COUNT(*) AS deg FROM (
-    SELECT a AS v FROM p UNION ALL SELECT b AS v FROM p) GROUP BY 1
-), tri AS (
-  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-  FROM p e1 JOIN p e2 ON e1.b = e2.a
-    JOIN p e3 ON e3.a = e1.a AND e3.b = e2.b
-), tn AS (
-  SELECT x AS node FROM tri
-  UNION ALL SELECT y FROM tri
-  UNION ALL SELECT z FROM tri
-), cnt AS (
-  SELECT node, COUNT(*) AS n_tri FROM tn GROUP BY 1
-)
+  private val localClusteringOracle = s"""WITH $triCtes
 SELECT d.node, d.deg, CAST(COALESCE(c.n_tri, 0) AS BIGINT) AS n_tri,
   CAST(2 * COALESCE(c.n_tri, 0) AS DOUBLE)
     / CAST(d.deg * (d.deg - 1) AS DOUBLE) AS coeff
@@ -1350,30 +1140,29 @@ FROM deg d LEFT JOIN cnt c ON c.node = d.node
 WHERE d.deg >= 2
 ORDER BY coeff DESC, d.node LIMIT 25"""
 
-  // --- link prediction: resource-allocation index ---------------------
-  /** Resource-allocation link prediction from a BOUNDED source set (the
-    * 20 highest-degree parts): for each source, score every
-    * non-adjacent 2-hop neighbor c by RA(s,c) = Σ over common
-    * neighbors w of 1e6 div deg(w) (exact integer — RA instead of
-    * Adamic-Adar's 1/log so no libm in the hash path), keep each
-    * source's top 3. The scale shape: candidates come from a 2-hop
-    * walk out of 20 broadcast sources — work is Σ_s Σ_{w∈N(s)} deg(w),
-    * never the all-pairs wedge explosion; adjacency is removed with
-    * one anti-join.
+  // --- link prediction: resource allocation / Adamic–Adar --------------
+  /** Link prediction from a BOUNDED source set (the 20 highest-degree
+    * parts): for each source, score every non-adjacent 2-hop neighbor c
+    * by the sum over common neighbors w of a per-neighbor `term` on
+    * deg_w, and keep each source's top 3. The scale shape: candidates
+    * come from a 2-hop walk out of 20 broadcast sources — work is
+    * Σ_s Σ_{w∈N(s)} deg(w), never the all-pairs wedge explosion;
+    * adjacency is removed with one anti-join. Two scores ride it:
+    *   - resource allocation, `1e6 div deg(w)` (exact integer — no libm
+    *     in the hash path);
+    *   - Adamic–Adar, 1/ln(deg(w)) nano-floored before the integer sum:
+    *     hubs are discounted LOGARITHMICALLY, so a shared niche
+    *     neighbor still dominates but hubs aren't zeroed out (the
+    *     empirically stronger predictor on co-purchase graphs, Adamic &
+    *     Adar '03; ln is micro-boundary-trusted per the repo's log
+    *     convention). Every common neighbor has deg ≥ 2, so ln never
+    *     hits zero.
+    * `oracleTerm` is the same term in DuckDB over `d.deg`.
     */
   private val LinkPredSources = 20
 
-  /** Adamic–Adar link prediction beside [[linkPredRa]] — the same
-    * two-hop non-adjacent candidate machinery with 1/ln(deg) weights
-    * instead of RA's 1/deg: AA discounts hub intermediaries
-    * LOGARITHMICALLY, so a shared niche neighbor still dominates but
-    * hubs aren't zeroed out (the empirically stronger predictor on
-    * co-purchase graphs, Adamic & Adar '03). Per-neighbor terms are
-    * nano-floored before the integer sum (ln is micro-boundary-trusted
-    * per the repo's log convention); every common neighbor has
-    * deg ≥ 2 so ln never hits zero.
-    */
-  private def linkPredAa(s: SparkSession, dir: String): DataFrame = {
+  private def linkPred(scoreCol: String, term: org.apache.spark.sql.Column)(
+      s: SparkSession, dir: String): DataFrame = {
     val pairs = coOrderPairs(s, dir).localCheckpoint()
     val sym = pairs.select(col("a").as("u"), col("b").as("v"))
       .union(pairs.select(col("b").as("u"), col("a").as("v")))
@@ -1394,29 +1183,19 @@ ORDER BY coeff DESC, d.node LIMIT 25"""
     val scored = nonAdj
       .join(deg.select(col("u").as("w"), col("deg").as("deg_w")), Seq("w"))
       .groupBy(col("s"), col("c"))
-      .agg(count(lit(1)).as("n_common"),
-        sum(floor(lit(1e9) / log(col("deg_w").cast("double"))).cast("long"))
-          .as("aa_nano"))
+      .agg(count(lit(1)).as("n_common"), sum(term).as(scoreCol))
     val win = Window.partitionBy(col("s"))
-      .orderBy(col("aa_nano").desc, col("c"))
+      .orderBy(col(scoreCol).desc, col("c"))
     scored.withColumn("rk", row_number().over(win)).where(col("rk") <= 3)
       .select(col("s").as("source"), col("c").as("candidate"),
-        col("n_common"), col("aa_nano"))
-      .orderBy(col("source"), col("aa_nano").desc, col("candidate"))
+        col("n_common"), col(scoreCol))
+      .orderBy(col("source"), col(scoreCol).desc, col("candidate"))
   }
 
-  private val linkPredAaOracle = s"""WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), sym AS (
-  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p
-), deg AS (
-  SELECT u, COUNT(*) AS deg FROM sym GROUP BY 1
-), src AS (
-  SELECT u AS s FROM deg
-  QUALIFY ROW_NUMBER() OVER (ORDER BY deg DESC, u) <= $LinkPredSources
+  private def linkPredOracle(scoreCol: String, oracleTerm: String): String =
+    s"""WITH $coOrderCtes, src AS (
+  SELECT node AS s FROM deg
+  QUALIFY ROW_NUMBER() OVER (ORDER BY deg DESC, node) <= $LinkPredSources
 ), hop2 AS (
   SELECT src.s, s1.v AS w, s2.v AS c
   FROM src JOIN sym s1 ON s1.u = src.s JOIN sym s2 ON s2.u = s1.v
@@ -1426,78 +1205,14 @@ ORDER BY coeff DESC, d.node LIMIT 25"""
   WHERE NOT EXISTS (SELECT 1 FROM sym e WHERE e.u = h.s AND e.v = h.c)
 ), scored AS (
   SELECT s, c, COUNT(*) AS n_common,
-    CAST(SUM(CAST(FLOOR(${D("1e9")} / ln(CAST(d.deg AS DOUBLE)))
-      AS BIGINT)) AS BIGINT) AS aa_nano
-  FROM nonadj JOIN deg d ON d.u = nonadj.w
+    CAST(SUM($oracleTerm) AS BIGINT) AS $scoreCol
+  FROM nonadj JOIN deg d ON d.node = nonadj.w
   GROUP BY 1, 2
 )
-SELECT s AS source, c AS candidate, n_common, aa_nano FROM (
-  SELECT s, c, n_common, aa_nano,
-    ROW_NUMBER() OVER (PARTITION BY s ORDER BY aa_nano DESC, c) AS rk
-  FROM scored
-) WHERE rk <= 3
-ORDER BY source, aa_nano DESC, candidate"""
-
-  private def linkPredRa(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coOrderPairs(s, dir).localCheckpoint()
-    val sym = pairs.select(col("a").as("u"), col("b").as("v"))
-      .union(pairs.select(col("b").as("u"), col("a").as("v")))
-    // deg is read twice (source ranking + the per-neighbor weight
-    // join): checkpoint so the degree agg over sym runs once
-    val deg = graft.operators.Checkpoints.round(
-      sym.groupBy(col("u")).agg(count(lit(1)).as("deg")))
-    val sources = deg.orderBy(col("deg").desc, col("u"))
-      .limit(LinkPredSources).select(col("u").as("s"))
-    val hop1 = broadcast(sources)
-      .join(sym.select(col("u").as("s"), col("v").as("w")), Seq("s"))
-    val hop2 = hop1
-      .join(sym.select(col("u").as("w"), col("v").as("c")), Seq("w"))
-      .where(col("c") =!= col("s"))
-    val nonAdj = hop2.join(
-      sym.select(col("u").as("s"), col("v").as("c")), Seq("s", "c"),
-      "left_anti")
-    val scored = nonAdj
-      .join(deg.select(col("u").as("w"), col("deg").as("deg_w")), Seq("w"))
-      .groupBy(col("s"), col("c"))
-      .agg(count(lit(1)).as("n_common"),
-        sum(expr("1000000 div deg_w")).as("ra_micro"))
-    val win = Window.partitionBy(col("s"))
-      .orderBy(col("ra_micro").desc, col("c"))
-    scored.withColumn("rk", row_number().over(win)).where(col("rk") <= 3)
-      .select(col("s").as("source"), col("c").as("candidate"),
-        col("n_common"), col("ra_micro"))
-      .orderBy(col("source"), col("ra_micro").desc, col("candidate"))
-  }
-
-  private val linkPredRaOracle = s"""WITH li AS (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), sym AS (
-  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p
-), deg AS (
-  SELECT u, COUNT(*) AS deg FROM sym GROUP BY 1
-), src AS (
-  SELECT u AS s FROM deg
-  QUALIFY ROW_NUMBER() OVER (ORDER BY deg DESC, u) <= $LinkPredSources
-), hop2 AS (
-  SELECT src.s, s1.v AS w, s2.v AS c
-  FROM src JOIN sym s1 ON s1.u = src.s JOIN sym s2 ON s2.u = s1.v
-  WHERE s2.v <> src.s
-), nonadj AS (
-  SELECT h.s, h.w, h.c FROM hop2 h
-  WHERE NOT EXISTS (SELECT 1 FROM sym e WHERE e.u = h.s AND e.v = h.c)
-), scored AS (
-  SELECT s, c, COUNT(*) AS n_common,
-    CAST(SUM(1000000 // d.deg) AS BIGINT) AS ra_micro
-  FROM nonadj JOIN deg d ON d.u = nonadj.w
-  GROUP BY 1, 2
-)
-SELECT s AS source, c AS candidate, n_common, ra_micro
+SELECT s AS source, c AS candidate, n_common, $scoreCol
 FROM scored
-QUALIFY ROW_NUMBER() OVER (PARTITION BY s ORDER BY ra_micro DESC, c) <= 3
-ORDER BY source, ra_micro DESC, candidate"""
+QUALIFY ROW_NUMBER() OVER (PARTITION BY s ORDER BY $scoreCol DESC, c) <= 3
+ORDER BY source, $scoreCol DESC, candidate"""
 
   /** [[Graphs.scc]] over the k-value transition graph — the DIRECTED
     * component structure `g_label_prop`'s undirected communities can't
@@ -1525,15 +1240,7 @@ ORDER BY source, ra_micro DESC, candidate"""
       .orderBy(col("n_nodes").desc, col("scc_id"))
   }
 
-  private val sccOracle: String = """WITH RECURSIVE ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), e AS (
+  private val sccOracle: String = s"""WITH RECURSIVE $kSeqCtes, e AS (
   SELECT DISTINCT src, dst FROM seq WHERE dst IS NOT NULL AND src <> dst
 ), nodes AS (
   SELECT DISTINCT k AS n FROM ek
@@ -1599,7 +1306,7 @@ ORDER BY n_nodes DESC, scc_id"""
     * chain on every run.
     */
   private def coOrderCcLabels(s: SparkSession, dir: String): DataFrame =
-    materialize(s, "coorder_cc4", dir) {
+    Scratch.materialize(s, "coorder_cc4", dir) {
       minLabelCc(coOrderPairs(s, dir))
     }
 
@@ -1646,22 +1353,12 @@ ORDER BY n_nodes DESC, scc_id"""
   FROM e$tag e JOIN l$tag${i - 1} l ON l.node = e.v
   GROUP BY e.u)"""
     }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS MATERIALIZED (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), deg AS MATERIALIZED (
-  SELECT node, COUNT(*) AS d FROM (
-    SELECT a AS node FROM p UNION ALL SELECT b FROM p) GROUP BY 1
-), hubs AS MATERIALIZED (
+    s"""WITH $coOrderCtes, hubs AS MATERIALIZED (
   SELECT node FROM (
-    SELECT node, ROW_NUMBER() OVER (ORDER BY d DESC, node) AS rk FROM deg
+    SELECT node, ROW_NUMBER() OVER (ORDER BY deg DESC, node) AS rk FROM deg
   ) WHERE rk <= 5
 ), eA AS MATERIALIZED (
-  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p
-  UNION ALL SELECT DISTINCT a, a FROM (
-    SELECT a FROM p UNION ALL SELECT b FROM p) t(a)
+  SELECT u, v FROM sym UNION ALL SELECT node, node FROM deg
 ), lA0 AS MATERIALIZED (
   SELECT DISTINCT u AS node, u AS lbl FROM eA
 ),
@@ -1733,15 +1430,7 @@ SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
       .toDF("n_nodes", "n_core", "n_in", "n_out", "n_other")
   }
 
-  private val bowtieOracle: String = """WITH RECURSIVE ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), e AS (
+  private val bowtieOracle: String = s"""WITH RECURSIVE $kSeqCtes, e AS (
   SELECT DISTINCT src, dst FROM seq WHERE dst IS NOT NULL AND src <> dst
 ), nodes AS (
   SELECT DISTINCT k AS n FROM ek
@@ -1815,18 +1504,14 @@ SELECT (SELECT COUNT(*) FROM nodes) AS n_nodes,
     FROM r${i - 1} r JOIN e ON e.src = r.node AND e.dep_ms >= r.t
   ) GROUP BY node)"""
     }.mkString(",\n")
-    s"""WITH ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\\s*:\\s*(\\d+)', 1) AS BIGINT) AS k,
-    epoch_ms(ts) AS ms
-  FROM events
-), seq AS (
-  SELECT k AS src, ms AS dep_ms,
+    s"""WITH $kSeqCtes, tseq AS (
+  SELECT k AS src, epoch_ms(ts) AS dep_ms,
     LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst,
-    LEAD(ms) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS arr_ms
+    LEAD(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+      AS arr_ms
   FROM ek
 ), e AS (
-  SELECT src, dst, dep_ms, arr_ms FROM seq WHERE dst IS NOT NULL
+  SELECT src, dst, dep_ms, arr_ms FROM tseq WHERE dst IS NOT NULL
 ), r0 AS (
   SELECT MIN(k) AS node, CAST(0 AS BIGINT) AS t FROM ek
 ),
@@ -1848,7 +1533,7 @@ SELECT node, t AS arrival_ms FROM r6 ORDER BY arrival_ms, node"""
     * g_path_lengths (both are rollups of the same (source, node, hops)
     * table; without this each pays the full frontier loop per rep). */
   private def kMsBfs(s: SparkSession, dir: String): DataFrame =
-    materialize(s, "kgraph_msbfs", dir) {
+    Scratch.materialize(s, "kgraph_msbfs", dir) {
       Graphs.multiSourceBfs(
         kEdges(s, dir)
           .where(col("src") =!= col("dst") && col("w") >= 4)
@@ -1866,15 +1551,7 @@ SELECT node, t AS arrival_ms FROM r6 ORDER BY arrival_ms, node"""
       .orderBy(col("harmonic_micro").desc, col("node"))
   }
 
-  private val closenessOracle = """WITH RECURSIVE ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), we AS (
+  private val closenessOracle = s"""WITH RECURSIVE $kSeqCtes, we AS (
   SELECT src, dst, COUNT(*) AS w FROM seq
   WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2
 ), edges AS (
@@ -1920,15 +1597,7 @@ ORDER BY harmonic_micro DESC, node"""
       .orderBy("hop")
   }
 
-  private val pathLengthsOracle = """WITH RECURSIVE ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), we AS (
+  private val pathLengthsOracle = s"""WITH RECURSIVE $kSeqCtes, we AS (
   SELECT src, dst, COUNT(*) AS w FROM seq
   WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2
 ), edges AS (
@@ -1985,15 +1654,7 @@ FROM perhop, tot ORDER BY hop"""
     ffl.unionByName(cyc).orderBy("motif")
   }
 
-  private val motifsOracle: String = """WITH ek AS (
-  SELECT user_id, ts, event_id,
-    CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k
-  FROM events
-), seq AS (
-  SELECT k AS src,
-    LEAD(k) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM ek
-), we AS (
+  private val motifsOracle: String = s"""WITH $kSeqCtes, we AS (
   SELECT src, dst, COUNT(*) AS w FROM seq
   WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2
 ), e AS MATERIALIZED (
@@ -2054,14 +1715,7 @@ ORDER BY motif"""
     } finally sym.unpersist(blocking = false)
   }
 
-  private val katzOracle: String = s"""WITH li AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS MATERIALIZED (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), sym AS MATERIALIZED (
-  SELECT a AS u, b AS v FROM p UNION ALL SELECT b, a FROM p
-), s1 AS MATERIALIZED (
+  private val katzOracle: String = s"""WITH $coOrderCtes, s1 AS MATERIALIZED (
   SELECT u, COUNT(*) AS s1 FROM sym GROUP BY 1
 ), s2 AS MATERIALIZED (
   SELECT sym.u, CAST(SUM(s1.s1) AS BIGINT) AS s2
@@ -2125,9 +1779,7 @@ ORDER BY katz DESC, node LIMIT 20"""
       .orderBy("seed", "rnk")
   }
 
-  private val cfCosineOracle: String = """WITH li AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), co AS MATERIALIZED (
+  private val cfCosineOracle: String = s"""WITH $coOrderLiCte, co AS MATERIALIZED (
   SELECT a.pk AS a, b.pk AS b, COUNT(*) AS co
   FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
   GROUP BY 1, 2
@@ -2178,17 +1830,9 @@ FROM r WHERE rnk <= 10 ORDER BY seed, rnk"""
             / col("n_nodes").cast("double")).as("degree_gini"))
   }
 
-  private val degreeGiniOracle = """WITH li AS MATERIALIZED (
-  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-), p AS MATERIALIZED (
-  SELECT DISTINCT a.pk AS a, b.pk AS b
-  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
-), deg AS (
-  SELECT node, COUNT(*) AS d FROM (
-    SELECT a AS node FROM p UNION ALL SELECT b FROM p
-  ) GROUP BY 1
-), r AS (
-  SELECT d, CAST(ROW_NUMBER() OVER (ORDER BY d, node) AS BIGINT) AS i FROM deg
+  private val degreeGiniOracle = s"""WITH $coOrderCtes, r AS (
+  SELECT deg AS d,
+    CAST(ROW_NUMBER() OVER (ORDER BY deg, node) AS BIGINT) AS i FROM deg
 ), a AS (
   SELECT COUNT(*) AS n, CAST(SUM(d) AS BIGINT) AS sd,
     CAST(SUM(i * d) AS BIGINT) AS sid
@@ -2208,12 +1852,17 @@ FROM a"""
     QueryDef("g_hits", hitsQ, Some(hitsOracle)),
     QueryDef("g_local_clustering", localClustering, Some(localClusteringOracle)),
     QueryDef("g_clustering_curve", clusteringCurve, Some(clusteringCurveOracle)),
-    QueryDef("g_link_pred_ra", linkPredRa, Some(linkPredRaOracle)),
+    QueryDef("g_link_pred_ra", linkPred("ra_micro", expr("1000000 div deg_w")),
+      Some(linkPredOracle("ra_micro", "1000000 // d.deg"))),
     QueryDef("g_neighbor_jaccard", neighborJaccard, Some(neighborJaccardOracle)),
     QueryDef("g_modularity", modularity, Some(modularityOracle)),
     QueryDef("g_kcore", kcore, Some(kcoreOracle)),
     QueryDef("g_ktruss", ktruss, Some(ktrussOracle)),
-    QueryDef("g_link_pred_aa", linkPredAa, Some(linkPredAaOracle)),
+    QueryDef("g_link_pred_aa",
+      linkPred("aa_nano",
+        floor(lit(1e9) / log(col("deg_w").cast("double"))).cast("long")),
+      Some(linkPredOracle("aa_nano",
+        s"CAST(FLOOR(${D("1e9")} / ln(CAST(d.deg AS DOUBLE))) AS BIGINT)"))),
     QueryDef("g_stationary_dist", stationaryDist, Some(stationaryDistOracle)),
     QueryDef("g_conductance", conductance, Some(conductanceOracle)),
     QueryDef("g_bowtie", bowtie, Some(bowtieOracle)),

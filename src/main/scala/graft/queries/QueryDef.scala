@@ -65,6 +65,14 @@ object Tables {
 
 /** Tiny helpers for generating DuckDB oracle SQL from the same Scala
   * constants the Spark side uses — one source of truth per lookup table.
+  *
+  * The same rule holds for inputs: an input several oracles read is
+  * written ONCE, as a prelude of CTEs every such oracle interpolates
+  * (`WITH $prelude, ...`), so its contract cannot drift between them —
+  * [[quantCtes]] here, and in `GraphQueries` one prelude per
+  * materialized graph input. Declare a prelude as a `def` (or in
+  * another object, as `quantCtes` is): a `val` interpolated above its
+  * declaration in the same object reads null.
   */
 object Sql {
   /** Fractional literal as a true DOUBLE. */

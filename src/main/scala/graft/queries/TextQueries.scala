@@ -662,30 +662,20 @@ ORDER BY doc_id, fp_pos, fp_hash"""
     149174L -> (48037L, 24056884794075608L, 1453216320713928846L), // sf0.01
     1485576L -> (478317L, 239347424982789879L, 3001072315907605829L)) // sf0.1
 
-  /** One materialization per data dir: the LSH candidate-pair edge
-    * list shared by the cluster family (components, star contraction,
-    * keeper selection) — built once, written to scratch parquet,
-    * re-read thereafter (the GraphQueries co-order precedent; a
-    * production near-dup pipeline materializes the candidate edges
-    * once and fans every clustering/keeper pass out from them).
+  /** The LSH candidate-pair edge list shared by the cluster family
+    * (components, star contraction, keeper selection), materialized
+    * once per data dir: a production near-dup pipeline materializes the
+    * candidate edges once and fans every clustering/keeper pass out
+    * from them.
     */
-  private val materializedCand =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def lshCand3(s: SparkSession, dir: String): DataFrame = {
-    val path = materializedCand.synchronized {
-      materializedCand.getOrElseUpdate(dir, {
-        val p = graft.util.Scratch.dir("graft_lsh_cand") + "/data"
-        TextDedup.lshCandidates(
-          TextDedup.minHashSignatures(
-            TextDedup.wordShingles(Tables(s, dir, "documents"),
-              "doc_id", "text", 3), K),
-          Bands, Rows).write.mode("overwrite").parquet(p)
-        p
-      })
+  private def lshCand3(s: SparkSession, dir: String): DataFrame =
+    graft.util.Scratch.materialize(s, "lsh_cand", dir) {
+      TextDedup.lshCandidates(
+        TextDedup.minHashSignatures(
+          TextDedup.wordShingles(Tables(s, dir, "documents"),
+            "doc_id", "text", 3), K),
+        Bands, Rows)
     }
-    s.read.parquet(path)
-  }
 
   // --- dedup clusters: LSH candidates → connected components --------
   private def dedupClusters(s: SparkSession, dir: String): DataFrame = {

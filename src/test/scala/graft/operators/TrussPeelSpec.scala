@@ -49,7 +49,7 @@ class TrussPeelSpec extends SparkSpec {
     (math.min(a, b), math.max(a, b)) }.toSet
 
   test("trussPeelStats == naive full recount on random graphs (ScalaCheck)") {
-    val prop = Prop.forAll(genEdges, Gen.oneOf(3, 4)) { (edges, k) =>
+    val prop = Prop.forAllNoShrink(genEdges, Gen.oneOf(3, 4)) { (edges, k) =>
       val pairs = edges.toSeq.toDF("a", "b")
       val got = Graphs.trussPeelStats(
         Graphs.triangleTriples(pairs), pairs, rounds = 3, k = k,
@@ -81,7 +81,7 @@ class TrussPeelSpec extends SparkSpec {
     // cap 0 forces every round down the non-broadcast branch, where the
     // next round recounts support in full instead of subtracting the
     // incremental delta — the cluster-scale guard must stay equivalent
-    val prop = Prop.forAll(genEdges, Gen.oneOf(3, 4)) { (edges, k) =>
+    val prop = Prop.forAllNoShrink(genEdges, Gen.oneOf(3, 4)) { (edges, k) =>
       val pairs = edges.toSeq.toDF("a", "b")
       val got = Graphs.trussPeelStats(
         Graphs.triangleTriples(pairs), pairs, rounds = 3, k = k,
