@@ -27,7 +27,7 @@ object EtlBench {
     val csvPath = Paths.get(sys.env.getOrElse("GRAFT_ETL_CSV", "benchmark_results.csv"))
     val spark = Session("graft-etl-bench")
 
-    val base = Files.createTempDirectory("graft_etl_bench").toString
+    val base = graft.util.Scratch.dir("graft_etl_bench")
     def run(rows: Long, format: String, out: String): Double = {
       val cfg = PipelineConfig(SourceConfig.Generate(rows),
         OutputConfig(s"$base/$out", format))

@@ -185,7 +185,7 @@ object ScaleBench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").toInt
     val spark = Session("graft-scale-bench")
     val planes = Similarity.planes(NPlanes, Dim)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scale").toString
+    val tmp = graft.util.Scratch.dir("graft_scale")
 
     // SPARK_GRAFT_SCALE_ONLY=prefix1,prefix2 — measure only matching
     // variant families (dev loop / incremental curve additions without

@@ -38,7 +38,7 @@ object SkewBench {
       when(pmod(xxhash64(col("id"), lit(salt)), lit(10)) < 9, lit(0L))
         .otherwise(pmod(xxhash64(col("id"), lit(salt + 1)), lit(99)) + 1)
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val tmp = graft.util.Scratch.dir("graft_skew")
     spark.range(n).select(
         skewKey(10).as("user_id"),
         pmod(xxhash64(col("id"), lit(12)), lit(SpanMs)).as("t"),

@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
-import graft.util.Json
+import graft.util.{Json, Scratch}
 
 /** E3 — the reference's web serving layer
   * (`/root/reference/api.py:41-160`) on the JDK's built-in HTTP server
@@ -28,6 +28,13 @@ import graft.util.Json
   * Job state is the in-process map the reference uses (`api.py:65-68`);
   * everything is driver-side control plane — the data plane stays in
   * Spark.
+  *
+  * Each session writes under the instance's one [[Scratch]] directory
+  * ([[root]]/<id>). A session lives until its zip is served: the
+  * download streams the zip from disk, then deletes the session's
+  * directory and its `jobs` entry, so a served session answers 404 on
+  * `/status` and `/download`. A failed session keeps only its error.
+  * [[stop]] deletes the root with whatever sessions are left in it.
   */
 final class WebApi(spark: SparkSession, port: Int = 0,
     weather: WeatherSource = new WeatherSource.Stub()) {
@@ -39,6 +46,7 @@ final class WebApi(spark: SparkSession, port: Int = 0,
 
   private val jobs = new ConcurrentHashMap[String, JobState]()
   private val pool = Executors.newFixedThreadPool(2)
+  private[etl] val root: Path = Paths.get(Scratch.dir("api"))
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
   def boundPort: Int = server.getAddress.getPort
@@ -99,7 +107,9 @@ final class WebApi(spark: SparkSession, port: Int = 0,
       zipDir(workDir.resolve("out"), zip)
       jobs.put(id, Completed(zip)); ()
     } catch {
-      case e: Throwable => jobs.put(id, Failed(e.toString)); ()
+      case e: Throwable =>
+        jobs.put(id, Failed(e.toString))
+        Scratch.delete(workDir)
     }
   }
 
@@ -131,7 +141,7 @@ final class WebApi(spark: SparkSession, port: Int = 0,
     }
 
     val id = UUID.randomUUID().toString
-    val workDir = Files.createTempDirectory(s"graft_api_$id")
+    val workDir = Files.createDirectory(root.resolve(id))
     val source = (rows, upload) match {
       case (Some(n), _) => SourceConfig.Generate(n)
       case (_, Some(up)) =>
@@ -168,10 +178,18 @@ final class WebApi(spark: SparkSession, port: Int = 0,
 
   private def handleDownload(ex: HttpExchange, id: String): Unit =
     jobs.get(id) match {
-      case Completed(zip) =>
-        respond(ex, 200, Files.readAllBytes(zip), "application/zip")
-      case null => respondJson(ex, 404, Map("error" -> "unknown session"))
-      case _    => respondJson(ex, 409, Map("error" -> "not completed"))
+      // the one download that removes the entry serves the zip; a
+      // concurrent second one finds the session gone (404)
+      case done @ Completed(zip) if jobs.remove(id, done) =>
+        try {
+          ex.getResponseHeaders.set("Content-Type", "application/zip")
+          ex.sendResponseHeaders(200, Files.size(zip))
+          Files.copy(zip, ex.getResponseBody)
+          ex.close()
+        } finally Scratch.delete(zip.getParent)
+      case null | Completed(_) =>
+        respondJson(ex, 404, Map("error" -> "unknown session"))
+      case _ => respondJson(ex, 409, Map("error" -> "not completed"))
     }
 
   /** The browse surface (`GET /`) — same 3-step flow as the reference's
@@ -255,9 +273,12 @@ final class WebApi(spark: SparkSession, port: Int = 0,
     this
   }
 
+  /** Stops serving and deletes every session left under [[root]]; a
+    * job still running loses its output. */
   def stop(): Unit = {
     server.stop(0)
     pool.shutdown()
+    Scratch.delete(root)
   }
 }
 

@@ -65,8 +65,12 @@ object Checkpoints {
       case None => df.localCheckpoint(eager, RoundLevel)
     }
 
-  /** Frees the block-manager blocks behind a `localCheckpoint` result
-    * (the checkpointed RDD sits directly in the `LogicalRDD` leaf).
+  /** Frees what a [[round]] result holds (the checkpointed RDD sits
+    * directly in the `LogicalRDD` leaf): its block-manager blocks, and
+    * on the reliable path its `rdd-*` checkpoint files too, deleted
+    * through the Hadoop `FileSystem` of the context's conf — Spark
+    * never deletes them otherwise (`cleanCheckpoints` is off by
+    * default), so a loop would leave one set per round.
     * Call on each superseded round AFTER the next round is
     * materialized; anything derived from the freed frame must not run
     * again.
@@ -74,7 +78,12 @@ object Checkpoints {
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false); ()
+        l.rdd.unpersist(blocking = false)
+        l.rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(l.rdd.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
       case _ => ()
     }
 }

@@ -689,10 +689,11 @@ object Graphs {
     * only the triangles touching a DROPPED edge. The dropped set is
     * orders of magnitude smaller than the survivors (62k/22k/1.7k vs
     * 1.1M edges at sf0.1), so the subtraction is three anti-joins
-    * against the CHANGE, not the graph — broadcast only below the
-    * counted `broadcastCap` ([[Joins.broadcastIfSmall]]; the count is
-    * free, the dropped set is checkpoint-materialized), shuffled
-    * above it.
+    * against the CHANGE, not the graph — broadcast only while the
+    * dropped set and the proven bound on the next round's support
+    * delta, 3·(k−3)·nDropped rows, stay under `broadcastCap` (the
+    * nDropped count is free, the dropped set is checkpoint-materialized),
+    * shuffled above it.
     *
     * Round state (alive triples, surviving edges) checkpoints
     * spill-safe ([[Checkpoints.round]]) and superseded rounds are
@@ -795,7 +796,14 @@ object Graphs {
           // support are all unchanged; every remaining round reads the
           // identical census. Emit the rows without recomputation.
           fixpoint = true
-        } else if (nDropped <= broadcastCap) {
+        } else if (nDropped * math.max(1L, 3L * (k - 3)) <= broadcastCap) {
+          // Both broadcasts below are bounded by proof, with no job to
+          // count them: d0 holds the nDropped dropped edges, and
+          // `delta` at most 3·(k−3)·nDropped rows — a dropped edge has
+          // support ≤ k−3, so it lies in at most k−3 alive triangles,
+          // every dead triangle holds a dropped edge, and each dead
+          // triangle adds at most 3 edge keys. (k = 3 drops only edges
+          // in no alive triangle, so delta is empty and d0 is the bound.)
           // mark dead triangles in ONE pass over the alive checkpoint:
           // three broadcast left-join probes of the SAME dropped-edge
           // relation (identical build subtree → Spark reuses one
@@ -829,8 +837,8 @@ object Graphs {
             .groupBy(col("e.a").as("a"), col("e.b").as("b"))
             .agg(count(lit(1)).as("d"))
         } else {
-          // dropped set too large to broadcast (cluster-scale guard):
-          // shuffled anti-joins subtract it, and the NEXT round falls
+          // dropped set or its delta bound over the cap (cluster-scale
+          // guard): shuffled anti-joins subtract it, and the NEXT round falls
           // back to a full support recount (delta stays null)
           val dropped = eAnn.where(!col("pass"))
             .select(col("a").as("da"), col("b").as("db"))

@@ -802,8 +802,8 @@ ORDER BY round"""
     // loop (also the ScaleBench peel curve, so the curve measures THIS
     // query's rounds): round 1's support basis is the full triple
     // table; later rounds subtract only dropped-edge triangles via the
-    // counted 2M-row broadcast gate. (u,x),(u,y) are degree-oriented;
-    // the operator canonicalizes to a<b edge keys.
+    // 2M-row broadcast gate (3·(k−3)·nDropped ≤ 2M). (u,x),(u,y) are
+    // degree-oriented; the operator canonicalizes to a<b edge keys.
     graft.operators.Graphs
       .trussPeelStats(coOrderTriangles(s, dir), coOrderPairs(s, dir),
         rounds = 3, k = 4, broadcastCap = 2000000L)

@@ -225,8 +225,7 @@ ORDER BY c_mktsegment, event_type"""
     * batch answer.
     */
   private def streamForeachLatest(s: SparkSession, dir: String): DataFrame = {
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_latest").toString + "/latest"
+    val table = graft.util.Scratch.dir("graft_latest") + "/latest"
     EventStreams.latestPerUser(
       EventStreams.eventsStream(s, s"$dir/events.parquet"), table)
     s.read.parquet(table)

@@ -7,21 +7,25 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-JVM scratch space for queries that must round-trip through the
-  * filesystem (IO round-trips, partition-evolution rewrites, the
-  * malformed-CSV quarantine, the backfill planner's partition listing)
-  * and for the inputs a query family shares ([[materialize]]).
+/** Per-JVM scratch space: the one place that creates a temporary
+  * directory, for mains and specs alike — queries that round-trip
+  * through the filesystem (IO round-trips, partition-evolution
+  * rewrites, the malformed-CSV quarantine, streaming sinks), the inputs
+  * a query family shares ([[materialize]]), the bench mains' outputs,
+  * `WebApi` sessions, and every spec's fixture files.
   *
-  * All directories live under ONE root per JVM, deleted recursively by
-  * a shutdown hook — repeated verify/bench runs no longer accumulate
-  * orphaned temp data. Deliberately driver-local: the data written here
+  * All directories live under ONE root per JVM, and the root dies with
+  * the JVM: a shutdown hook deletes it recursively, so repeated
+  * verify/bench/test runs leave nothing behind in the temp dir. A user
+  * that frees its data earlier (a served `WebApi` session) deletes its
+  * own subdirectory. Deliberately driver-local: the data written here
   * is query-fixture scale (a cluster deployment would point the same
   * queries at real table paths, not scratch).
   */
 object Scratch {
   private lazy val root: Path = {
     val r = Files.createTempDirectory("graft_scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(r)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => delete(r)))
     r
   }
 
@@ -50,7 +54,9 @@ object Scratch {
     spark.read.parquet(path)
   }
 
-  private def deleteRecursively(p: Path): Unit =
+  /** Deletes `p` and everything under it, for a user that is done with
+    * its directory before the JVM exits; a missing `p` is a no-op. */
+  def delete(p: Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(Comparator.reverseOrder[Path]())

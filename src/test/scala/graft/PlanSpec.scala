@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.Transform
 import graft.queries.{EtlQueries, Tables}
+import graft.util.Scratch
 
 /** Physical-plan assertions — the 100 TB design contract: the intended
   * join strategies, pushdowns and (absence of) shuffles must actually
@@ -180,7 +181,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes at the scan (PartitionFilters, not post-filter)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val tmp = Scratch.dir("graft_prune")
     Tables(spark, Sf, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
@@ -196,7 +197,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("dim-filtered join onto a partitioned fact uses dynamic partition pruning") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp_pin").toString
+    val tmp = Scratch.dir("graft_dpp_pin")
     val o = Tables(spark, Sf, "orders")
       .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
     o.select(col("o_orderkey"), col("o_totalprice"), col("o_month"))

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.util.Scratch
+
 class VerifySpec extends AnyFunSuite {
 
   test("Verify rejects a wrong argument count with its usage line, before any session") {
@@ -15,13 +17,12 @@ class VerifySpec extends AnyFunSuite {
     // the out dir sits under a regular file, so a Verify that got as far
     // as writing oracle_sql.json throws there, before its spark.stop()
     // could end the session the other suites share
-    val file = java.nio.file.Files.createTempFile("verify_spec", ".txt")
-    try {
-      val e = intercept[IllegalArgumentException](Verify.main(
-        Array("sf", file.resolve("out").toString, "g_triangles,no_such_query")))
-      assert(e.getMessage.startsWith("usage: graft.Verify <sfDir> <outDir>"), e.getMessage)
-      assert(e.getMessage.contains("no_such_query") && !e.getMessage.contains("g_triangles"),
-        e.getMessage)
-    } finally java.nio.file.Files.deleteIfExists(file)
+    val file = java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(Scratch.dir("verify_spec"), "file.txt"))
+    val e = intercept[IllegalArgumentException](Verify.main(
+      Array("sf", file.resolve("out").toString, "g_triangles,no_such_query")))
+    assert(e.getMessage.startsWith("usage: graft.Verify <sfDir> <outDir>"), e.getMessage)
+    assert(e.getMessage.contains("no_such_query") && !e.getMessage.contains("g_triangles"),
+      e.getMessage)
   }
 }

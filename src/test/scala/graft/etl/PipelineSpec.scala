@@ -17,6 +17,7 @@ import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
 import graft.sources.Readers
+import graft.util.Scratch
 
 /** Integration test porting the reference's `tests/test_pipeline.py`:
   * 1-row CSV through the full pipeline → (1, 13) artifact + manifest;
@@ -103,15 +104,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   private def withTempDir[T](f: String => T): T = {
-    val dir = Files.createTempDirectory("graft_pipeline").toString
-    try f(dir)
-    finally {
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) p.listFiles().foreach(rm)
-        p.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    val dir = Scratch.dir("graft_pipeline")
+    try f(dir) finally Scratch.delete(Paths.get(dir))
   }
 
   private val fixtureCsv =

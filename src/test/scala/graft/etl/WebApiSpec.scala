@@ -3,6 +3,7 @@ package graft.etl
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
+import java.nio.file.Files
 
 import graft.SparkSpec
 
@@ -127,5 +128,30 @@ class WebApiSpec extends SparkSpec {
       assert(get(api.boundPort, "/status/nope").statusCode() == 404)
       assert(get(api.boundPort, "/download/nope").statusCode() == 404)
     } finally api.stop()
+  }
+
+  test("a served session is deleted: dir gone, /status 404; stop() deletes the root") {
+    val api = new WebApi(spark).start()
+    try {
+      val b = "graftBoundary45"
+      def submit(): String = {
+        val resp = post(api.boundPort,
+          multipart(b, Map("rows" -> "20", "formats" -> """["csv"]"""), None), b)
+        val id = """"session_id": "([^"]+)"""".r.findFirstMatchIn(resp).get.group(1)
+        assert(awaitDone(api.boundPort, id).contains("completed"))
+        assert(Files.isRegularFile(api.root.resolve(id).resolve("results.zip")))
+        id
+      }
+      val (served, kept) = (submit(), submit())
+      val zip = get(api.boundPort, s"/download/$served")
+      assert(zip.statusCode() == 200)
+      assert(zipEntries(zip.body()).exists(_.startsWith("results.csv")))
+      assert(get(api.boundPort, s"/status/$served").statusCode() == 404)
+      assert(get(api.boundPort, s"/download/$served").statusCode() == 404)
+      assert(!Files.exists(api.root.resolve(served)))
+      assert(Files.exists(api.root.resolve(kept)))
+    } finally api.stop()
+    // stop() takes the session nobody downloaded with it
+    assert(!Files.exists(api.root))
   }
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.etl.DeliveryRecord
 import graft.queries.Tables
+import graft.util.Scratch
 
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -41,7 +40,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("partition pruning: partitioned write + filtered read skips files") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = Scratch.dir("graft_part")
     Tables.events(spark, Sf)
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir).where(col("event_type") === "purchase")

@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.nio.file.{Files, Path, Paths}
+
 import graft.SparkSpec
+import graft.util.Scratch
 import org.apache.spark.sql.functions._
 
 /** [[Checkpoints.round]] routing: local mode cuts lineage via
@@ -23,10 +26,22 @@ class CheckpointsSpec extends SparkSpec {
     Checkpoints.free(df)
   }
 
-  test("reliable switch routes round() through Dataset.checkpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_relckpt").toString
+  /** Runs `body` with the reliable switch on (a fresh scratch dir), and
+    * off again afterwards. */
+  private def reliable[T](body: String => T): T = {
+    val dir = Scratch.dir("graft_relckpt")
     sys.props("spark.graft.reliableCheckpoint") = dir
-    try {
+    try body(dir) finally sys.props.remove("spark.graft.reliableCheckpoint")
+  }
+
+  private def rddDirs(under: Path): Long = {
+    val walk = Files.walk(under)
+    try walk.filter(_.getFileName.toString.startsWith("rdd-")).count()
+    finally walk.close()
+  }
+
+  test("reliable switch routes round() through Dataset.checkpoint") {
+    reliable { dir =>
       val df = Checkpoints.round(spark.range(50).toDF("v")
         .withColumn("w", col("v") + 1))
       assert(df.count() === 50)
@@ -36,9 +51,26 @@ class CheckpointsSpec extends SparkSpec {
       val set = spark.sparkContext.getCheckpointDir
       assert(set.nonEmpty && set.get.contains(
         new java.io.File(dir).getName))
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
+      val wrote = rddDirs(Paths.get(dir))
       assert(wrote >= 1, s"no rdd-* checkpoint data under $dir")
-    } finally sys.props.remove("spark.graft.reliableCheckpoint")
+    }
+  }
+
+  test("reliable free deletes superseded rounds' rdd-* files: what a loop leaves does not grow with rounds") {
+    import spark.implicits._
+    val edges = (0L until 30L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    reliable { _ =>
+      // the context keeps the first checkpoint dir it was given
+      def ckpt = new java.io.File(
+        java.net.URI.create(spark.sparkContext.getCheckpointDir.get)).toPath
+      def left(rounds: Int): Long = {
+        val before = if (spark.sparkContext.getCheckpointDir.isEmpty) 0L
+          else rddDirs(ckpt)
+        assert(Graphs.components(edges, rounds).count() === 31)
+        rddDirs(ckpt) - before
+      }
+      val (three, six) = (left(3), left(6))
+      assert(three >= 1 && three === six, s"3 rounds left $three, 6 left $six")
+    }
   }
 }

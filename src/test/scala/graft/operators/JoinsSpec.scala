@@ -1,11 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.queries.Tables
+import graft.util.Scratch
 
 class JoinsSpec extends SparkSpec {
   import spark.implicits._
@@ -154,7 +153,7 @@ class JoinsSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val wh = Files.createTempDirectory("graft_bucketed").toString
+    val wh = Scratch.dir("graft_bucketed")
     val orders = Tables(spark, Sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val lineitem = Tables(spark, Sf, "lineitem")

@@ -1,10 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkSpec}
+import graft.util.Scratch
 
 /** Planted-fixture semantics for the compressed-representation queries
   * (`graft.queries.SignatureQueries`) — the oracle gate grades them on
@@ -16,8 +15,7 @@ import graft.{SparkEntry, SparkSpec}
 class SignatureSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft-sig-spec").toFile.getAbsolutePath
+  private def tmpDir(): String = Scratch.dir("graft-sig-spec")
 
   private def writeDocs(dir: String, rows: Seq[(Long, String)]): Unit =
     rows.map { case (id, text) => (id, text, "en", "src", text.length.toLong) }

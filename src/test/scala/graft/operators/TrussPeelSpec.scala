@@ -49,16 +49,21 @@ class TrussPeelSpec extends SparkSpec {
     (math.min(a, b), math.max(a, b)) }.toSet
 
   test("trussPeelStats == naive full recount on random graphs (ScalaCheck)") {
-    val prop = Prop.forAllNoShrink(genEdges, Gen.oneOf(3, 4)) { (edges, k) =>
+    // k and broadcastCap drawn together so both broadcast gates meet the
+    // naive recount: cap 3 sits on the 3·(k−3)·nDropped delta bound
+    // (k = 4 broadcasts one dropped edge, not two), 1e6 takes the
+    // incremental broadcast; cap 0 is the fallback case below
+    val prop = Prop.forAllNoShrink(genEdges, Gen.oneOf(3, 4, 5),
+        Gen.oneOf(3L, 1000000L)) { (edges, k, cap) =>
       val pairs = edges.toSeq.toDF("a", "b")
       val got = Graphs.trussPeelStats(
         Graphs.triangleTriples(pairs), pairs, rounds = 3, k = k,
-        broadcastCap = 1000000L)
+        broadcastCap = cap)
       val want = naivePeel(edges, rounds = 3, k = k)
-      Prop(got == want) :| s"k=$k got=$got want=$want edges=$edges"
+      Prop(got == want) :| s"k=$k cap=$cap got=$got want=$want edges=$edges"
     }
     val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
+      SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
     assert(res.passed, res.status.toString)
   }
 
@@ -81,7 +86,7 @@ class TrussPeelSpec extends SparkSpec {
     // cap 0 forces every round down the non-broadcast branch, where the
     // next round recounts support in full instead of subtracting the
     // incremental delta — the cluster-scale guard must stay equivalent
-    val prop = Prop.forAllNoShrink(genEdges, Gen.oneOf(3, 4)) { (edges, k) =>
+    val prop = Prop.forAllNoShrink(genEdges, Gen.oneOf(3, 4, 5)) { (edges, k) =>
       val pairs = edges.toSeq.toDF("a", "b")
       val got = Graphs.trussPeelStats(
         Graphs.triangleTriples(pairs), pairs, rounds = 3, k = k,

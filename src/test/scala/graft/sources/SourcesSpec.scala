@@ -8,13 +8,14 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
 import graft.SparkSpec
 import graft.etl.Pipeline
+import graft.util.Scratch
 
 /** Reader/writer round-trips + dispatch errors (S2-S8, W1-W4). */
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(name: String): String =
-    Files.createTempDirectory("graft_src").resolve(name).toString
+    Scratch.dir("graft_src") + "/" + name
 
   private lazy val sample = Seq(
     ("SC1", "2025-01-01T10:00:00", "2025-01-01T11:00:00", "Small", 5.0, "Urban"),
@@ -88,8 +89,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("whole-file JSON array (the reference's layout) also reads") {
-    val dir = Files.createTempDirectory("graft_src")
-    val p = dir.resolve("arr.json").toString
+    val p = tmp("arr.json")
     Files.writeString(Paths.get(p),
       """[{"Delivery_ID":"SC1","Distance":5.0},{"Delivery_ID":"SC2","Distance":7.0}]""")
     val back = Readers.read(spark, p)
@@ -99,8 +99,7 @@ class SourcesSpec extends SparkSpec {
   test("JSON array behind >256 bytes of leading whitespace still reads as array") {
     // the sniff's 256-byte sample sees only whitespace → it must fall
     // through to the parse-then-retry probe, not declare NDJSON
-    val dir = Files.createTempDirectory("graft_srcws")
-    val p = dir.resolve("padded.json").toString
+    val p = tmp("padded.json")
     Files.writeString(Paths.get(p),
       " " * 300 +
         """[{"Delivery_ID":"SC1","Distance":5.0},{"Delivery_ID":"SC2","Distance":7.0}]""")
@@ -121,7 +120,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("jdbc (embedded Derby standing in for sqlite) write then read") {
-    val db = Files.createTempDirectory("graft_derby").resolve("db").toString
+    val db = tmp("db")
     val url = s"jdbc:derby:$db;create=true"
     Writers.jdbc(sample.select(col("Delivery_ID"), col("Distance")), url)
     val back = Readers.jdbc(spark, url)
@@ -133,7 +132,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("binaryFile source: raw payloads as rows, glob-filtered, content intact") {
-    val dir = Files.createTempDirectory("graft_bin")
+    val dir = Paths.get(Scratch.dir("graft_bin"))
     val payload = Array.tabulate[Byte](300)(i => (i % 251).toByte)
     Files.write(dir.resolve("a.img"), payload)
     Files.write(dir.resolve("b.img"), Array[Byte](1, 2, 3))
@@ -152,8 +151,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("xlsx round-trip: header, strings, numbers, nulls, timestamps, escaping") {
-    val dir = Files.createTempDirectory("graft_xlsx")
-    val p = dir.resolve("t.xlsx").toString
+    val p = tmp("t.xlsx")
     val df = Readers.normalizeTimestamps(sample)
       .withColumn("Tricky", org.apache.spark.sql.functions.lit("""a<b&"c">d"""))
       .withColumn("MaybeNull",
@@ -171,7 +169,7 @@ class SourcesSpec extends SparkSpec {
     assert(r(0).getAs[String]("Pickup_DateTime").startsWith("2025-01-01T10:00:00"))
 
     // xlsx through the full pipeline "all" fan-out
-    val out = dir.resolve("res").toString
+    val out = tmp("res")
     val cfg = graft.etl.PipelineConfig(
       graft.etl.SourceConfig.Generate(50), graft.etl.OutputConfig(out, "all"))
     val (_, res) = new graft.etl.Pipeline(spark, cfg).run()
@@ -182,7 +180,7 @@ class SourcesSpec extends SparkSpec {
 
   test("text round-trip: lines survive verbatim; dispatch routes .txt") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_text_rt")
+    val dir = Scratch.dir("graft_text_rt")
     val p = s"$dir/lines.txt"
     val lines = Seq("alpha|1", "beta|2", "with spaces and | pipe", "")
     Writers.text(lines.toDF("value"), p)
@@ -191,7 +189,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("compaction collapses a fragmented table into targetFiles splittable parts") {
-    val tmp = Files.createTempDirectory("graft_compact_spec").toString
+    val tmp = Scratch.dir("graft_compact_spec")
     val df = spark.range(10000).selectExpr("id", "id % 7 AS k")
     df.repartition(64).write.mode("overwrite").parquet(s"$tmp/frag")
     def parts(p: String): Int = new java.io.File(p).listFiles
@@ -213,8 +211,7 @@ class SourcesSpec extends SparkSpec {
   test("xlsx reader honours r= cell refs: omitted empty cells don't shift columns") {
     // Excel/xlsxwriter omit empty cells entirely and address the rest by
     // reference — build such a sheet by hand (external-upload shape)
-    val dir = Files.createTempDirectory("graft_xlsx_sparse")
-    val p = dir.resolve("sparse.xlsx")
+    val p = Paths.get(tmp("sparse.xlsx"))
     val sheet =
       """<?xml version="1.0"?><worksheet><sheetData>
         |<row r="1"><c r="A1" t="inlineStr"><is><t>name</t></is></c><c r="B1" t="inlineStr"><is><t>note</t></is></c><c r="C1" t="inlineStr"><is><t>score</t></is></c></row>

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpec
+import graft.util.Scratch
 
 /** Streaming == batch equivalence, plus genuinely-incremental state:
   * the sessionizer must carry state across micro-batches, not just
@@ -36,7 +37,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sessionization carries state across two micro-batches") {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = Scratch.dir("graft_stream")
     def ev(id: Long, user: Long, minute: Int): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
         user, "click", 1.0)
@@ -74,7 +75,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedup suppresses re-occurrences across micro-batches") {
-    val dir = Files.createTempDirectory("graft_dd").toString
+    val dir = Scratch.dir("graft_dd")
     def ev(id: Long, user: Long, kind: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf("2024-01-01 10:00:00"), user, kind, 1.0)
 
@@ -104,7 +105,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("transformWithState carries named ValueState across micro-batches") {
-    val dir = Files.createTempDirectory("graft_tws").toString
+    val dir = Scratch.dir("graft_tws")
     def ev(id: Long, minute: Int, value: Double): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
         7L, "click", value)
@@ -139,7 +140,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sprt: decision fires once at the exact crossing, then the arm freezes") {
-    val dir = Files.createTempDirectory("graft_ssprt").toString
+    val dir = Scratch.dir("graft_ssprt")
     def ev(id: Long, user: Long, minute: Int, typ: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
         user, typ, 1.0)
@@ -192,9 +193,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sprt: checkpointed restart resumes mid-test, decided state survives") {
-    val dir = Files.createTempDirectory("graft_sprtr_in").toString
-    val ckpt = Files.createTempDirectory("graft_sprtr_ck").toString
-    val outDir = Files.createTempDirectory("graft_sprtr_out").toString
+    val dir = Scratch.dir("graft_sprtr_in")
+    val ckpt = Scratch.dir("graft_sprtr_ck")
+    val outDir = Scratch.dir("graft_sprtr_out")
     def ev(id: Long, user: Long, minute: Int, typ: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
         user, typ, 1.0)
@@ -235,7 +236,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("clamped balance: zero floor binds mid-stream and state carries over") {
-    val dir = Files.createTempDirectory("graft_sclamp").toString
+    val dir = Scratch.dir("graft_sclamp")
     def ev(id: Long, minute: Int, typ: String, value: Double): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
         7L, typ, value)
@@ -272,7 +273,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming EWMA resumes the fold from carried state") {
-    val dir = Files.createTempDirectory("graft_sewma").toString
+    val dir = Scratch.dir("graft_sewma")
     def ev(id: Long, minute: Int, value: Double): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
         7L, "click", value)
@@ -307,7 +308,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming Holt resumes level AND trend from carried state") {
-    val dir = Files.createTempDirectory("graft_sholt").toString
+    val dir = Scratch.dir("graft_sholt")
     def ev(id: Long, minute: Int, value: Double): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
         7L, "click", value)
@@ -342,7 +343,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("left-outer stream join: null rows emit only when the watermark releases them") {
-    val dir = Files.createTempDirectory("graft_loj").toString
+    val dir = Scratch.dir("graft_loj")
     def ev(id: Long, user: Long, kind: String, time: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), user, kind, 1.0)
 
@@ -383,7 +384,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("finalized sessions: in-batch close emits immediately, timeout closes the tail") {
-    val dir = Files.createTempDirectory("graft_fsess").toString
+    val dir = Scratch.dir("graft_fsess")
     def ev(id: Long, user: Long, time: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), user, "click", 1.0)
     def ms(time: String): Long = Timestamp.valueOf(s"2024-01-01 $time").getTime
@@ -447,7 +448,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("finalized sessions merge in-horizon out-of-order arrivals backward") {
-    val dir = Files.createTempDirectory("graft_ooo").toString
+    val dir = Scratch.dir("graft_ooo")
     def ev(id: Long, user: Long, time: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), user, "click", 1.0)
     def ms(time: String): Long = Timestamp.valueOf(s"2024-01-01 $time").getTime
@@ -498,7 +499,7 @@ class StreamingSpec extends SparkSpec {
     // micro-batch predates the open session's start (but is within
     // gap-reach and in-horizon). Without the backward extension the
     // emitted session starts at 11:00 with 2 events.
-    val dir = Files.createTempDirectory("graft_ooo_lone").toString
+    val dir = Scratch.dir("graft_ooo_lone")
     def ev(id: Long, user: Long, time: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), user, "click", 1.0)
     def ms(time: String): Long = Timestamp.valueOf(s"2024-01-01 $time").getTime
@@ -533,9 +534,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("checkpointed restart is exactly-once: window state survives, no re-emits") {
-    val dir = Files.createTempDirectory("graft_ckpt_in").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
-    val outDir = Files.createTempDirectory("graft_ckpt_out").toString
+    val dir = Scratch.dir("graft_ckpt_in")
+    val ckpt = Scratch.dir("graft_ckpt")
+    val outDir = Scratch.dir("graft_ckpt_out")
     def ev(id: Long, time: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), 1L, "click", 1.0)
     def epoch(time: String): Long =
@@ -574,8 +575,8 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String, Long, Double)].collect().toSeq
 
     // one-shot reference: the same files through a fresh query
-    val oneCkpt = Files.createTempDirectory("graft_ckpt2").toString
-    val oneOut = Files.createTempDirectory("graft_ckpt_out2").toString
+    val oneCkpt = Scratch.dir("graft_ckpt2")
+    val oneOut = Scratch.dir("graft_ckpt_out2")
     val oneStream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val q3 = EventStreams.hourlyCounts(oneStream).writeStream
@@ -599,9 +600,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("checkpointed restart recovers flatMapGroupsWithState session state") {
-    val dir = Files.createTempDirectory("graft_fsr_in").toString
-    val ckpt = Files.createTempDirectory("graft_fsr_ck").toString
-    val outDir = Files.createTempDirectory("graft_fsr_out").toString
+    val dir = Scratch.dir("graft_fsr_in")
+    val ckpt = Scratch.dir("graft_fsr_ck")
+    val outDir = Scratch.dir("graft_fsr_out")
     def ev(id: Long, user: Long, time: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), user, "click", 1.0)
     def ms(time: String): Long = Timestamp.valueOf(s"2024-01-01 $time").getTime
@@ -638,7 +639,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("watermarked dedup: suppresses within the horizon, expires state beyond it") {
-    val dir = Files.createTempDirectory("graft_ddwm").toString
+    val dir = Scratch.dir("graft_ddwm")
     def ev(id: Long, user: Long, time: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), user, "click", 1.0)
 
@@ -672,8 +673,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch upsert folds batches and is idempotent under re-folds") {
-    val dir = Files.createTempDirectory("graft_fel_in").toString
-    val table = Files.createTempDirectory("graft_fel_t").toString + "/latest"
+    val dir = Scratch.dir("graft_fel_in")
+    val table = Scratch.dir("graft_fel_t") + "/latest"
     def ev(id: Long, user: Long, time: String, kind: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), user, kind, 1.0)
     def read() = spark.read.parquet(table)
@@ -713,7 +714,7 @@ class StreamingSpec extends SparkSpec {
 
     def finalStateRows(name: String,
         mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Long = {
-      val dir = Files.createTempDirectory(s"graft_ss_$name").toString
+      val dir = Scratch.dir(s"graft_ss_$name")
       writeBatch(dir, "b1", phase1)
       val schema = spark.read.parquet(s"$dir/b1.parquet").schema
       val stream = spark.readStream.schema(schema)
@@ -741,7 +742,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("hopping windows: every overlapping window counts the event; late data dropped") {
-    val dir = Files.createTempDirectory("graft_hop").toString
+    val dir = Scratch.dir("graft_hop")
     def ev(id: Long, time: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), 1L, "click", 1.0)
     def ms(time: String): Long = Timestamp.valueOf(s"2024-01-01 $time").getTime
@@ -780,7 +781,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("watermark drops late data in append mode") {
-    val dir = Files.createTempDirectory("graft_wm").toString
+    val dir = Scratch.dir("graft_wm")
     def ev(id: Long, time: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), 1L, "click", 1.0)
     def epoch(time: String): Long =
@@ -817,9 +818,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("checkpointed restart recovers transformWithState RocksDB state") {
-    val dir = Files.createTempDirectory("graft_twsr_in").toString
-    val ckpt = Files.createTempDirectory("graft_twsr_ck").toString
-    val outDir = Files.createTempDirectory("graft_twsr_out").toString
+    val dir = Scratch.dir("graft_twsr_in")
+    val ckpt = Scratch.dir("graft_twsr_ck")
+    val outDir = Scratch.dir("graft_twsr_out")
     def ev(id: Long, minute: Int, value: Double): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
         3L, "click", value)
@@ -852,9 +853,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("topK state: checkpointed restart recovers; batch split order is irrelevant") {
-    val ckpt = Files.createTempDirectory("graft_topk_ck").toString
-    val outDir = Files.createTempDirectory("graft_topk_out").toString
-    val dir = Files.createTempDirectory("graft_topk_in").toString
+    val ckpt = Scratch.dir("graft_topk_ck")
+    val outDir = Scratch.dir("graft_topk_out")
+    val dir = Scratch.dir("graft_topk_in")
     def ev(id: Long, value: Double): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf("2024-01-01 10:00:00"),
         1L, "purchase", value)
@@ -888,7 +889,7 @@ class StreamingSpec extends SparkSpec {
 
     // permutation-invariance: the same four events in one batch,
     // reversed order, land on the identical state (no ordering caveat)
-    val dir2 = Files.createTempDirectory("graft_topk_in2").toString
+    val dir2 = Scratch.dir("graft_topk_in2")
     writeBatch(dir2, "all", Seq(ev(4, 5.0), ev(3, 9.0), ev(2, 3.0), ev(1, 7.0)))
     val q3 = EventStreams.withRocksDbState(spark) {
       val stream = spark.readStream.schema(schema).parquet(dir2)
@@ -906,9 +907,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("kmv state: restart merges the sketch; split equals one-shot equals batch") {
-    val ckpt = Files.createTempDirectory("graft_kmv_ck").toString
-    val outDir = Files.createTempDirectory("graft_kmv_out").toString
-    val dir = Files.createTempDirectory("graft_kmv_in").toString
+    val ckpt = Scratch.dir("graft_kmv_ck")
+    val outDir = Scratch.dir("graft_kmv_out")
+    val dir = Scratch.dir("graft_kmv_in")
     def ev(id: Long, user: Long): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf("2024-01-01 10:00:00"),
         user, "view", 0.0)
@@ -942,9 +943,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("token bucket: refill/consume trajectory carries across a restart") {
-    val ckpt = Files.createTempDirectory("graft_tb_ck").toString
-    val outDir = Files.createTempDirectory("graft_tb_out").toString
-    val dir = Files.createTempDirectory("graft_tb_in").toString
+    val ckpt = Scratch.dir("graft_tb_ck")
+    val outDir = Scratch.dir("graft_tb_out")
+    val dir = Scratch.dir("graft_tb_in")
     def ev(id: Long, ms: Long): EventStreams.Event =
       EventStreams.Event(id, new Timestamp(ms), 1L, "click", 0.0)
     val t0 = 1704067200000L
@@ -991,7 +992,7 @@ class StreamingSpec extends SparkSpec {
     }
     spark.streams.addListener(listener)
     try {
-      val dir = Files.createTempDirectory("graft_obs").toString
+      val dir = Scratch.dir("graft_obs")
       def ev(id: Long, user: Long, minute: Int): EventStreams.Event =
         EventStreams.Event(id, Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00"),
           user, "click", 1.0)
@@ -1033,7 +1034,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("CEP sessions assemble the pattern across micro-batches and emit the verdict once") {
-    val dir = Files.createTempDirectory("graft_cep").toString
+    val dir = Scratch.dir("graft_cep")
     def ev(id: Long, user: Long, time: String, typ: String): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(s"2024-01-01 $time"), user, typ, 1.0)
     def ms(time: String): Long = Timestamp.valueOf(s"2024-01-01 $time").getTime
@@ -1080,7 +1081,7 @@ class StreamingSpec extends SparkSpec {
   // microsecond order is OPPOSITE to their id order -----------------
 
   test("sub-ms collisions: tws running fold follows microseconds, not id order") {
-    val dir = Files.createTempDirectory("graft_subms_tws").toString
+    val dir = Scratch.dir("graft_subms_tws")
     writeBatch(dir, "b1", Seq(
       EventStreams.Event(5L,
         Timestamp.valueOf("2024-01-01 10:00:00.000700"), 7L, "click", 2.0),
@@ -1107,7 +1108,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sub-ms collisions: sessionize counts are within-ms order-invariant") {
-    val dir = Files.createTempDirectory("graft_subms_sess").toString
+    val dir = Scratch.dir("graft_subms_sess")
     writeBatch(dir, "b1", Seq(
       EventStreams.Event(5L,
         Timestamp.valueOf("2024-01-01 10:00:00.000700"), 7L, "click", 1.0),
@@ -1131,7 +1132,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sub-ms collisions: CEP seq string stays (ms, id)-ordered like the batch slice") {
-    val dir = Files.createTempDirectory("graft_subms_cep").toString
+    val dir = Scratch.dir("graft_subms_cep")
     // µs order is purchase(id 9) BEFORE view(id 5); the buffer string
     // orders by (ms, id) — matching the batch twin's slice — so it
     // must spell "vp" (id 5 first), not the fold order "pv"
@@ -1167,9 +1168,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("kll tws: checkpointed restart resumes the serialized sketch state") {
-    val dir = Files.createTempDirectory("graft_kllr_in").toString
-    val ckpt = Files.createTempDirectory("graft_kllr_ck").toString
-    val outDir = Files.createTempDirectory("graft_kllr_out").toString
+    val dir = Scratch.dir("graft_kllr_in")
+    val ckpt = Scratch.dir("graft_kllr_ck")
+    val outDir = Scratch.dir("graft_kllr_out")
     def ev(id: Long, day: Int, value: Double): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-$day%02d 10:00:00"),
         7L, "click", value)
@@ -1226,7 +1227,7 @@ class StreamingSpec extends SparkSpec {
     // terminate it (measured both). The supported production shape is
     // a PACED processing-time trigger + lifecycle stop; this pins it:
     // the sketch lands correctly and the query stops cleanly.
-    val dir = Files.createTempDirectory("graft_kllttl").toString
+    val dir = Scratch.dir("graft_kllttl")
     def ev(id: Long, day: Int, value: Double): EventStreams.Event =
       EventStreams.Event(id, Timestamp.valueOf(f"2024-01-$day%02d 10:00:00"),
         7L, "click", value)
