@@ -440,8 +440,9 @@ object ScaleBench {
       // running sums over FEW keys (2 arms): the global-window
       // formulation puts ALL rows into 2 window partitions — wall time
       // is bound by the slowest single task however many cores exist —
-      // while Ids.prefixSumByKey range-partitions the same total order
-      // across the cluster (the q_sprt / m_shard_manifest design).
+      // while Ids.prefixSum range-partitions the same total order
+      // across the session's shuffle partitions (the q_sprt /
+      // m_shard_manifest design).
       // The claim this curve pins: window time grows ∝ n with a
       // 1-task constant, prefix-sum stays ∝ n/cores.
       // lazy: evDir only exists when the stream/running generators ran
@@ -460,8 +461,8 @@ object ScaleBench {
         val e = sev.select(pmod(col("user_id"), lit(2)).as("arm"),
           col("ts"), col("event_id"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("x"))
-        graft.operators.Ids.prefixSumByKey(
-          e, "arm", Seq("ts", "event_id"), "x", 32, "cum")
+        graft.operators.Ids.prefixSum(
+          e, Seq(col("ts"), col("event_id")), "cum", Some("x"), Seq("arm"))
       })
     }
 

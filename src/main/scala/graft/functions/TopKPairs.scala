@@ -36,10 +36,9 @@ abstract class BoundedTopK[P](k: Int)(implicit pOrd: Ordering[P])
     buf.sorted(ord)
 }
 
-/** [[BoundedTopK]] with a Long id payload. Like [[TopKAggregator]] but
-  * keeping the id alongside the score, so a per-query nearest-neighbour
-  * rank can be rebuilt from the aggregate output without a global
-  * `row_number` window.
+/** [[BoundedTopK]] with a Long id payload: the id rides alongside the
+  * score, so a per-query nearest-neighbour rank can be rebuilt from the
+  * aggregate output without a global `row_number` window.
   */
 final case class TopKPairs(k: Int) extends BoundedTopK[Long](k) {
   override def bufferEncoder: Encoder[List[(Double, Long)]] =

@@ -38,7 +38,10 @@ object Checkpoints {
     */
   val RoundLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
 
-  /** `SPARK_GRAFT_RELIABLE_CHECKPOINT` routes round state to RELIABLE
+  /** The session conf `spark.graft.reliableCheckpoint` (a
+    * `-Dspark.graft.reliableCheckpoint=…` launch lands there too, since
+    * SparkConf imports `spark.*` JVM properties), else
+    * `SPARK_GRAFT_RELIABLE_CHECKPOINT`, routes round state to RELIABLE
     * `Dataset.checkpoint` against a checkpoint directory instead of
     * `localCheckpoint`: on a real cluster an executor loss makes
     * locally-checkpointed round state unrecoverable (lineage is
@@ -46,8 +49,8 @@ object Checkpoints {
     * fault tolerance. Value = the checkpoint dir (an HDFS/DBFS path in
     * production); local mode keeps the default localCheckpoint path.
     */
-  private def reliableDir: Option[String] =
-    sys.props.get("spark.graft.reliableCheckpoint") // test seam
+  private def reliableDir(df: DataFrame): Option[String] =
+    df.sparkSession.conf.getOption("spark.graft.reliableCheckpoint")
       .orElse(sys.env.get("SPARK_GRAFT_RELIABLE_CHECKPOINT"))
       .filter(_.nonEmpty)
 
@@ -57,7 +60,7 @@ object Checkpoints {
     * there would run a second job per round.
     */
   def round(df: DataFrame, eager: Boolean = true): DataFrame =
-    reliableDir match {
+    reliableDir(df) match {
       case Some(dir) =>
         val sc = df.sparkSession.sparkContext
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)

@@ -1,150 +1,104 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
-/** Global contiguous ID assignment WITHOUT a global sort-to-one-task:
-  * the standard two-pass offset pattern every large-scale pipeline uses
-  * to number 1e11 rows (training-example ids, surrogate keys).
+/** Exact ranks and running sums WITHOUT a global sort-to-one-task: the
+  * standard two-pass offset pattern every large-scale pipeline uses to
+  * number 1e11 rows (training-example ids, surrogate keys) or to run a
+  * cumulative total over them.
   *
-  *   1. range-partition on the order key and sort within partitions —
+  *   1. range-partition on (group, order) and sort within partitions —
   *      partitions now hold disjoint, ordered key ranges;
-  *   2. first pass counts rows per partition (one long per partition to
-  *      the driver — bounded by partition count, never data);
-  *   3. second pass assigns `offset(partition) + local index`.
+  *   2. first pass sums each group's values per partition (one long per
+  *      (partition, group) to the driver — bounded by partitions plus
+  *      groups, never rows: range partitioning keeps a group in few
+  *      partitions), and the driver folds them in partition-range order
+  *      into each (partition, group)'s starting offset;
+  *   3. second pass walks each partition once, accumulating from its
+  *      offsets.
   *
-  * The result equals `ROW_NUMBER() OVER (ORDER BY key)` exactly, but no
-  * single task ever sees more than its partition: the one-task window
-  * funnel becomes an embarrassingly-parallel map. Where the range
-  * boundaries land (they come from sampling) affects only which task
-  * computes which span, never the ids themselves, because offsets are
-  * accumulated in partition-range order.
-  *
-  * A `ROW_NUMBER` over a content-hash order is the degenerate
-  * one-partition case of this; at 100 TB that window is the single
-  * worst plan in the book, and this is its replacement.
+  * The result equals the one-task window (`ROW_NUMBER`, or a running
+  * `SUM ... ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW`) exactly,
+  * but no single task ever sees more than its partition — a 3-group
+  * running sum over 1e10 rows is 3 tasks in the window plan and every
+  * range partition here. The partition count is the session's
+  * `spark.sql.shuffle.partitions` (`graft.Session` sets it to the core
+  * count), passed explicitly to `repartitionByRange` so adaptive
+  * execution cannot coalesce it. Where the range boundaries land (they
+  * come from sampling) and how many partitions there are affect only
+  * which task computes which span, never the results, because offsets
+  * are accumulated in partition-range order.
   */
 object Ids {
 
-  /** Append a 1-based contiguous `gid` column equal to the row's rank
-    * under ORDER BY `keys` (which must be a total order — include a
-    * unique tiebreak).
-    *
-    * Both passes run over the SAME materialized RDD (persisted
-    * memory-and-disk for the duration of the job), so the sampled range
-    * boundaries are computed once and shared — re-evaluating the range
-    * shuffle per pass could sample different boundaries and corrupt the
-    * offsets.
-    *
-    * @param nPartitions range partition count (cluster knob; ids do
-    *                    not depend on it)
-    */
-  def assignGlobalIds(df: DataFrame, keys: Seq[Column],
-      nPartitions: Int, gidCol: String = "gid"): DataFrame = {
-    require(keys.nonEmpty && nPartitions >= 1)
-    val spark = df.sparkSession
-    val schema = df.schema
-    val ranged = df
-      .repartitionByRange(nPartitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .toDF().rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // pass 1: per-partition counts, in partition-range order (tiny
-      // collect: one (index, count) pair per partition)
-      val counts = ranged
-        .mapPartitionsWithIndex { (i, it) =>
-          // Long accumulator: Iterator.size returns Int and would wrap
-          // silently past 2^31 rows per partition — at the 1e11-row
-          // scale this operator exists for, that corrupts every offset
-          var n = 0L; while (it.hasNext) { it.next(); n += 1 }
-          Iterator((i, n))
-        }
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = counts.scanLeft(0L)(_ + _)
-      val bc = spark.sparkContext.broadcast(offsets)
-      // pass 2: offset + local index, reading the persisted partitions
-      val withId = ranged.mapPartitionsWithIndex { (i, it) =>
-        var k = bc.value(i)
-        it.map { row => k += 1
-          org.apache.spark.sql.Row.fromSeq(row.toSeq :+ k)
-        }
-      }
-      val out = spark.createDataFrame(withId,
-        schema.add(gidCol, org.apache.spark.sql.types.LongType, nullable = false))
-      // materialize before unpersisting so the returned plan never
-      // re-runs the range sampling (localCheckpoint cuts the lineage)
-      out.localCheckpoint(eager = true)
-    } finally ranged.unpersist(blocking = false)
-  }
-
-  /** Distributed PREFIX SUM (inclusive running total of `valueCol` per
-    * `keyCol`, ordered by `orderCols`) — the generalization of
-    * [[assignGlobalIds]] from counting to summing, and the scalable
-    * replacement for a running-SUM window whose partition key has LOW
-    * cardinality (3 media kinds over 1e10 items = 3 tasks in the window
-    * plan; here every range partition scans in parallel).
-    *
-    * Pass 1 computes per-(partition, key) sums; the driver folds them
-    * in partition-range order into per-(partition, key) starting
-    * offsets (state ≈ #partitions + #keys pairs, never rows — range
-    * partitioning keeps each key in few partitions); pass 2 walks each
-    * partition once accumulating from its offsets. Both passes share
-    * one persisted RDD (same boundary-sampling argument as
-    * [[assignGlobalIds]]).
-    *
-    * `valueCol` must be LongType: the running sum is accumulated in
-    * Long arithmetic (cast narrower integers up, or scale doubles to
+  /** Append `out`, the inclusive running sum of the LongType column
+    * `value` within each `by` group, in `order` (ascending or
+    * descending columns; they must be a total order within a group —
+    * include a unique tiebreak). `value = None` counts rows, so `out`
+    * equals `ROW_NUMBER() OVER (PARTITION BY by ORDER BY order)`;
+    * empty `by` is one global group. The sum is accumulated in Long
+    * arithmetic (cast narrower integers up, or scale doubles to
     * fixed-point, before calling).
+    *
+    * Both passes run over the SAME persisted range-partitioned RDD, so
+    * the sampled boundaries are computed once and shared — re-running
+    * the range shuffle per pass could sample different boundaries and
+    * corrupt the offsets. The result is eagerly `localCheckpoint`ed
+    * before that RDD is unpersisted, so the returned plan never re-runs
+    * the sampling.
     */
-  def prefixSumByKey(df: DataFrame, keyCol: String, orderCols: Seq[String],
-      valueCol: String, nPartitions: Int, outCol: String = "cum"): DataFrame = {
-    require(orderCols.nonEmpty && nPartitions >= 1)
-    require(df.schema(valueCol).dataType ==
-      org.apache.spark.sql.types.LongType,
-      s"prefixSumByKey: $valueCol must be LongType, " +
-        s"got ${df.schema(valueCol).dataType.simpleString}")
+  def prefixSum(df: DataFrame, order: Seq[Column], out: String,
+      value: Option[String] = None, by: Seq[String] = Nil): DataFrame = {
+    require(order.nonEmpty)
+    value.foreach { v =>
+      require(df.schema(v).dataType == LongType,
+        s"prefixSum: $v must be LongType, got ${df.schema(v).dataType.simpleString}")
+    }
     val spark = df.sparkSession
     val schema = df.schema
-    val sortCols = (keyCol +: orderCols).map(col)
-    val ranged = df.repartitionByRange(nPartitions, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .toDF().rdd
+    val keys = by.map(col) ++ order
+    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val ranged = df.repartitionByRange(nParts, keys: _*)
+      .sortWithinPartitions(keys: _*)
+      .rdd
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val vIdx = schema.fieldIndex(valueCol)
-      val kIdx = schema.fieldIndex(keyCol)
-      // pass 1: per-(partition, key) sums
-      val partKey = ranged.mapPartitionsWithIndex { (i, it) =>
-        val sums = scala.collection.mutable.LinkedHashMap.empty[Any, Long]
-        it.foreach { r =>
-          val k = r.get(kIdx)
-          sums(k) = sums.getOrElse(k, 0L) + r.getLong(vIdx)
-        }
-        sums.iterator.map { case (k, s) => (i, k, s) }
+      val byIdx = by.map(schema.fieldIndex)
+      val vIdx = value.map(schema.fieldIndex)
+      val group: Row => Seq[Any] = r => byIdx.map(r.get)
+      val step: Row => Long = r => vIdx.fold(1L)(r.getLong)
+      // pass 1: per-(partition, group) sums
+      val sums = ranged.mapPartitionsWithIndex { (i, it) =>
+        val s = mutable.LinkedHashMap.empty[Seq[Any], Long]
+        it.foreach { r => val g = group(r); s(g) = s.getOrElse(g, 0L) + step(r) }
+        s.iterator.map { case (g, v) => (i, g, v) }
       }.collect()
-      // fold in partition order → starting offset of each key in each partition
-      val running = scala.collection.mutable.HashMap.empty[Any, Long]
-      val offsets: Map[(Int, Any), Long] =
-        partKey.sortBy(_._1).map { case (i, k, s) =>
-          val start = running.getOrElse(k, 0L)
-          running(k) = start + s
-          (i, k) -> start
+      // fold in partition order → starting offset of each group in each
+      // partition
+      val running = mutable.HashMap.empty[Seq[Any], Long]
+      val offsets: Map[(Int, Seq[Any]), Long] =
+        sums.sortBy(_._1).map { case (i, g, s) =>
+          val start = running.getOrElse(g, 0L)
+          running(g) = start + s
+          (i, g) -> start
         }.toMap
       val bc = spark.sparkContext.broadcast(offsets)
       // pass 2: accumulate within each partition from the offsets
-      val withCum = ranged.mapPartitionsWithIndex { (i, it) =>
-        val acc = scala.collection.mutable.HashMap.empty[Any, Long]
+      val withSum = ranged.mapPartitionsWithIndex { (i, it) =>
+        val acc = mutable.HashMap.empty[Seq[Any], Long]
         it.map { r =>
-          val k = r.get(kIdx)
-          val c = acc.getOrElse(k, bc.value.getOrElse((i, k), 0L)) + r.getLong(vIdx)
-          acc(k) = c
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ c)
+          val g = group(r)
+          val c = acc.getOrElse(g, bc.value.getOrElse((i, g), 0L)) + step(r)
+          acc(g) = c
+          Row.fromSeq(r.toSeq :+ c)
         }
       }
-      spark.createDataFrame(withCum,
-        schema.add(outCol, org.apache.spark.sql.types.LongType, nullable = false))
+      spark.createDataFrame(withSum, schema.add(out, LongType, nullable = false))
         .localCheckpoint(eager = true)
     } finally ranged.unpersist(blocking = false)
   }

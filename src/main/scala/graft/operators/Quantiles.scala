@@ -9,17 +9,36 @@ import org.apache.spark.sql.functions._
   * one task (an OpenHashMap of counts merged to a single final buffer:
   * fine at sf0.1, a memory funnel for a 10⁹-row group at 100 TB).
   *
-  * Shape: per-(group, value) counts, ONE [[Ids.prefixSumByKey]] range
-  * scan over ascending value (no task ever holds more than its range
-  * partition), then each requested percentile picks its two bracketing
-  * order statistics by INTEGER rank (smallest value whose cumulative
-  * count reaches the rank) and interpolates linearly:
+  * Shape: [[cumCounts]] — per-(group, value) counts, ONE [[Ids.prefixSum]]
+  * range scan over ascending value (no task ever holds more than its
+  * range partition; the partition count comes from the session and
+  * never changes a result), and each group's total — then each
+  * requested percentile picks its two bracketing order statistics by
+  * INTEGER rank (smallest value whose cumulative count reaches the
+  * rank) and interpolates linearly:
   * t = (n−1)·p, result = v⌊t⌋₊₁ + (t − ⌊t⌋)·(v⌈t⌉₊₁ − v⌊t⌋₊₁) — the
   * identical definition Spark's `percentile` and DuckDB's
   * `quantile_cont` both implement, so existing oracle parity (within
   * the callers' cent/day rounding slack) is preserved.
   */
 object Quantiles {
+
+  /** The count→scan→total prelude every exact rank statistic starts
+    * from: one row per (`by` group, distinct value of `value`) with
+    * columns (by…, v, cnt, cum, n) — `cnt` the value's multiplicity,
+    * `cum` the inclusive cumulative count over ascending `v` within the
+    * group, `n` the group's row count. Groups match null-safely; empty
+    * `by` is one global group. `by` must not name v, cnt, cum or n.
+    */
+  def cumCounts(df: DataFrame, value: String, by: Seq[String] = Nil): DataFrame = {
+    val pv = df.groupBy((by.map(col) :+ col(value).as("v")): _*)
+      .agg(count(lit(1)).as("cnt"))
+    val cum = Ids.prefixSum(pv, Seq(col("v")), "cum", Some("cnt"), by)
+    val tot = cum.groupBy(by.map(g => col(g).as(s"_t_$g")): _*)
+      .agg(max(col("cum")).as("n"))
+    val on = by.map(g => col(g) <=> col(s"_t_$g")).foldLeft(lit(true))(_ && _)
+    cum.join(broadcast(tot), on).drop(by.map(g => s"_t_$g"): _*)
+  }
 
   /** One row per (group, p) with the interpolated quantile `q` as
     * double. `valueCol` is GROUPED ON (the per-value count table is
@@ -33,42 +52,28 @@ object Quantiles {
     * `groupCols` empty → global quantiles, output columns (p, q).
     */
   def interpolated(df: DataFrame, valueCol: String, groupCols: Seq[String],
-      ps: Seq[Double], nPartitions: Int = 32): DataFrame = {
+      ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty)
-    val pv0 = df
-      .groupBy((groupCols.map(col) :+ col(valueCol).as("_v")): _*)
-      .agg(count(lit(1)).as("_cnt"))
-    // pack the group key into one column for the range scan
-    val pv = if (groupCols.isEmpty) pv0.withColumn("_g", lit(1))
-    else pv0.withColumn("_g", struct(groupCols.map(col): _*))
-    val cum = Ids.prefixSumByKey(
-      pv.select("_g", "_v", "_cnt"), "_g", Seq("_v"), "_cnt", nPartitions, "_cum")
-    val tot = cum.groupBy(col("_g")).agg(max(col("_cum")).as("_n"))
-    val j = cum.join(broadcast(tot), Seq("_g"))
+    def t(p: Double) = (col("n") - 1L).cast("double") * lit(p)
     // ALL bracketing picks ride ONE aggregate pass over the scan output
     // (2·|ps| conditional mins), then the interpolations explode back
     // to (group, p, q) rows — |ps| never multiplies the passes
     val aggs = ps.zipWithIndex.flatMap { case (p, i) =>
-      val t = (col("_n") - 1L).cast("double") * lit(p)
       Seq(
-        min(when(col("_cum") >= floor(t).cast("long") + 1L, col("_v")))
+        min(when(col("cum") >= floor(t(p)).cast("long") + 1L, col("v")))
           .as(s"_vlo$i"),
-        min(when(col("_cum") >= ceil(t).cast("long") + 1L, col("_v")))
+        min(when(col("cum") >= ceil(t(p)).cast("long") + 1L, col("v")))
           .as(s"_vhi$i"))
     }
-    val picked = j.groupBy(col("_g")).agg(aggs.head, aggs.tail: _*)
-      .join(broadcast(tot), Seq("_g"))
+    val picked = cumCounts(df, valueCol, groupCols)
+      .groupBy((groupCols :+ "n").map(col): _*).agg(aggs.head, aggs.tail: _*)
     val qCols = ps.zipWithIndex.map { case (p, i) =>
-      val t = (col("_n") - 1L).cast("double") * lit(p)
       struct(lit(p).as("p"),
         (col(s"_vlo$i").cast("double") +
-          (col(s"_vhi$i") - col(s"_vlo$i")).cast("double") * (t - floor(t)))
+          (col(s"_vhi$i") - col(s"_vlo$i")).cast("double") * (t(p) - floor(t(p))))
           .as("q"))
     }
-    val all = picked.select(col("_g"), explode(array(qCols: _*)).as("_x"))
-      .select(col("_g"), col("_x.p").as("p"), col("_x.q").as("q"))
-    if (groupCols.isEmpty) all.select(col("p"), col("q"))
-    else all.select(
-      (groupCols.map(g => col(s"_g.$g").as(g)) :+ col("p") :+ col("q")): _*)
+    picked.select((groupCols.map(col) :+ explode(array(qCols: _*)).as("_x")): _*)
+      .select((groupCols.map(col) :+ col("_x.p").as("p") :+ col("_x.q").as("q")): _*)
   }
 }

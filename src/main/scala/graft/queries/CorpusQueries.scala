@@ -2238,7 +2238,7 @@ GROUP BY dg.doc_id ORDER BY doc_id"""
   /** Tokenizer ENCODE: map every token to its frequency-rank vocab id
     * (the text→ids step before any training run). The vocabulary is
     * ranked WITHOUT a global window by composing
-    * [[graft.operators.Ids.assignGlobalIds]] over (−count, token) —
+    * [[graft.operators.Ids.prefixSum]] over (count desc, token) —
     * vocab ids come from range-partitioned offsets, so a 1e9-term
     * vocabulary ranks in parallel; the encode itself is one
     * token-equi-join (broadcast while the vocab head is small). Graded
@@ -2251,8 +2251,8 @@ GROUP BY dg.doc_id ORDER BY doc_id"""
       .where(col("token") =!= "")
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("token"))
     val vocab = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    val ids = graft.operators.Ids.assignGlobalIds(
-        vocab, Seq((-col("cnt")).asc, col("token").asc), 32, "token_id")
+    val ids = graft.operators.Ids.prefixSum(
+        vocab, Seq(col("cnt").desc, col("token")), "token_id")
       .select(col("token").as("v_token"), col("token_id"))
     toks.where(col("pos") <= 8)
       .join(ids, col("token") === col("v_token"))

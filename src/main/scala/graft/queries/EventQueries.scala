@@ -1313,7 +1313,7 @@ FROM f, arr ORDER BY f.t"""
     * events; the running sum over the time-ordered boundaries is the
     * live concurrency and its max is the capacity-planning number. The
     * GLOBAL running sum — the textbook one-task window — runs through
-    * [[graft.operators.Ids.prefixSumByKey]] on a constant key instead:
+    * [[graft.operators.Ids.prefixSum]] with no group key instead:
     * the distributed scan's driver state is per-partition offsets, so
     * the sweep parallelizes over range partitions at any session count.
     * Ends sort before starts at the same ms (delta asc), so
@@ -1322,7 +1322,7 @@ FROM f, arr ORDER BY f.t"""
   private def peakConcurrency(s: SparkSession, dir: String): DataFrame = {
     // sess feeds THREE consumers (both boundary-union branches + the
     // n_sessions agg) — checkpoint once so the events scan + session
-    // window run once, not three times; LAZY, because prefixSumByKey's
+    // window run once, not three times; LAZY, because Ids.prefixSum's
     // internal pass is the first action and materializes it (r10: the
     // eager variant paid one extra job per run)
     val sess = graft.operators.Checkpoints.round(sessionSpans(s, dir),
@@ -1331,9 +1331,8 @@ FROM f, arr ORDER BY f.t"""
         col("start_ms").as("ms"), lit(1L).as("delta"))
       .unionByName(sess.select(col("user_id"), col("sid"),
         (col("end_ms") + 1L).as("ms"), lit(-1L).as("delta")))
-      .withColumn("one", lit(1))
-    val swept = graft.operators.Ids.prefixSumByKey(
-      bounds, "one", Seq("ms", "delta", "user_id", "sid"), "delta", 32, "live")
+    val swept = graft.operators.Ids.prefixSum(bounds,
+      Seq("ms", "delta", "user_id", "sid").map(col), "live", Some("delta"))
     swept.agg(max(col("live")).as("peak"))
       .crossJoin(sess.agg(count(lit(1)).as("n_sessions")))
       .join(swept.groupBy(col("live").as("peak2"))
@@ -3250,7 +3249,7 @@ FROM g ORDER BY prev_type, next_type"""
     * q_decile_lift. Arm assignment is the md5-parity split the
     * bootstrap family uses; every count is an exact BIGINT; two float
     * ops per output row. The user rank comes from
-    * [[graft.operators.Ids.assignGlobalIds]] (range-partitioned
+    * [[graft.operators.Ids.prefixSum]] (range-partitioned
     * two-pass offsets — identical to ROW_NUMBER over (score desc,
     * user_id) but no single task ever holds the user table, the
     * r7-verdict fix for the one partition-less WindowExec this repo
@@ -3271,8 +3270,8 @@ FROM g ORDER BY prev_type, next_type"""
       .withColumn("treated",
         conv(substring(md5(col("user_id").cast("string")), 1, 1), 16, 10)
           .cast("int") < 8)
-    val ranked = graft.operators.Ids.assignGlobalIds(perUser,
-      Seq(col("score").desc, col("user_id")), 32, "i")
+    val ranked = graft.operators.Ids.prefixSum(perUser,
+      Seq(col("score").desc, col("user_id")), "i")
     val total = ranked.agg(count(lit(1)).as("n"))
     val d = ranked.crossJoin(broadcast(total))
       .withColumn("decile", expr("(i * 10 + n - 1) div n"))

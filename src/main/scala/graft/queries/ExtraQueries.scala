@@ -920,7 +920,7 @@ FROM orders
 WHERE CAST(year(o_orderdate) * 100 + month(o_orderdate) AS INT) % 3 = 0
 GROUP BY 1 ORDER BY ym"""
 
-  /** [[graft.operators.Ids.assignGlobalIds]] graded end-to-end: global
+  /** [[graft.operators.Ids.prefixSum]] graded end-to-end: global
     * contiguous ids in content-hash order over the orders table must
     * equal the oracle's `ROW_NUMBER() OVER (ORDER BY md5(key), key)` —
     * computed WITHOUT the one-task global window (range partition +
@@ -930,7 +930,7 @@ GROUP BY 1 ORDER BY ym"""
   private def globalIds(s: SparkSession, dir: String): DataFrame = {
     val o = Tables(s, dir, "orders").select(col("o_orderkey"),
       md5(col("o_orderkey").cast("string")).as("h"))
-    graft.operators.Ids.assignGlobalIds(o, Seq(col("h"), col("o_orderkey")), 32)
+    graft.operators.Ids.prefixSum(o, Seq(col("h"), col("o_orderkey")), "gid")
       .select(col("o_orderkey"), col("gid"))
       .orderBy("o_orderkey")
   }

@@ -1809,7 +1809,7 @@ FROM r WHERE rnk <= 10 ORDER BY seed, rnk"""
     * curve (G→0: egalitarian mesh; G→1: a few hub parts carry the
     * basket structure). Same exact-integer rank formula as q_gini
     * (2·Σi·dᵢ/(n·Σd) − (n+1)/n over ascending (degree, node) rank);
-    * the global rank comes from [[graft.operators.Ids.assignGlobalIds]]
+    * the global rank comes from [[graft.operators.Ids.prefixSum]]
     * (range-partitioned two-pass offsets) so no task ever holds the
     * node-cardinality degree table — the r7-verdict window-funnel
     * sweep.
@@ -1819,8 +1819,7 @@ FROM r WHERE rnk <= 10 ORDER BY seed, rnk"""
     val deg = pairs.select(col("a").as("node"))
       .union(pairs.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
-    graft.operators.Ids.assignGlobalIds(
-        deg, Seq(col("d"), col("node")), 32, "i")
+    graft.operators.Ids.prefixSum(deg, Seq(col("d"), col("node")), "i")
       .agg(count(lit(1)).as("n_nodes"), sum(col("d")).as("sum_deg"),
         sum(col("i") * col("d")).as("sid"))
       .select(col("n_nodes"), col("sum_deg"),

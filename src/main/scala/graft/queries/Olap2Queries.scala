@@ -1252,14 +1252,13 @@ GROUP BY c_nationkey ORDER BY c_nationkey"""
     // Doubled midrank 2·rank_min+cnt−1 per DISTINCT value, not per row:
     // with cum the inclusive cumulative count over ascending values it
     // equals 2·cum−cnt+1, computed on the per-value count table via
-    // prefixSumByKey (range-partitioned scan) and joined back onto the
+    // Ids.prefixSum (range-partitioned scan) and joined back onto the
     // rows — the raw lineitem table never funnels through a
     // partition-less rank window (r7-verdict sweep). Long arithmetic
     // from the start, consistent with the DECIMAL(38,0) guard below.
     def midrank2(c: String) = {
       val perV = r.groupBy(col(c)).agg(count(lit(1)).as("cnt"))
-      graft.operators.Ids.prefixSumByKey(
-          perV.withColumn("one", lit(1)), "one", Seq(c), "cnt", 32, "cum")
+      graft.operators.Ids.prefixSum(perV, Seq(col(c)), "cum", Some("cnt"))
         .select(col(c), (lit(2L) * col("cum") - col("cnt") + 1L).as(s"r_$c"))
     }
     val rk = r.join(midrank2("x"), Seq("x")).join(midrank2("y"), Seq("y"))
@@ -1338,7 +1337,7 @@ FROM l ORDER BY yr"""
     * when values are skewed (revenue always is) and Welch's t is the
     * wrong tool. Scale shape: no global row-level rank window — values
     * collapse to their DISTINCT-cents histogram first (groupBy), the
-    * cumulative count runs through [[graft.operators.Ids.prefixSumByKey]]
+    * cumulative count runs through [[graft.operators.Ids.prefixSum]]
     * (the chunked distributed scan), and tied ranks fold in closed form
     * (average rank of a tie group of size t starting after c rows is
     * (2c + t + 1)/2 — kept ×2 so everything stays integer). Final z is
@@ -1359,9 +1358,7 @@ FROM l ORDER BY yr"""
     val hist = vals.groupBy(col("val"))
       .agg(count(lit(1)).as("t"),
         sum(when(col("seg") === MwSegA, 1L).otherwise(0L)).as("t_a"))
-      .withColumn("k", lit("all"))
-    val cum = graft.operators.Ids.prefixSumByKey(
-      hist, "k", Seq("val"), "t", 32, "cum")
+    val cum = graft.operators.Ids.prefixSum(hist, Seq(col("val")), "cum", Some("t"))
     val agg = cum.agg(
       sum(col("t_a") * (lit(2L) * (col("cum") - col("t")) + col("t") + 1))
         .as("r1x2"),
@@ -1822,7 +1819,7 @@ FROM agg"""
     * CONSTANTS to the LLR, the running LLR is an integer combination
     * cum₊·K₊ + (n − cum₊)·K₋ of nano-floored constants — so the whole
     * trajectory needs only running counts, which come from
-    * [[graft.operators.Ids.prefixSumByKey]] (range-partition + offset
+    * [[graft.operators.Ids.prefixSum]] (range-partition + offset
     * fold): NO per-arm window partition ever holds the stream, the
     * property that keeps this exact at 100 TB where a 2-partition
     * window would serialize. Boundary comparisons are integer,
@@ -1841,12 +1838,9 @@ FROM agg"""
       pmod(col("user_id"), lit(2L)).as("arm"),
       col("ts"), col("event_id"),
       when(col("event_type") === "purchase", 1L).otherwise(0L).as("x"))
-      .withColumn("one", lit(1L))
-    val withCum = graft.operators.Ids.prefixSumByKey(
-      e, "arm", Seq("ts", "event_id"), "x", 32, "cumx")
-    val withN = graft.operators.Ids.prefixSumByKey(
-      withCum, "arm", Seq("ts", "event_id"), "one", 32, "n")
-    withN
+    val order = Seq(col("ts"), col("event_id"))
+    val withCum = graft.operators.Ids.prefixSum(e, order, "cumx", Some("x"), Seq("arm"))
+    graft.operators.Ids.prefixSum(withCum, order, "n", by = Seq("arm"))
       .withColumn("llr_nano",
         col("cumx") * lit(SprtKp) + (col("n") - col("cumx")) * lit(SprtKn))
       .where(col("llr_nano") >= SprtA || col("llr_nano") <= SprtB)
@@ -2375,7 +2369,7 @@ ORDER BY x, y"""
     * exact integer cross-multiplications (5·cum_prev < 4·total for A,
     * 20·cum_prev < 19·total for B) so no float compare can reclassify
     * a boundary part; ranking is a total (revenue desc, part) order
-    * run through [[graft.operators.Ids.prefixSumByKey]] (range
+    * run through [[graft.operators.Ids.prefixSum]] (range
     * partitions over that order) rather than a part-cardinality
     * partition-less window (r7-verdict sweep).
     */
@@ -2384,11 +2378,10 @@ ORDER BY x, y"""
       .groupBy(col("l_partkey").as("part"))
       .agg(sum(cents(col("l_extendedprice"))).as("r"))
     val tot = rev.agg(sum(col("r")).as("total"))
-    val classed = graft.operators.Ids.prefixSumByKey(
-        rev.withColumn("negr", -col("r")).withColumn("one", lit(1)),
-        "one", Seq("negr", "part"), "r", 32, "cum")
+    val classed = graft.operators.Ids.prefixSum(
+        rev, Seq(col("r").desc, col("part")), "cum", Some("r"))
       .withColumn("cum_prev", col("cum") - col("r"))
-      .drop("negr", "one", "cum")
+      .drop("cum")
       .crossJoin(broadcast(tot))
       .select(col("part"), col("r"),
         when(col("cum_prev") * 5 < col("total") * 4, "A")
@@ -2675,10 +2668,9 @@ ORDER BY rank_now"""
       count(lit(1)).as("cnt"),
       sum(when(col("pos"), 1L).otherwise(0L)).as("p"))
     // the per-value table is price-cardinality (grows with scale): the
-    // exclusive cumulative count comes from prefixSumByKey's inclusive
+    // exclusive cumulative count comes from Ids.prefixSum's inclusive
     // scan (cum − cnt), never a partition-less window (r7 sweep)
-    val ranked = graft.operators.Ids.prefixSumByKey(
-        perV.withColumn("one", lit(1)), "one", Seq("v"), "cnt", 32, "cum")
+    val ranked = graft.operators.Ids.prefixSum(perV, Seq(col("v")), "cum", Some("cnt"))
       .withColumn("rank2",
         lit(2L) * (col("cum") - col("cnt")) + col("cnt") + 1L)
     val agg = ranked.agg(
@@ -3101,10 +3093,8 @@ FROM terms GROUP BY 1 ORDER BY l_returnflag"""
       .select(abs(col("c") - col("pred")).as("r"))
     val perR = calRes.groupBy(col("r")).agg(count(lit(1)).as("cnt"))
     // residual-cardinality scan: inclusive cumulative count via
-    // prefixSumByKey, never a partition-less window (r7 sweep)
-    val cum = graft.operators.Ids.prefixSumByKey(
-        perR.withColumn("one", lit(1)), "one", Seq("r"), "cnt", 32, "cum")
-      .drop("one")
+    // Ids.prefixSum, never a partition-less window (r7 sweep)
+    val cum = graft.operators.Ids.prefixSum(perR, Seq(col("r")), "cum", Some("cnt"))
     val nCal = cal.agg(count(lit(1)).as("n_cal"))
     // k = ceil((n_cal + 1) * 0.9) in integer math
     val qhat = cum.crossJoin(broadcast(nCal))

@@ -1188,7 +1188,7 @@ FROM c"""
     * The output is the 9-cell matrix with part counts and exact
     * revenue cents — what a supply planner pins replenishment policy
     * to. One (part, month) aggregate; the cumulative-revenue rank
-    * runs through [[graft.operators.Ids.prefixSumByKey]] (range
+    * runs through [[graft.operators.Ids.prefixSum]] (range
     * partitions over the (rev desc, pk) total order) instead of a
     * partition-less running-SUM window, and the grand total rides a
     * 1-row broadcast cross join — no task ever holds the whole part
@@ -1210,10 +1210,8 @@ FROM c"""
     val cv = sd / mean
     val xyz = when(col("nm") === 1L, "Z")
       .when(cv < lit(0.5), "X").when(cv < lit(1.0), "Y").otherwise("Z")
-    val cum = graft.operators.Ids.prefixSumByKey(
-      perPart.withColumn("negrev", -col("rev")).withColumn("one", lit(1)),
-      "one", Seq("negrev", "pk"), "rev", 32, "cum")
-      .drop("negrev", "one")
+    val cum = graft.operators.Ids.prefixSum(
+      perPart, Seq(col("rev").desc, col("pk")), "cum", Some("rev"))
     val total = cum.agg(sum(col("rev")).as("total"))
     val ranked = cum.crossJoin(broadcast(total))
       .withColumn("abc_class",
@@ -1396,33 +1394,26 @@ FROM agg"""
 
   // --- exact distributed percentiles ----------------------------------
   /** EXACT P10/P50/P90 of line price per return flag — no sketch, no
-    * global sort: per-(group, value) counts, a prefixSumByKey scan over
-    * ascending value (range partitions, never a partition-less window),
-    * and the smallest value whose inclusive cumulative count reaches
-    * ⌈q·n⌉ — integer cross-multiplied (cum·den ≥ n·num) so no float
-    * rank ever rounds. The exact counterpart of q_approx_median /
+    * global sort: [[graft.operators.Quantiles.cumCounts]] (per-(group,
+    * value) counts, a prefix-sum scan over ascending value — range
+    * partitions, never a partition-less window), and the smallest value
+    * whose inclusive cumulative count reaches ⌈q·n⌉ — integer
+    * cross-multiplied (cum·den ≥ n·num) so no float rank ever rounds. The exact counterpart of q_approx_median /
     * q_quantile_rollup for when percentiles must be bit-exact at scale.
     */
   private def exactPercentiles(s: SparkSession, dir: String): DataFrame = {
-    val pv = Tables(s, dir, "lineitem")
-      .groupBy(col("l_returnflag").as("g"),
-        cents(col("l_extendedprice")).as("v"))
-      .agg(count(lit(1)).as("cnt"))
-    val cum = graft.operators.Ids.prefixSumByKey(pv, "g", Seq("v"), "cnt", 32, "cum")
-    val tot = cum.groupBy(col("g")).agg(max(col("cum")).as("n"))
-    val j = cum.join(broadcast(tot), Seq("g"))
-    // all three picks in ONE conditional-min aggregation over j (min
-    // ignores the null the `when` leaves below a percentile's rank
-    // threshold) — was three where+groupBy passes over j re-joined one
-    // by one (4 aggregations + 3 joins → 2 aggregations + 1 join),
-    // byte-identical picks
+    val li = Tables(s, dir, "lineitem").select(col("l_returnflag").as("g"),
+      cents(col("l_extendedprice")).as("v"))
+    // all three picks in ONE conditional-min aggregation (min ignores
+    // the null the `when` leaves below a percentile's rank threshold)
     def pick(num: Int, den: Int) =
       min(when(col("cum") * den >= col("n") * num, col("v")))
-    val picks = j.groupBy(col("g")).agg(
-      pick(1, 10).as("p10_cents"),
-      pick(1, 2).as("p50_cents"),
-      pick(9, 10).as("p90_cents"))
-    tot.join(picks, Seq("g")).orderBy("g")
+    graft.operators.Quantiles.cumCounts(li, "v", Seq("g"))
+      .groupBy(col("g"), col("n")).agg(
+        pick(1, 10).as("p10_cents"),
+        pick(1, 2).as("p50_cents"),
+        pick(9, 10).as("p90_cents"))
+      .orderBy("g")
   }
 
   private val exactPercentilesOracle = """WITH pv AS (
@@ -1453,13 +1444,9 @@ FROM tot t ORDER BY t.g"""
     */
   private def trimmedMean(s: SparkSession, dir: String): DataFrame = {
     def dec(c: Column) = c.cast("decimal(38,0)")
-    val pv = Tables(s, dir, "orders")
-      .groupBy(col("o_orderpriority").as("g"),
-        cents(col("o_totalprice")).as("v"))
-      .agg(count(lit(1)).as("cnt"))
-    val cum = graft.operators.Ids.prefixSumByKey(pv, "g", Seq("v"), "cnt", 32, "cum")
-    val tot = cum.groupBy(col("g")).agg(max(col("cum")).as("n"))
-    cum.join(broadcast(tot), Seq("g"))
+    val o = Tables(s, dir, "orders").select(col("o_orderpriority").as("g"),
+      cents(col("o_totalprice")).as("v"))
+    graft.operators.Quantiles.cumCounts(o, "v", Seq("g"))
       .withColumn("lo", expr("n div 20"))
       .withColumn("kept",
         greatest(lit(0L),
@@ -1511,16 +1498,9 @@ FROM k GROUP BY 1 ORDER BY g"""
     val li = Tables(s, dir, "lineitem").select(
       col("l_quantity").cast("long").as("x"),
       cents(col("l_extendedprice")).as("y"))
-    def p95(cn: String) = {
-      val pv = li.groupBy(col(cn).as("v")).agg(count(lit(1)).as("cnt"))
-        .withColumn("one", lit(1))
-      val cum = graft.operators.Ids.prefixSumByKey(
-        pv, "one", Seq("v"), "cnt", 32, "cum")
-      val tot = cum.agg(max(col("cum")).as("n"))
-      cum.crossJoin(broadcast(tot))
-        .where(col("cum") * 20L >= col("n") * 19L)
-        .agg(min(col("v")).as(s"q_$cn"))
-    }
+    def p95(cn: String) = graft.operators.Quantiles.cumCounts(li, cn)
+      .where(col("cum") * 20L >= col("n") * 19L)
+      .agg(min(col("v")).as(s"q_$cn"))
     val th = p95("x").crossJoin(p95("y"))
     li.crossJoin(broadcast(th))
       .agg(count(lit(1)).as("n"),

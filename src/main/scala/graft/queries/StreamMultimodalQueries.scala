@@ -917,7 +917,7 @@ FROM per GROUP BY 1 ORDER BY kind"""
   /** WebDataset-style shard packing plan: per media kind, items in
     * media_id order are packed greedily into ~16 KiB shards (an item
     * opens a new shard when the running bytes cross the budget). The
-    * running total comes from [[graft.operators.Ids.prefixSumByKey]] —
+    * running total comes from [[graft.operators.Ids.prefixSum]] —
     * the distributed scan — NOT a 3-task running-SUM window, so the
     * plan parallelizes over range partitions at any item count. Output
     * is the shard manifest (kind, shard, item count, bytes, id span) a
@@ -927,8 +927,8 @@ FROM per GROUP BY 1 ORDER BY kind"""
     val items = media(s, dir).toDF()
       .select(col("media_id"), col("kind"),
         length(col("payload")).cast("long").as("n_bytes"))
-    graft.operators.Ids.prefixSumByKey(
-        items, "kind", Seq("media_id"), "n_bytes", 32, "cum_bytes")
+    graft.operators.Ids.prefixSum(items, Seq(col("media_id")), "cum_bytes",
+        Some("n_bytes"), Seq("kind"))
       .select(col("media_id"), col("kind"), col("n_bytes"),
         ((col("cum_bytes") - col("n_bytes")) / ShardBytes).cast("long")
           .as("shard"))
@@ -972,8 +972,8 @@ FROM c GROUP BY 1, 2 ORDER BY kind, shard"""
       .select(col("media_id"), col("kind"),
         length(col("payload")).cast("long").as("n_bytes"),
         md5(col("payload")).as("h"))
-    val sharded = graft.operators.Ids.prefixSumByKey(
-        items, "kind", Seq("media_id"), "n_bytes", 32, "cum_bytes")
+    val sharded = graft.operators.Ids.prefixSum(items, Seq(col("media_id")),
+        "cum_bytes", Some("n_bytes"), Seq("kind"))
       .select(col("h"), col("kind"),
         ((col("cum_bytes") - col("n_bytes")) / ShardBytes).cast("long")
           .as("shard"))

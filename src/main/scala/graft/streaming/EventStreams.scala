@@ -1030,9 +1030,7 @@ object EventStreams {
     def fold(batch: DataFrame): Unit = {
       val cols = Seq("user_id", "ts", "event_id", "event_type", "value")
       val incoming = batch.select(cols.map(col): _*)
-      val existing =
-        try spark.read.parquet(tablePath).select(cols.map(col): _*)
-        catch { case _: Exception => incoming.limit(0) }
+      val existing = servingTable(spark, tablePath, incoming)
       val merged = existing.unionByName(incoming)
         .groupBy(col("user_id"))
         .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
@@ -1072,9 +1070,7 @@ object EventStreams {
         unix_millis(col("ts")).as("ts_ms"), col("event_id"),
         when(col("event_type") === "error", "D").otherwise("U").as("op"),
         col("value"))
-      val existing =
-        try spark.read.parquet(tablePath).select(incoming.columns.map(col): _*)
-        catch { case _: Exception => incoming.limit(0) }
+      val existing = servingTable(spark, tablePath, incoming)
       val merged = existing.unionByName(incoming)
         .groupBy(col("user_id"))
         .agg(max(struct(col("ts_ms"), col("event_id"), col("op"),
@@ -1085,6 +1081,20 @@ object EventStreams {
       atomicSwap(spark, tablePath, merged)
     }
     runForeach(events, fold)
+  }
+
+  /** The serving table at `tablePath` with `incoming`'s columns, or an
+    * empty frame when no table exists yet (the first batch). Existence
+    * is checked through the path's Hadoop `FileSystem`, so a table that
+    * exists but cannot be read fails the batch — and leaves the table
+    * as it was — instead of being taken for "no table" and overwritten
+    * by the batch alone. */
+  private def servingTable(spark: SparkSession, tablePath: String,
+      incoming: DataFrame): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(tablePath)
+    if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+      spark.read.parquet(tablePath).select(incoming.columns.map(col): _*)
+    else incoming.limit(0)
   }
 
   /** Write to `<table>_tmp` then rename-swap: a crash mid-write never
@@ -1108,8 +1118,7 @@ object EventStreams {
         fold(batch.toDF()))
       .trigger(Trigger.ProcessingTime(0))
       .start()
-    q.processAllAvailable()
-    q.stop()
+    try q.processAllAvailable() finally q.stop()
   }
 
   /** Drive a streaming DataFrame to a memory sink synchronously and

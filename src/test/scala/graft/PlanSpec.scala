@@ -778,10 +778,10 @@ class PlanSpec extends SparkSpec {
     // whole input through one task, so it is only admissible when the
     // input is provably bounded — below a LIMIT, or above a grouped
     // aggregate whose key cardinality is fixed (10 deciles). Queries in
-    // `zero` were rewritten onto Ids.assignGlobalIds / prefixSumByKey
-    // (range-partitioned two-pass scans) and must carry NO partition-less
-    // window at all; queries in `boundedResidue` keep one, and its child
-    // subtree must contain the bounding operator.
+    // `zero` were rewritten onto Ids.prefixSum (the range-partitioned
+    // two-pass scan) and must carry NO partition-less window at all;
+    // queries in `boundedResidue` keep one, and its child subtree must
+    // contain the bounding operator.
     def emptyPartWindows(name: String) = {
       val df = graft.SparkEntry.queries(name)(spark, Sf)
       df.queryExecution.sparkPlan.collect {

@@ -10,27 +10,6 @@ import graft.util.Scratch
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("TopKAggregator: global and per-group top-k match sort+limit") {
-    val orders = Tables(spark, Sf, "orders")
-    val topk = TopKAggregator(5).toColumn
-
-    val global = orders.select(col("o_totalprice")).as[Double]
-      .select(topk.name("top")).head().asInstanceOf[Seq[Double]]
-    val expected = orders.orderBy(col("o_totalprice").desc)
-      .select("o_totalprice").as[Double].take(5).toSeq
-    assert(global == expected)
-
-    val perGroup = orders
-      .select(col("o_orderpriority"), col("o_totalprice")).as[(String, Double)]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(topk.name("top"))
-      .collect().toMap
-    val check = orders.where(col("o_orderpriority") === "1-URGENT")
-      .orderBy(col("o_totalprice").desc).select("o_totalprice")
-      .as[Double].take(5).toSeq
-    assert(perGroup("1-URGENT") == check)
-  }
-
   test("typed Dataset boundary enforces the 6-column contract") {
     val ds = DeliveryRecord.typed(graft.etl.Generator.deliveries(spark, 100))
     assert(ds.filter(_.Distance >= 1.0).count() == 100)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 class CheckpointsSpec extends SparkSpec {
 
   test("round() default path localCheckpoints (no checkpoint dir needed)") {
-    assert(sys.props.get("spark.graft.reliableCheckpoint").isEmpty)
+    assert(spark.conf.getOption("spark.graft.reliableCheckpoint").isEmpty)
     val df = Checkpoints.round(spark.range(100).toDF("v")
       .withColumn("w", col("v") * 2))
     assert(df.count() === 100)
@@ -27,11 +27,13 @@ class CheckpointsSpec extends SparkSpec {
   }
 
   /** Runs `body` with the reliable switch on (a fresh scratch dir), and
-    * off again afterwards. */
+    * off again afterwards. The switch is session conf, but the
+    * checkpoint dir it sets is the SparkContext's and is set once: no
+    * separate session can isolate it, so later cases here read the
+    * dir the context kept. */
   private def reliable[T](body: String => T): T = {
     val dir = Scratch.dir("graft_relckpt")
-    sys.props("spark.graft.reliableCheckpoint") = dir
-    try body(dir) finally sys.props.remove("spark.graft.reliableCheckpoint")
+    withConf("spark.graft.reliableCheckpoint" -> dir)(body(dir))
   }
 
   private def rddDirs(under: Path): Long = {

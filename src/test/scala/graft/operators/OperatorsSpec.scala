@@ -773,10 +773,12 @@ class OperatorsSpec extends SparkSpec {
     val df = (1 to 500).map(i => (i.toLong, s"k${(i * 131) % 500}%03d"))
       .toDF("id", "key")
     def ids(n: Int): Map[Long, Long] =
-      Ids.assignGlobalIds(df, Seq(col("key"), col("id")), n)
-        .select(col("id"), col("gid")).as[(Long, Long)].collect().toMap
+      withConf("spark.sql.shuffle.partitions" -> n.toString) {
+        Ids.prefixSum(df, Seq(col("key"), col("id")), "gid")
+          .select(col("id"), col("gid")).as[(Long, Long)].collect().toMap
+      }
     val expected = df
-      .withColumn("gid", org.apache.spark.sql.functions.row_number().over(
+      .withColumn("gid", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("key"), col("id")))
         .cast("long"))
       .select(col("id"), col("gid")).as[(Long, Long)].collect().toMap
@@ -790,10 +792,12 @@ class OperatorsSpec extends SparkSpec {
       .map(i => (s"k${i % 3}", i.toLong, (i % 7 + 1).toLong))
       .toDF("k", "ord", "v")
     def cums(n: Int): Map[(String, Long), Long] =
-      Ids.prefixSumByKey(df, "k", Seq("ord"), "v", n)
-        .select(col("k"), col("ord"), col("cum"))
-        .as[(String, Long, Long)].collect()
-        .map { case (k, o, c) => (k, o) -> c }.toMap
+      withConf("spark.sql.shuffle.partitions" -> n.toString) {
+        Ids.prefixSum(df, Seq(col("ord")), "cum", Some("v"), Seq("k"))
+          .select(col("k"), col("ord"), col("cum"))
+          .as[(String, Long, Long)].collect()
+          .map { case (k, o, c) => (k, o) -> c }.toMap
+      }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("k")).orderBy(col("ord"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -804,6 +808,37 @@ class OperatorsSpec extends SparkSpec {
     assert(cums(5) == expected, "5 partitions must match the window scan")
     assert(cums(1) == expected && cums(16) == expected,
       "prefix sums must not depend on the partition count")
+  }
+
+  test("prefixSum == row_number / running-SUM window (ScalaCheck)") {
+    import org.apache.spark.sql.expressions.Window
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // (ord, v) rows; ord repeats, so the row id is the unique tiebreak,
+    // and the key k cycles through three values in row order
+    val rows = Gen.choose(1, 200).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(Gen.choose(0L, 20L), Gen.choose(-1000L, 1000L))))
+    val prop = Prop.forAllNoShrink(rows, Gen.oneOf(false, true),
+        Gen.oneOf(false, true), Gen.oneOf(false, true), Gen.oneOf(1, 3, 7, 32)) {
+      (rs, grouped, summed, desc, parts) =>
+      val df = rs.zipWithIndex.map { case ((o, v), i) => (i.toLong, s"k${i % 3}", o, v) }
+        .toDF("id", "k", "ord", "v")
+      val order = if (desc) Seq(col("ord").desc, col("id").desc)
+        else Seq(col("ord"), col("id"))
+      val by = if (grouped) Seq("k") else Nil
+      val value = if (summed) Some("v") else None
+      def byId(d: org.apache.spark.sql.DataFrame) =
+        d.select("id", "out").as[(Long, Long)].collect().toMap
+      val got = withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        byId(Ids.prefixSum(df, order, "out", value, by))
+      }
+      val w = Window.partitionBy(by.map(col): _*).orderBy(order: _*)
+      val want = byId(df.withColumn("out", value.fold(row_number().over(w).cast("long"))(v =>
+        sum(col(v)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))))
+      Prop(got == want) :| s"grouped=$grouped summed=$summed desc=$desc parts=$parts"
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(24), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("ppjoin prefix filtering loses no pair vs the full jaccard join") {

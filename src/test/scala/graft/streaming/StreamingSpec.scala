@@ -703,6 +703,21 @@ class StreamingSpec extends SparkSpec {
     assert(read() == after, "re-processing a batch must be a no-op")
   }
 
+  test("foreachBatch upsert fails on an unreadable table and leaves it in place") {
+    val dir = Scratch.dir("graft_fel_in")
+    val table = Scratch.dir("graft_fel_t") + "/latest"
+    writeBatch(dir, "b1", Seq(EventStreams.Event(1L,
+      Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "view", 1.0)))
+    val junk = java.nio.file.Paths.get(table, "part-0.parquet")
+    Files.createDirectories(junk.getParent)
+    Files.write(junk, "not parquet".getBytes("UTF-8"))
+    val schema = spark.read.parquet(s"$dir/b1.parquet").schema
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      EventStreams.latestPerUser(spark.readStream.schema(schema).parquet(dir), table))
+    assert(new String(Files.readAllBytes(junk), "UTF-8") == "not parquet",
+      "an unreadable table must not be replaced by the batch")
+  }
+
   test("state-store metrics: watermarked dedup EVICTS state, exact dedup only grows") {
     // the empirical half of the bounded-state claim: same two phases of
     // 500 distinct pairs 10 h apart, measure numRowsTotal from the
