@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Graphs, Joins, Similarity, TextDedup}
+import graft.queries.GraphQueries
 
 /** Volume-axis stress bench (VERDICT-r5 #2): measures the SCALE-PATH
   * operators against their quadratic baselines on synthetic corpora at
@@ -338,30 +339,7 @@ object ScaleBench {
           .distinct()
           .write.mode("overwrite").parquet(s"$tmp/cf_$m")
         val baskets = spark.read.parquet(s"$tmp/cf_$m")
-        record("cf_cosine", nOrders, () => {
-          val co = baskets.select(col("ok"), col("pk").as("a"))
-            .join(baskets.select(col("ok"), col("pk").as("b")), "ok")
-            .where(col("a") < col("b"))
-            .groupBy(col("a"), col("b")).agg(count(lit(1)).as("co"))
-          val d = baskets.groupBy(col("pk")).agg(count(lit(1)).as("d"))
-          val seeds = d.orderBy(col("d").desc, col("pk")).limit(20)
-            .select(col("pk").as("seed"))
-          val cand = co.join(broadcast(seeds), col("a") === col("seed"))
-              .select(col("seed"), col("b").as("item"), col("co"))
-            .union(co.join(broadcast(seeds), col("b") === col("seed"))
-              .select(col("seed"), col("a").as("item"), col("co")))
-          cand
-            .join(d.select(col("pk").as("seed"), col("d").as("ds")), "seed")
-            .join(d.select(col("pk").as("item"), col("d").as("di")), "item")
-            .select(col("seed"), col("item"), col("co"),
-              (col("co").cast("double") /
-                sqrt(col("ds").cast("double") * col("di").cast("double")))
-                .as("cosine"))
-            .withColumn("rnk", row_number().over(
-              org.apache.spark.sql.expressions.Window.partitionBy(col("seed"))
-                .orderBy(col("cosine").desc, col("item"))))
-            .where(col("rnk") <= 10)
-        })
+        record("cf_cosine", nOrders, () => GraphQueries.cfCosineTop(baskets))
       }
 
       // k-truss delta peel + fixed-round min-label CC (the g_ktruss /
@@ -418,23 +396,7 @@ object ScaleBench {
           .distinct()
           .write.mode("overwrite").parquet(s"$tmp/katz_$m")
         val kp = spark.read.parquet(s"$tmp/katz_$m")
-        record("katz_levels", nKatzEdges, () => {
-          val sym = kp.select(col("a").as("u"), col("b").as("v"))
-            .union(kp.select(col("b").as("u"), col("a").as("v")))
-          val s1 = sym.groupBy(col("u")).agg(count(lit(1)).as("s1"))
-            .localCheckpoint(eager = true)
-          val s2 = sym.join(s1.select(col("u").as("v"), col("s1")), "v")
-            .groupBy(col("u")).agg(sum(col("s1")).as("s2"))
-            .localCheckpoint(eager = true)
-          val s3 = sym.join(s2.select(col("u").as("v"), col("s2")), "v")
-            .groupBy(col("u")).agg(sum(col("s2")).as("s3"))
-          s1.join(s2, "u").join(s3, "u")
-            .select(col("u"),
-              (col("s1").cast("double") * lit(0.01)
-                + col("s2").cast("double") * lit(0.0001)
-                + col("s3").cast("double") * lit(0.000001)).as("katz"))
-            .orderBy(col("katz").desc, col("u")).limit(20)
-        })
+        record("katz_levels", nKatzEdges, () => GraphQueries.katzTop(kp))
       }
 
       // running sums over FEW keys (2 arms): the global-window

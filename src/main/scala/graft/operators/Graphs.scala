@@ -103,8 +103,7 @@ object Graphs {
       }
       // cut lineage before the caches go: the result is one long per
       // node, tiny next to the edge list it summarizes
-      ranks.select(col("node"), col("r").as("rank_micro"))
-        .localCheckpoint(eager = true)
+      Checkpoints.round(ranks.select(col("node"), col("r").as("rank_micro")))
     } finally {
       e.unpersist(blocking = false)
       nds.unpersist(blocking = false)
@@ -199,9 +198,8 @@ object Graphs {
         hub = nextHub
         hubOwned = true
       }
-      val out = auth.join(hub, "node")
-        .select(col("node"), col("a").as("auth_micro"), col("h").as("hub_micro"))
-        .localCheckpoint(eager = true)
+      val out = Checkpoints.round(auth.join(hub, "node")
+        .select(col("node"), col("a").as("auth_micro"), col("h").as("hub_micro")))
       Checkpoints.free(auth)
       Checkpoints.free(hub)
       out
@@ -276,9 +274,8 @@ object Graphs {
             bf.scalar(), xxhash64(col("x"), col("y"))))
         } else wedgesAll
       // inner join (not semi): each closed wedge IS one triangle
-      wedges.join(closing, Seq("x", "y"))
-        .select(col("u"), col("x"), col("y"))
-        .localCheckpoint(eager = true)
+      Checkpoints.round(wedges.join(closing, Seq("x", "y"))
+        .select(col("u"), col("x"), col("y")))
     } finally {
       oriented.unpersist(blocking = false)
       p.unpersist(blocking = false)

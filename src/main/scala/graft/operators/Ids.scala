@@ -48,9 +48,9 @@ object Ids {
     * Both passes run over the SAME persisted range-partitioned RDD, so
     * the sampled boundaries are computed once and shared — re-running
     * the range shuffle per pass could sample different boundaries and
-    * corrupt the offsets. The result is eagerly `localCheckpoint`ed
-    * before that RDD is unpersisted, so the returned plan never re-runs
-    * the sampling.
+    * corrupt the offsets. The result is eagerly [[Checkpoints.round]]ed
+    * before that RDD is unpersisted (a reliable checkpoint re-reads
+    * it), so the returned plan never re-runs the sampling.
     */
   def prefixSum(df: DataFrame, order: Seq[Column], out: String,
       value: Option[String] = None, by: Seq[String] = Nil): DataFrame = {
@@ -98,8 +98,8 @@ object Ids {
           Row.fromSeq(r.toSeq :+ c)
         }
       }
-      spark.createDataFrame(withSum, schema.add(out, LongType, nullable = false))
-        .localCheckpoint(eager = true)
+      Checkpoints.round(
+        spark.createDataFrame(withSum, schema.add(out, LongType, nullable = false)))
     } finally ranged.unpersist(blocking = false)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{CorpusQuality, TextDedup}
+import graft.operators.{Checkpoints, CorpusQuality, TextDedup}
 import Sql.D
 
 /** Corpus-hygiene surface over `documents`: Gopher-style repetition
@@ -1565,8 +1565,8 @@ FROM chunks GROUP BY 1 ORDER BY source"""
     // vocabulary is tiny next to the token stream — checkpoint it once
     // and reuse for the node universe AND the final display join (each
     // consumer previously re-ran the whole tokenization scan)
-    val words = tok.where(col("w") =!= "").select(col("w")).distinct()
-      .localCheckpoint()
+    val words = Checkpoints.round(
+      tok.where(col("w") =!= "").select(col("w")).distinct())
     val nodes = words.select(wid(col("w")).as("node")).distinct()
     val ranks = graft.operators.Graphs.pageRank(edges, nodes, 5)
     ranks.join(words.select(wid(col("w")).as("node"), col("w").as("word")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Checkpoints
 import Sql.D
 
 /** Batch queries over the `events` table (the streaming-source analog):
@@ -1325,7 +1326,7 @@ FROM f, arr ORDER BY f.t"""
     // window run once, not three times; LAZY, because Ids.prefixSum's
     // internal pass is the first action and materializes it (r10: the
     // eager variant paid one extra job per run)
-    val sess = graft.operators.Checkpoints.round(sessionSpans(s, dir),
+    val sess = Checkpoints.round(sessionSpans(s, dir),
       eager = false)
     val bounds = sess.select(col("user_id"), col("sid"),
         col("start_ms").as("ms"), lit(1L).as("delta"))
@@ -3153,12 +3154,11 @@ FROM st, resid"""
     */
   private def leadLagCorr(s: SparkSession, dir: String): DataFrame = {
     def dd(c: Column) = c.cast("double")
-    val hourlyVp = Tables.events(s, dir)
+    val hourlyVp = Checkpoints.round(Tables.events(s, dir)
       .where(col("event_type").isin("view", "purchase"))
       .groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("h"))
       .agg(sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("v"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("p"))
-      .localCheckpoint(eager = true)
+        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("p")))
     val lags = s.range(-3, 4).select(col("id").as("lag"))
     val shifted = hourlyVp.select(col("h"), col("p"))
       .crossJoin(broadcast(lags))

@@ -121,9 +121,8 @@ $rounds"""
   private def stationaryDist(s: SparkSession, dir: String): DataFrame = {
     val outW = kEdges(s, dir).groupBy(col("src"))
       .agg(sum(col("w")).as("w_out"))
-    val e = kEdges(s, dir).join(outW, "src")
-      .select(col("src"), col("dst"), col("w"), col("w_out"))
-      .localCheckpoint(eager = true)
+    val e = Checkpoints.round(kEdges(s, dir).join(outW, "src")
+      .select(col("src"), col("dst"), col("w"), col("w_out")))
     var pi = kNodes(s, dir).withColumn("r", lit(1000000L))
     for (_ <- 1 to 5) {
       val inflow = e.join(pi, e("src") === pi("node"))
@@ -358,18 +357,18 @@ ORDER BY lift DESC, a, b LIMIT 15"""
       // so the (count desc, lbl) argmax is just min(v) — one aggregate,
       // no join. (Valid because `pairs` is distinct; rounds 2+ run the
       // generic update.)
-      var labels = sym.groupBy(col("u"))
+      var labels = Checkpoints.round(sym.groupBy(col("u"))
         .agg(min(col("v")).as("lbl"))
-        .select(col("u").as("node"), col("lbl"))
-        .localCheckpoint()
+        .select(col("u").as("node"), col("lbl")))
       for (_ <- 2 to 3) {
-        labels = sym
+        val next = Checkpoints.round(sym
           .join(labels.select(col("node").as("v"), col("lbl")), Seq("v"))
           .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("c"))
           .groupBy(col("u"))
           .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("u").as("node"), (-col("m.nl")).as("lbl"))
-          .localCheckpoint()
+          .select(col("u").as("node"), (-col("m.nl")).as("lbl")))
+        Checkpoints.free(labels)
+        labels = next
       }
       labels
     } finally sym.unpersist(blocking = false)
@@ -718,14 +717,10 @@ GROUP BY e.src ORDER BY e.src"""
   private def kcore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val pairs = coOrderPairs(s, dir)
-    // Edge rounds stay DESERIALIZED (r9 A/B: SER round state cost ~+1 s
-    // of per-round serialize/deserialize on the 2.2M-row halfedge
-    // table); lazy now, because the census agg below materializes each
-    // round as a side effect. Blocks are swept by the harness between
-    // queries.
-    var e = pairs.select(col("a").as("u"), col("b").as("v"))
-      .union(pairs.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(eager = false) // round 0's census agg materializes it
+    // Edge rounds are lazy: the census agg below materializes each
+    // round as a side effect (round 0's included).
+    var e = Checkpoints.round(pairs.select(col("a").as("u"), col("b").as("v"))
+      .union(pairs.select(col("b").as("u"), col("a").as("v"))), eager = false)
     // Each round's census (n_nodes = distinct u, n_halfedges = |e|) is
     // exactly an aggregate of the NEXT degree table (count of groups /
     // sum of degrees), so one degree pass per round serves the census,
@@ -745,9 +740,10 @@ GROUP BY e.src ORDER BY e.src"""
       // at any SF where the degree table fits the driver gate, and
       // Catalyst sizes it from the checkpoint
       val keep = deg.where(col("d") >= k).select(col("u").as("kn"))
-      val eNext = e.join(keep, col("u") === col("kn"), "left_semi")
-        .join(keep.select(col("kn").as("kv")), col("v") === col("kv"), "left_semi")
-        .localCheckpoint(eager = false)
+      val eNext = Checkpoints.round(
+        e.join(keep, col("u") === col("kn"), "left_semi")
+          .join(keep.select(col("kn").as("kv")), col("v") === col("kv"), "left_semi"),
+        eager = false)
       val degNext = degrees(eNext) // materializes eNext as a side effect
       val st = degNext.agg(coalesce(sum(col("d")), lit(0L)),
         count(lit(1))).head() // materializes degNext
@@ -847,7 +843,7 @@ ORDER BY round"""
     * φ is one final division. Top 10 communities by volume.
     */
   private def conductance(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coOrderPairs(s, dir).localCheckpoint()
+    val pairs = Checkpoints.round(coOrderPairs(s, dir))
     locally {
       val labels = coOrderLpaLabels(s, dir)
       val la = labels.select(col("node").as("a"), col("lbl").as("ca"))
@@ -909,11 +905,11 @@ ORDER BY vol DESC, community LIMIT 10"""
     * MEASURE — communities²-free, all joins on node/community keys.
     */
   private def modularity(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint, not persist/unpersist: the returned plan
+    // checkpoint, not persist/unpersist: the returned plan
     // executes AFTER this function exits, so an unpersist in a finally
     // would evict the cache before the intra/deg branches ever read it
     // and the distinct self-join would recompute at collect time
-    val pairs = coOrderPairs(s, dir).localCheckpoint()
+    val pairs = Checkpoints.round(coOrderPairs(s, dir))
     locally {
       val labels = coOrderLpaLabels(s, dir)
       val la = labels.select(col("node").as("a"), col("lbl").as("ca"))
@@ -976,7 +972,7 @@ ORDER BY dc.community"""
     // top (50 rows) is read twice (the broadcast probe + the final
     // join): checkpoint it so the wedge join + weight agg + TakeOrdered
     // behind it run ONCE, not per consumer
-    val top = graft.operators.Checkpoints.round(
+    val top = Checkpoints.round(
       a.join(b, "ok").where(col("a") < col("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("n_orders"))
         .orderBy(col("n_orders").desc, col("a"), col("b"))
@@ -1163,12 +1159,12 @@ ORDER BY coeff DESC, d.node LIMIT 25"""
 
   private def linkPred(scoreCol: String, term: org.apache.spark.sql.Column)(
       s: SparkSession, dir: String): DataFrame = {
-    val pairs = coOrderPairs(s, dir).localCheckpoint()
+    val pairs = Checkpoints.round(coOrderPairs(s, dir))
     val sym = pairs.select(col("a").as("u"), col("b").as("v"))
       .union(pairs.select(col("b").as("u"), col("a").as("v")))
     // deg is read twice (source ranking + the per-neighbor weight
     // join): checkpoint so the degree agg over sym runs once
-    val deg = graft.operators.Checkpoints.round(
+    val deg = Checkpoints.round(
       sym.groupBy(col("u")).agg(count(lit(1)).as("deg")))
     val sources = deg.orderBy(col("deg").desc, col("u"))
       .limit(LinkPredSources).select(col("u").as("s"))
@@ -1320,14 +1316,14 @@ ORDER BY n_nodes DESC, scc_id"""
       // deg feeds the hub pick AND the node count: lazy checkpoint so
       // the union + groupBy over pairs runs once, not twice (the hub
       // TakeOrdered materializes it; count reads blocks)
-      val deg = graft.operators.Checkpoints.round(
+      val deg = Checkpoints.round(
         pairs.select(col("a").as("node"))
           .union(pairs.select(col("b").as("node")))
           .groupBy(col("node")).agg(count(lit(1)).as("d")), eager = false)
-      val hubs = deg.orderBy(col("d").desc, col("node")).limit(5)
-        .select(col("node")).localCheckpoint(eager = true)
+      val hubs = Checkpoints.round(deg.orderBy(col("d").desc, col("node")).limit(5)
+        .select(col("node")))
       val nNodes = deg.count()
-      graft.operators.Checkpoints.free(deg)
+      Checkpoints.free(deg)
       // "before" labels come from the SHARED materialization; only the
       // hub-filtered graph's labeling runs per-query
       val labA = coOrderCcLabels(s, dir)
@@ -1402,21 +1398,21 @@ SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
     */
   private def bowtie(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = kEdges(s, dir)
+    val edges = Checkpoints.round(kEdges(s, dir)
       .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst")).distinct().localCheckpoint()
+      .select(col("src"), col("dst")).distinct())
     // IN/OUT come straight off the SCC loop's transitive closure —
     // reach(src, dst) ⊇ every ≥1-edge path — instead of re-running two
     // frontier fixpoints over the edge list (r10; the oracle reads the
     // same closure CTE): out = {r.dst : r.src ∈ core},
     // in = {r.src : r.dst ∈ core}, core excluded by the anti-join.
     val (labelsRaw, reach) = Graphs.sccWithClosure(edges)
-    val labels = labelsRaw.localCheckpoint()
+    val labels = Checkpoints.round(labelsRaw)
     val giant = labels.groupBy(col("scc_id")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("scc_id")).limit(1)
       .select(col("scc_id")).as[Long].head()
-    val core = labels.where(col("scc_id") === giant)
-      .select(col("node")).localCheckpoint()
+    val core = Checkpoints.round(labels.where(col("scc_id") === giant)
+      .select(col("node")))
     def reachSet(coreKey: String, emit: String): DataFrame =
       reach.join(core.withColumnRenamed("node", coreKey), Seq(coreKey))
         .select(col(emit).as("node")).distinct()
@@ -1425,7 +1421,7 @@ SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
     val nOut = reachSet("src", "dst").join(core, Seq("node"), "left_anti").count()
     val nIn = reachSet("dst", "src").join(core, Seq("node"), "left_anti").count()
     val nAll = nodes.count()
-    graft.operators.Checkpoints.free(reach)
+    Checkpoints.free(reach)
     Seq((nAll, nCore, nIn, nOut, nAll - nCore - nIn - nOut))
       .toDF("n_nodes", "n_core", "n_in", "n_out", "n_other")
   }
@@ -1692,17 +1688,21 @@ ORDER BY motif"""
   private val KatzAlpha2 = KatzAlpha * KatzAlpha
   private val KatzAlpha3 = KatzAlpha * KatzAlpha * KatzAlpha
 
-  private def katz(s: SparkSession, dir: String): DataFrame = {
-    val pairs = coOrderPairs(s, dir)
+  private def katz(s: SparkSession, dir: String): DataFrame =
+    katzTop(coOrderPairs(s, dir))
+
+  /** g_katz over any undirected (a, b) edge list (a < b, distinct) —
+    * ScaleBench's katz_levels point times this same body. */
+  def katzTop(pairs: DataFrame): DataFrame = {
     val sym = pairs.select(col("a").as("u"), col("b").as("v"))
       .union(pairs.select(col("b").as("u"), col("a").as("v")))
       .persist()
     try {
-      val s1 = sym.groupBy(col("u")).agg(count(lit(1)).as("s1"))
-        .localCheckpoint(eager = true)
-      val s2 = sym.join(s1.select(col("u").as("v"), col("s1")), "v")
-        .groupBy(col("u")).agg(sum(col("s1")).as("s2"))
-        .localCheckpoint(eager = true)
+      val s1 = Checkpoints.round(
+        sym.groupBy(col("u")).agg(count(lit(1)).as("s1")))
+      val s2 = Checkpoints.round(
+        sym.join(s1.select(col("u").as("v"), col("s1")), "v")
+          .groupBy(col("u")).agg(sum(col("s1")).as("s2")))
       val s3 = sym.join(s2.select(col("u").as("v"), col("s2")), "v")
         .groupBy(col("u")).agg(sum(col("s2")).as("s3"))
       def d(c: org.apache.spark.sql.Column) = c.cast("double")
@@ -1741,8 +1741,12 @@ ORDER BY katz DESC, node LIMIT 20"""
     * the per-seed top-10 window is bounded by seed count × candidate
     * list — the classic Amazon-style item-to-item shape on Spark.
     */
-  private def cfCosine(s: SparkSession, dir: String): DataFrame = {
-    val li = coOrderLi(s, dir)
+  private def cfCosine(s: SparkSession, dir: String): DataFrame =
+    cfCosineTop(coOrderLi(s, dir))
+
+  /** g_cf_cosine over any distinct (ok, pk) order–item incidence —
+    * ScaleBench's cf_cosine point times this same body. */
+  def cfCosineTop(li: DataFrame): DataFrame = {
     val co = li.select(col("ok"), col("pk").as("a"))
       .join(li.select(col("ok"), col("pk").as("b")), "ok")
       .where(col("a") < col("b"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.Transform
+import graft.operators.Checkpoints
 import Sql.D
 
 /** Second OLAP wave: pivot, cube, exact interpolated quantiles. */
@@ -1462,7 +1463,9 @@ FROM agg"""
     * rejection frontier is one window max over the in-ladder ranks.
     */
   private def fdrBh(s: SparkSession, dir: String): DataFrame = {
-    val per = Tables(s, dir, "customer")
+    // 25 rows; checkpointed so the totals derivation re-reads the
+    // moment table, not the orders⋈customer join (one scan pair)
+    val per = Checkpoints.round(Tables(s, dir, "customer")
       .join(Tables(s, dir, "orders"),
         col("c_custkey") === col("o_custkey"))
       .select(col("c_nationkey").cast("long").as("nation"),
@@ -1471,10 +1474,7 @@ FROM agg"""
         floor(col("o_totalprice")).cast("long").as("c"))
       .groupBy(col("nation"))
       .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"),
-        sum(col("c") * col("c")).as("s2"))
-      // 25 rows; checkpointed so the totals derivation re-reads the
-      // moment table, not the orders⋈customer join (one scan pair)
-      .localCheckpoint(eager = true)
+        sum(col("c") * col("c")).as("s2")))
     val tot = per.agg(sum(col("n")).as("tn"), sum(col("s1")).as("ts1"),
       sum(col("s2")).as("ts2"))
     import org.apache.spark.sql.Column

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Graphs, Similarity}
+import graft.operators.{Checkpoints, Graphs, Similarity}
 import Sql.D
 
 /** Similarity-search surface over `embeddings`: brute-force cosine top-k
@@ -396,19 +396,19 @@ scored_cand AS (
   private val DbMinPts = 4
 
   private def dbscan(s: SparkSession, dir: String): DataFrame = {
-    val cand = Similarity
+    // lazy: CC's first convergence agg is the earliest action and
+    // materializes the whole cand -> core chain (r10; the eager
+    // variants paid four extra materialization jobs per run); cand
+    // feeds degree, core-edges, borders
+    val cand = Checkpoints.round(Similarity
       .lshCandidates(emb(s, dir), planes, Bands, RowsPerBand, DbEps)
-      .select(col("a_id"), col("b_id"))
-      // lazy: CC's first convergence agg is the earliest action and
-      // materializes the whole cand -> core chain (r10; the eager
-      // variants paid four extra materialization jobs per run)
-      .localCheckpoint(eager = false) // feeds degree, core-edges, borders
+      .select(col("a_id"), col("b_id")), eager = false)
     val sym = cand.select(col("a_id").as("id"), col("b_id").as("nb"))
       .union(cand.select(col("b_id").as("id"), col("a_id").as("nb")))
     // core (a bare id list) feeds five consumers (both core-edge semi
     // joins — which CC's symmetrization doubles — plus the cluster and
     // border joins): checkpoint so the degree agg runs once
-    val core = graft.operators.Checkpoints.round(
+    val core = Checkpoints.round(
       sym.groupBy(col("id")).agg(count(lit(1)).as("n_nbrs"))
         .where(col("n_nbrs") >= DbMinPts).select(col("id")), eager = false)
     val coreEdges = cand
@@ -424,10 +424,10 @@ scored_cand AS (
     // (id, cluster) over core points is read by THREE consumers (both
     // border join sides + the core role rows) — checkpoint it once
     // instead of re-running the degree groupBy + label join per use
-    val coreClusters = core
+    val coreClusters = Checkpoints.round(core
       .join(comp, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("cluster"))
-      .localCheckpoint(eager = false)
+      .select(col("id"), coalesce(col("comp"), col("id")).as("cluster")),
+      eager = false)
     val borders = sym
       .join(coreClusters.select(col("id").as("nb"), col("cluster")),
         Seq("nb"))
@@ -435,11 +435,10 @@ scored_cand AS (
       .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
     // assigned feeds the noise anti-join AND the final union — one
     // checkpoint saves the second border recompute
-    val assigned = coreClusters
+    val assigned = Checkpoints.round(coreClusters
       .select(col("id"), lit("core").as("role"), col("cluster"))
       .union(borders.select(col("id"), lit("border").as("role"),
-        col("cluster")))
-      .localCheckpoint(eager = false)
+        col("cluster"))), eager = false)
     val noise = emb(s, dir).select(col("id"))
       .join(assigned.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), lit("noise").as("role"), lit(-1L).as("cluster"))
@@ -1610,20 +1609,20 @@ SELECT q_id, pick, n_id, mmr_score FROM (
     // materializes base/graph/every beam round in ONE job — the eager
     // variants ran six extra materialization jobs per run while the
     // lazy LogicalRDD leaves keep the per-round plans just as shallow
-    val base = e.select(col("id"), Similarity.quantize(col("vec")).as("qv"))
-      .withColumn("nn", Similarity.normSqQ(col("qv")))
-      .localCheckpoint(eager = false) // feeds graph build + every round's scoring
+    // base feeds graph build + every round's scoring
+    val base = Checkpoints.round(
+      e.select(col("id"), Similarity.quantize(col("vec")).as("qv"))
+        .withColumn("nn", Similarity.normSqQ(col("qv"))), eager = false)
     val cand = Similarity.lshCandidates(e, planes, Bands, RowsPerBand, MinCos)
     val sym = cand
       .select(col("a_id").as("node"), col("b_id").as("nbr"), col("cosine"))
       .union(cand
         .select(col("b_id").as("node"), col("a_id").as("nbr"), col("cosine")))
-    val graph = sym.groupBy(col("node"))
+    val graph = Checkpoints.round(sym.groupBy(col("node")) // reused every round
       .agg(graft.functions.TopKPairs.topK(GraphK)(
         col("cosine"), col("nbr").cast("long")).as("top"))
       .select(col("node"), explode(col("top")).as("x"))
-      .select(col("node"), col("x._2").as("nbr"))
-      .localCheckpoint(eager = false) // reused every round
+      .select(col("node"), col("x._2").as("nbr")), eager = false)
     val queries = base.where(pmod(col("id"), lit(QueryStride)) === 0)
       .select(col("id").as("q_id"), col("qv").as("qqv"), col("nn").as("qn"))
     // multiple spread entry points cut the expected path length to the
@@ -1647,10 +1646,10 @@ SELECT q_id, pick, n_id, mmr_score FROM (
         .select(col("q_id"), col("cand").as("n_id"),
           Similarity.cosineQ(Similarity.dotQ(col("qv"), col("qqv")),
             col("nn"), col("qn")).as("cosine"))
-      beam = Similarity.perQueryTopK(scored, WalkBeam)
+      // cut per-round lineage, no round job
+      beam = Checkpoints.round(Similarity.perQueryTopK(scored, WalkBeam)
         .select(col("q_id"), col("rank"), col("n_id").as("cand"),
-          col("cosine"))
-        .localCheckpoint(eager = false) // cut per-round lineage, no round job
+          col("cosine")), eager = false)
     }
     val exact = Similarity.bruteForceTopK(
         e, e.where(pmod(col("id"), lit(QueryStride)) === 0), 1)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.operators.Multimodal
+import graft.operators.{Checkpoints, Multimodal}
 import graft.streaming.EventStreams
 
 /** Streaming + multimodal surface.
@@ -422,8 +422,8 @@ ORDER BY purchase_id, view_id NULLS FIRST"""
     // checkpoint: the readout self-joins the memory-sink view (days ×
     // grid × daily), and re-referencing the same view thrice trips
     // Catalyst's conflicting-reference resolution
-    val daily = EventStreams.runToMemory(s, out, "graft_stream_psi",
-      OutputMode.Complete()).localCheckpoint(true)
+    val daily = Checkpoints.round(EventStreams.runToMemory(s, out,
+      "graft_stream_psi", OutputMode.Complete()))
     val base = Tables.events(s, dir)
       .where(col("event_type") === "purchase" && col("value").isNotNull)
       .select(expr("unix_millis(ts) div 86400000").as("d"),

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import graft.SparkSpec
 import graft.util.Scratch
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** [[Checkpoints.round]] routing: local mode cuts lineage via
@@ -42,6 +43,16 @@ class CheckpointsSpec extends SparkSpec {
     finally walk.close()
   }
 
+  /** How many `rdd-*` dirs `body` leaves under the context's checkpoint
+    * dir (the first one it was given; none set yet counts as 0). */
+  private def rddDirsLeftBy(body: => Unit): Long = {
+    def now = spark.sparkContext.getCheckpointDir.fold(0L)(d =>
+      rddDirs(new java.io.File(java.net.URI.create(d)).toPath))
+    val before = now
+    body
+    now - before
+  }
+
   test("reliable switch routes round() through Dataset.checkpoint") {
     reliable { dir =>
       val df = Checkpoints.round(spark.range(50).toDF("v")
@@ -62,17 +73,35 @@ class CheckpointsSpec extends SparkSpec {
     import spark.implicits._
     val edges = (0L until 30L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     reliable { _ =>
-      // the context keeps the first checkpoint dir it was given
-      def ckpt = new java.io.File(
-        java.net.URI.create(spark.sparkContext.getCheckpointDir.get)).toPath
-      def left(rounds: Int): Long = {
-        val before = if (spark.sparkContext.getCheckpointDir.isEmpty) 0L
-          else rddDirs(ckpt)
-        assert(Graphs.components(edges, rounds).count() === 31)
-        rddDirs(ckpt) - before
-      }
+      def left(rounds: Int): Long =
+        rddDirsLeftBy(assert(Graphs.components(edges, rounds).count() === 31))
       val (three, six) = (left(3), left(6))
       assert(three >= 1 && three === six, s"3 rounds left $three, 6 left $six")
     }
+  }
+
+  test("reliable switch reaches the operators' own cuts: pageRank, triangleTriples, prefixSum") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 1L), (3L, 4L, 1L))
+      .toDF("src", "dst", "w")
+    val nodes = (1L to 4L).toDF("node")
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (2L, 4L)).toDF("a", "b")
+    val vals = (1L to 20L).map(i => (i % 3, i)).toDF("g", "v")
+    val ops = Seq[(String, () => DataFrame)](
+      "pageRank" -> (() => Graphs.pageRank(edges, nodes, 3)),
+      "triangleTriples" -> (() => Graphs.triangleTriples(pairs)),
+      "prefixSum" -> (() => Ids.prefixSum(vals, Seq(col("v")), "cum", Some("v"), Seq("g"))))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val local = ops.map { case (_, op) => rows(op()) }
+    // (name, rdd-* dirs written, same rows as with the switch off)
+    val seen = reliable { _ =>
+      ops.zip(local).map { case ((name, op), expected) =>
+        var got = Seq.empty[String]
+        val wrote = rddDirsLeftBy { got = rows(op()) }
+        (name, wrote, got == expected)
+      }
+    }
+    assert(seen.forall(_._2 >= 1), s"rdd-* dirs written: $seen")
+    assert(seen.forall(_._3), s"rows differ from the local path: $seen")
   }
 }
